@@ -68,100 +68,32 @@ object Bench {
     // predicate-aware persisted-index probe
     "m_media_neardup", "e_knn_ivfpq_filtered")
 
-  /** Multi-thread stream-copy probe: `threads` workers each copy a
-    * 64 MiB long array (well past any L3) `reps` times; the aggregate
-    * GB/s (read + write) is the host's effective memory bandwidth at the
-    * moment of the sample. Motivation (round-11 forensics): the roving
-    * host band showed up as a ~7% DIFFUSE inflation on bit-identical
-    * plans while the single-thread spin probe read clean — a shared-
-    * memory-bus effect a compute-bound probe cannot see. Sampled beside
-    * the spin samples, its spread makes that band attributable from the
-    * artifacts alone. */
-  private val bwThreads = 8
-  private val bwLongs = (64 << 20) / 8
-  // ADVICE r13: the probe buffers are allocated ONCE and reused across
-  // every sample (before/mid/after, plus ConcurrentBench's per-N pairs) —
-  // re-allocating 1 GiB of long arrays per sample was itself an OOM risk
-  // on smaller heaps and injected allocation+GC churn into the very
-  // gc_ms delta the bench uses for stall attribution
-  private lazy val bwPairs = {
-    val pairs = Array.fill(bwThreads)(
-      (new Array[Long](bwLongs), new Array[Long](bwLongs)))
-    pairs.foreach { case (s, d) => s(0) = 1L; d(0) = 1L; s(bwLongs - 1) = 1L }
-    pairs
-  }
-
-  /** Clean-host calibration constants for the normalization divisor —
-    * shared with [[Profile]] (and the streaming gate) so a single-query
-    * receipt normalizes exactly as the bench gate does. See the gate
-    * scaladoc below and BASELINE.md "Bench gate normalization". */
-  private[graft] val SpinRefMs = 100.0
-  private[graft] val BwRefGbps = 58.0
-
-  /** GC wall-time this JVM accumulated inside [[bwGbps]] calls — exposed
-    * so the bench can subtract the probe's own collection churn from the
-    * reported gc_ms delta (the probe must measure the host, not itself). */
-  private[graft] val bwProbeGcMs = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  private def allGcMs(): Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-  }
-
-  private[graft] def bwGbps(threads: Int = bwThreads): Double = {
-    val longs = bwLongs
-    val reps = 4
-    val gc0 = allGcMs()
-    val pairs = bwPairs.take(threads)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
-    val t0 = System.nanoTime()
-    try pairs.map { case (s, d) =>
-      pool.submit(new Runnable {
-        def run(): Unit = {
-          var r = 0
-          while (r < reps) { System.arraycopy(s, 0, d, 0, longs); r += 1 }
-        }
-      })
-    }.foreach(_.get())
-    finally pool.shutdown()
-    val sec = (System.nanoTime() - t0) / 1e9
-    bwProbeGcMs.addAndGet(math.max(0L, allGcMs() - gc0))
-    // bytes touched = copies * (read + write)
-    threads.toLong * reps * longs * 8L * 2L / sec / 1e9
-  }
-
+  /** Modes: no argument times the whole registry at `SPARK_GRAFT_SF_DIR`;
+    * `concurrent [mixed] [streams,...]` runs [[ConcurrentBench]];
+    * `profile <sfDir> <query> [passes=6]` runs [[profile]] (sfDir defaults
+    * to the registry run's). */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the host's full core count: an unset SPARK_GRAFT_CPUS
-    // must not quietly benchmark at local[4] on a 32-core box
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = Sessions.local(cpus.toInt, "graft-bench")
+    val mode = args.headOption.getOrElse("")
+    val profiled = if (mode == "profile") Some(knownQuery(args.lift(2)
+      .getOrElse("q_percentiles"))) else None
+    val spark = Sessions.local(Measure.cores(), "graft-bench")
     spark.sparkContext.setLogLevel("WARN")
-    if (args.headOption.contains("concurrent")) {
+    if (mode == "concurrent") {
       ConcurrentBench.run(spark, sfDir, args.drop(1)); return
     }
-    // Warm-up (untimed): scan every table once and run one higher-order-
-    // function-heavy query so codegen/JIT/interpreted-expression paths are
-    // compiled before timing starts — otherwise the alphabetically-first
-    // query absorbs ~4 s of one-time cost and round-over-round comparisons
-    // drift with query naming.
-    Tables.all.foreach { t =>
-      try Tables.t(spark, sfDir, t).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => }
+    if (profiled.isDefined) {
+      profile(spark, args.lift(1).getOrElse(sfDir), profiled.get,
+        args.lift(3).map(_.toInt).getOrElse(6)); return
     }
-    SparkEntry.queries.get("d_minhash_sig").foreach { fn =>
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => }
-    }
+    warmUp(spark, sfDir)
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
     // Option.empty = the pass threw; a crash must never report its (fast)
     // elapsed time as a steady-state min.
     def timeOnce(pass: Int, name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
       val t0 = System.nanoTime()
       val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+        try { Measure.noop(fn(spark, sfDir)); true }
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           false
@@ -172,39 +104,18 @@ object Bench {
     }
     // --- Host-noise forensics (round-7): the 2x host band has needed a
     // prose explanation every round; these probes let the driver separate
-    // host noise from plan regression mechanically.
-    // (a) GC wall time accumulated by this JVM over the timed section.
-    def gcMs(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-    }
-    // (b) Hypervisor steal from /proc/stat (ticks; field 8 after "cpu").
-    def stealTicks(): Option[(Long, Long)] =
-      scala.util.Try {
-        val toks = scala.io.Source.fromFile("/proc/stat").getLines()
-          .next().trim.split("\\s+").drop(1).map(_.toLong)
-        (toks(7), toks.sum)
-      }.toOption
-    // (c) Spin calibration: a fixed single-thread xorshift workload whose
-    // nominal time is constant — sampled before pass 1, between passes,
-    // and after the retakes, its spread IS the roving-stall band.
-    def spinMs(): Double = {
-      val t0 = System.nanoTime()
-      var x = 0x9e3779b97f4a7c15L; var i = 0
-      while (i < 50000000) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1 }
-      if (x == 42L) System.err.println("") // keep the loop live
-      (System.nanoTime() - t0) / 1e6
-    }
-    val gc0 = gcMs()
-    val bwGc0 = bwProbeGcMs.get()
-    val steal0 = stealTicks()
-    val spinSamples = scala.collection.mutable.ArrayBuffer(spinMs())
-    val bwSamples = scala.collection.mutable.ArrayBuffer(bwGbps())
+    // host noise from plan regression mechanically: GC wall time over the
+    // timed section, hypervisor steal, and the spin + bandwidth samples
+    // taken before pass 1, between passes, and after the retakes.
+    val gc = Measure.gcWindow()
+    val steal0 = Measure.stealTicks()
+    val spinSamples = scala.collection.mutable.ArrayBuffer.empty[Double]
+    val bwSamples = scala.collection.mutable.ArrayBuffer.empty[Double]
+    def sample(): Unit = { spinSamples += Measure.spinMs(); bwSamples += Measure.bwGbps() }
+    sample()
 
     val pass1 = ordered.map { case (name, fn) => name -> timeOnce(1, name, fn) }.toMap
-    spinSamples += spinMs()
-    bwSamples += bwGbps()
+    sample()
     // Adaptive third pass: when the two timings DISAGREE past 1.4x the
     // measurement is stall-contaminated (the roving multi-second host
     // stalls hit one pass, not the query), and when both exceed 1 s the
@@ -239,8 +150,7 @@ object Bench {
       }
       name -> min
     }
-    spinSamples += spinMs()
-    bwSamples += bwGbps()
+    sample()
     // --- Band-escape retakes (round-19): the roving host band is
     // TEMPORAL — the round-19 gated sample caught it mid-run with its
     // own probe (bw samples 45.2 / 12.2 / 50.6 vs the 58 floor) while
@@ -256,18 +166,10 @@ object Bench {
     // real gate. A genuine plan regression is immune by construction
     // (no retake makes a real 2x faster); only a band trip clears.
     // Worst ratios retake first; the cap bounds a fully-banded run.
-    def medianOf(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-    }
     val sfNameEarly = new java.io.File(sfDir).getName
     val bandRetaken: Map[String, Double] =
       BenchGate.load().filter(_.sf == sfNameEarly).map { r =>
-        val prelimHost =
-          ((spinSamples.min / SpinRefMs).max(1.0).min(3.0) *
-            (BwRefGbps / medianOf(bwSamples.toSeq)).max(1.0).min(2.0))
-            .max(1.0).min(3.0)
+        val prelimHost = Measure.hostRatio(spinSamples.toSeq, bwSamples.toSeq).value
         val prelimNorm = results.collect {
           case (k, Some(v)) => k -> v / prelimHost }.toMap
         BenchGate.trips(r.norms, prelimNorm).sortBy(-_.ratio).take(24)
@@ -276,7 +178,7 @@ object Bench {
               .flatMap(fn => timeOnce(4, t.query, fn).map(t.query -> _))
           }.toMap
       }.getOrElse(Map.empty)
-    if (bandRetaken.nonEmpty) { spinSamples += spinMs(); bwSamples += bwGbps() }
+    if (bandRetaken.nonEmpty) sample()
     val finalResults: Seq[(String, Option[Double])] = results.map {
       case (k, v) => k -> ((v, bandRetaken.get(k)) match {
         case (Some(a), Some(b)) => Some(math.min(a, b))
@@ -285,14 +187,12 @@ object Bench {
     }
     // the probe's own collection churn must not masquerade as workload
     // GC in the stall-attribution delta (ADVICE r13) — report it apart
-    val probeGc = bwProbeGcMs.get() - bwGc0
-    val gcDelta = math.max(0L, gcMs() - gc0 - probeGc)
+    val probeGc = gc.probeMs
+    val gcDelta = gc.workloadMs
     val stealPct: Option[Double] = for {
-      (s0, t0) <- steal0; (s1, t1) <- stealTicks() if t1 > t0
+      (s0, t0) <- steal0; (s1, t1) <- Measure.stealTicks() if t1 > t0
     } yield 100.0 * (s1 - s0) / (t1 - t0)
-    // Locale.ROOT: the f-interpolator uses the JVM default locale, and a
-    // comma-decimal locale would emit unparseable JSON numbers.
-    def num(d: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, d)
+    def num(d: Double): String = Measure.num(d)
     def fmt(v: Option[Double]): String = v.map(num).getOrElse("null")
     val detail = finalResults.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
@@ -320,36 +220,18 @@ object Bench {
     // bandwidth probe"). When the dip exceeds 15% below that floor while
     // spin stays flat, consumers should read diffuse per-query inflation
     // as host band, not plan regression — mechanically, not via prose.
-    val bandSuspected = spinSamples.min / SpinRefMs <= 1.15 &&
-      bwSamples.min < 0.85 * BwRefGbps
+    val bandSuspected = spinSamples.min / Measure.SpinRefMs <= 1.15 &&
+      bwSamples.min < 0.85 * Measure.BwRefGbps
     val probe =
-      s"""{"gc_ms":$gcDelta,"probe_gc_ms":$probeGc,"steal_pct":${stealPct.map(num).getOrElse("null")},"spin_ms":[${spinSamples.map(num).mkString(",")}],"bw_gbps":[${bwSamples.map(num).mkString(",")}],"bw_ref_gbps":$BwRefGbps,"band_suspected":$bandSuspected}"""
+      s"""{"gc_ms":$gcDelta,"probe_gc_ms":$probeGc,"steal_pct":${stealPct.map(num).getOrElse("null")},"spin_ms":[${spinSamples.map(num).mkString(",")}],"bw_gbps":[${bwSamples.map(num).mkString(",")}],"bw_ref_gbps":${Measure.BwRefGbps},"band_suspected":$bandSuspected}"""
     // --- Normalized gate (round-8, bandwidth term round-14): the raw
     // s/query gate drifts with the host, so the verdict is computed
-    // against a host-normalized value.
-    // SPIN_REF_MS is the calibrated clean-host nominal of the fixed spin
-    // workload above (this hardware family: ~100 ms; see BASELINE.md
-    // "Bench gate normalization"). spin_ratio = min(spin samples) /
-    // SPIN_REF_MS — min, because per-sample stall contamination only
-    // inflates; a min above 1 means the host is SUSTAINED-slower than the
-    // calibration host, which legitimately scales every measured time.
-    // bw_ratio (round 14): the round-13 driver run graded weak purely on
-    // a bandwidth band its own probe flagged (bw 30.9-49.4 vs the 58
-    // calibration floor) while spin_ratio (1.106) captured almost none of
-    // it — a compute-bound probe cannot see a shared-bus effect. So the
-    // bandwidth term the probe already measures is folded into the
-    // divisor exactly as spin was in round 8:
-    //   bw_ratio = clamp(BW_REF_GBPS / median(bw samples), 1, 2)
-    // MEDIAN, not min: stall contamination DEFLATES a bandwidth sample
-    // (the copy threads get starved), so the min would overstate the
-    // band; the median of the 3 samples (before / mid / after) is the
-    // sustained bus state. Capped at 2 — deeper dips than the worst band
-    // ever observed (0.53x) should stay visible, not be excused.
-    // host_ratio = clamp(spin_ratio * bw_ratio, 1, 3): the two terms
-    // measure disjoint effects by construction (the band fingerprint IS
-    // bw-dip-with-flat-spin), but the combined divisor keeps the
-    // original 3x ceiling so a doubly-degraded host can't excuse an
-    // arbitrarily slow run. The 0.55 plan budget is unchanged.
+    // against a host-normalized value (Measure.hostRatio has the
+    // divisor's terms and clamps). bw_ratio was added in round 14 after
+    // the round-13 driver run graded weak purely on a bandwidth band its
+    // own probe flagged (bw 30.9-49.4 vs the 58 calibration floor) while
+    // spin_ratio (1.106) captured almost none of it. The 0.55 plan budget
+    // is unchanged.
     // Maintenance lane (round 14): q_layout_lifecycle deliberately
     // performs ~20 real parquet WRITES (z-order -> append -> compact ->
     // recluster, each with an atomic swap) — it is the maintenance-path
@@ -364,16 +246,8 @@ object Bench {
     val maintN = finalResults.count(r => maintenanceLane(r._1))
     val computeN = finalResults.size - maintN
     val rawSpq = if (computeN > 0) (total - maintSec) / computeN else 0.0
-    val spinRatio = (spinSamples.min / SpinRefMs).max(1.0).min(3.0)
-    val bwSorted = bwSamples.sorted
-    // true median for either parity (ADVICE r14: the upper-middle element
-    // alone silently biases toward the lower-bandwidth sample whenever an
-    // even number of bw samples is ever collected)
-    val bwMedian =
-      if (bwSorted.size % 2 == 1) bwSorted(bwSorted.size / 2)
-      else (bwSorted(bwSorted.size / 2 - 1) + bwSorted(bwSorted.size / 2)) / 2.0
-    val bwRatio = (BwRefGbps / bwMedian).max(1.0).min(2.0)
-    val hostRatio = (spinRatio * bwRatio).max(1.0).min(3.0)
+    val Measure.HostRatio(spinRatio, bwMedian, bwRatio, hostRatio) =
+      Measure.hostRatio(spinSamples.toSeq, bwSamples.toSeq)
     val normSpq = rawSpq / hostRatio
     // --- Per-query regression gate (round-17): the VERDICT is now "no
     // query exceeds 2x its own committed host-normalized reference"
@@ -438,7 +312,7 @@ object Bench {
         s"${normByQ.size} measured into ${base.size} existing entries)")
     }
     val gate =
-      s"""{"raw_spq":${num(rawSpq)},"spin_ratio":${num(spinRatio)},"bw_ratio":${num(bwRatio)},"bw_median_gbps":${num(bwMedian)},"bw_ref_gbps":$BwRefGbps,"host_ratio":${num(hostRatio)},"norm_spq":${num(normSpq)},"norm_spq_same_subset":${fmt(normSpqSame)},"ledger_spq_same_subset":${fmt(ledgerSpqSame)},"diffuse_ratio":${fmt(diffuseRatio)},"same_subset_n":${sameSubset.size},"threshold":$GateSpq,"fleet_verdict":"$fleetVerdict","gate_kind":"$gateKind","ref_n":$refN,"unref_n":$unrefN,"regressions_n":${regs.size},"regressions":${BenchGate.regsJson(regs)},"suspects_n":${gateRes.suspects.size},"suspects":${BenchGate.regsJson(gateRes.suspects, 5)},"verdict":"$verdict","compute_n":$computeN,"maint_n":$maintN,"maint_sec":${num(maintSec)},"maint_lane":[${maintenanceLane.map("\"" + _ + "\"").mkString(",")}]}"""
+      s"""{"raw_spq":${num(rawSpq)},"spin_ratio":${num(spinRatio)},"bw_ratio":${num(bwRatio)},"bw_median_gbps":${num(bwMedian)},"bw_ref_gbps":${Measure.BwRefGbps},"host_ratio":${num(hostRatio)},"norm_spq":${num(normSpq)},"norm_spq_same_subset":${fmt(normSpqSame)},"ledger_spq_same_subset":${fmt(ledgerSpqSame)},"diffuse_ratio":${fmt(diffuseRatio)},"same_subset_n":${sameSubset.size},"threshold":$GateSpq,"fleet_verdict":"$fleetVerdict","gate_kind":"$gateKind","ref_n":$refN,"unref_n":$unrefN,"regressions_n":${regs.size},"regressions":${BenchGate.regsJson(regs)},"suspects_n":${gateRes.suspects.size},"suspects":${BenchGate.regsJson(gateRes.suspects, 5)},"verdict":"$verdict","compute_n":$computeN,"maint_n":$maintN,"maint_sec":${num(maintSec)},"maint_lane":[${maintenanceLane.map("\"" + _ + "\"").mkString(",")}]}"""
     val line =
       s"""{"metric":"total","value":${num(total)},"unit":"sec","n_queries":${finalResults.size},"failed":$failed,"passes":$passes,"retakes":$retakes,"host_probe":$probe,"gate":$gate,"queries":$head,"sf":"$sfDir"}"""
     // Full map for forensics/BASELINE.md (stderr + file — NOT stdout, where
@@ -466,6 +340,59 @@ object Bench {
     // [success] trailer.
     spark.sparkContext.setLogLevel("ERROR")
     println(line)
+    spark.stop()
+  }
+
+  /** Untimed warm-up: scan every table once and run one higher-order-
+    * function-heavy query so codegen/JIT/interpreted-expression paths are
+    * compiled before timing starts — otherwise the alphabetically-first
+    * query absorbs ~4 s of one-time cost and round-over-round comparisons
+    * drift with query naming. */
+  private def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    Measure.warmUp(spark, sfDir, "bench")
+    SparkEntry.queries.get("d_minhash_sig").foreach { fn =>
+      try Measure.noop(fn(spark, sfDir))
+      catch { case _: Throwable => }
+    }
+  }
+
+  /** Fails up front with the closest registered names — a bare
+    * NoSuchElementException from the registry lookup is the wrong failure
+    * mode for a forensics tool whose whole job is attribution. */
+  private def knownQuery(name: String): String = {
+    require(SparkEntry.queries.contains(name),
+      s"Bench profile: unknown query '$name'. Closest registered: " +
+        SparkEntry.queries.keys.toSeq.sorted
+          .sortBy(k => -k.zip(name).count { case (a, b) => a == b })
+          .take(5).mkString(", "))
+    name
+  }
+
+  /** Single-query timing forensics (`runMain graft.Bench profile <sfDir>
+    * <query> [passes=6]`): run ONE registered query N times back-to-back
+    * in one JVM and print every pass beside a spin sample, so a bench
+    * swing can be attributed (wide pass spread + spin spread = host band;
+    * uniformly slower passes + flat spin = plan or data change) without
+    * re-running the whole registry. The receipt carries the bandwidth
+    * samples and the same host_ratio the per-query gate divides by, so
+    * its `norm_min` is directly comparable to a bench_ref.json entry. */
+  private def profile(spark: SparkSession, sfDir: String, name: String,
+      passes: Int): Unit = {
+    warmUp(spark, sfDir)
+    spark.sparkContext.setLogLevel("ERROR")
+    val fn = SparkEntry.queries(name)
+    val spins = scala.collection.mutable.ArrayBuffer.empty[Double]
+    val bws = scala.collection.mutable.ArrayBuffer(Measure.bwGbps())
+    val times = (1 to passes).map { i =>
+      val s0 = Measure.spinMs(); spins += s0
+      val dt = Measure.seconds(Measure.noop(fn(spark, sfDir)))
+      println(f"[profile] $name%-24s pass$i%-2d $dt%7.3f s   spin $s0%6.1f ms")
+      dt
+    }
+    bws += Measure.bwGbps()
+    val host = Measure.hostRatio(spins.toSeq, bws.toSeq).value
+    def n(d: Double) = Measure.num(d)
+    println(s"""{"query":"$name","sf":"$sfDir","passes":[${times.map(n).mkString(",")}],"min":${n(times.min)},"max":${n(times.max)},"bw_gbps":[${bws.map(n).mkString(",")}],"host_ratio":${n(host)},"norm_min":${n(times.min / host)}}""")
     spark.stop()
   }
 }

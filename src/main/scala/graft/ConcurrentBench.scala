@@ -18,8 +18,9 @@ import org.apache.spark.sql.SparkSession
   * and `throughput_x` = (N × sum-of-solo) / wall — the speedup over
   * running the same N×20 queries serially (1.0 = concurrency bought
   * nothing; N = perfect overlap, impossible once a single query already
-  * saturates the cores). The host probes from the solo bench (GC delta,
-  * multi-thread memory bandwidth) are sampled around every N-run, so a
+  * saturates the cores). The host probes from the solo bench (GC delta
+  * net of the bandwidth probe's own collections, multi-thread memory
+  * bandwidth) are sampled around every N-run, so a
   * throughput collapse is attributable: flat bw + rising GC = heap
   * contention; collapsing bw = the memory bus, not the scheduler.
   *
@@ -53,32 +54,20 @@ object ConcurrentBench {
     "d_minhash_lsh_pairs", "d_curate_corpus", "e_knn_brute",
     "t_tfidf", "x8_cep_skip_past")
 
-  private def num(d: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, d)
-
-  private def gcMs(): Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-  }
+  private def num(d: Double): String = Measure.num(d)
 
   private def mkExec(spark: SparkSession, sfDir: String)(name: String): Unit =
-    SparkEntry.queries(name)(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
+    Measure.noop(SparkEntry.queries(name)(spark, sfDir))
 
   /** Untimed warm-up (scans + one full subset pass) and the min-of-2
     * solo baseline — shared by both modes so `throughput_x` is
     * comparable across them. */
   private def warmAndSolo(spark: SparkSession, sfDir: String): Seq[(String, Double)] = {
     val exec = mkExec(spark, sfDir) _
-    Tables.all.foreach { t =>
-      try Tables.t(spark, sfDir, t).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => }
-    }
+    Measure.warmUp(spark, sfDir, "conc")
     subset.foreach(exec)
     val solo = subset.map { name =>
-      name -> (1 to 2).map { _ =>
-        val t0 = System.nanoTime(); exec(name); (System.nanoTime() - t0) / 1e9
-      }.min
+      name -> (1 to 2).map(_ => Measure.seconds(exec(name))).min
     }
     solo.foreach { case (n, s) => System.err.println(f"[conc] solo $n%-24s $s%7.3f s") }
     solo
@@ -92,11 +81,9 @@ object ConcurrentBench {
     val streamSecs =
       try (0 until n).map { i =>
         pool.submit(new java.util.concurrent.Callable[Double] {
-          def call(): Double = {
-            val s0 = System.nanoTime()
+          def call(): Double = Measure.seconds {
             val off = i * subset.size / math.max(1, n)
             (subset.drop(off) ++ subset.take(off)).foreach(exec)
-            (System.nanoTime() - s0) / 1e9
           }
         })
       }.map(_.get())
@@ -112,11 +99,11 @@ object ConcurrentBench {
     val soloSum = solo.map(_._2).sum
 
     val runs = streams.map { n =>
-      val gc0 = gcMs()
-      val bw0 = Bench.bwGbps()
+      val gc = Measure.gcWindow()
+      val bw0 = Measure.bwGbps()
       val (wall, streamSecs) = nStreams(spark, sfDir, n)
-      val bw1 = Bench.bwGbps()
-      val gcDelta = gcMs() - gc0
+      val bw1 = Measure.bwGbps()
+      val gcDelta = gc.workloadMs
       val qps = n * subset.size / wall
       val tput = n * soloSum / wall
       System.err.println(f"[conc] n=$n%-2d wall $wall%7.2f s  ${qps}%5.2f q/s  " +
@@ -155,10 +142,10 @@ object ConcurrentBench {
     }
   }
 
-  private def median(xs: Seq[Long]): Long =
-    if (xs.isEmpty) -1L else xs.sorted.apply(xs.size / 2)
-  private def p95(xs: Seq[Long]): Long =
-    if (xs.isEmpty) -1L else xs.sorted.apply(math.min(xs.size - 1, (xs.size * 95) / 100))
+  /** Nearest-rank percentile of the batch latencies (ms); -1 when the
+    * window caught no batch. */
+  private def pct(xs: Seq[Long], p: Int): Long =
+    if (xs.isEmpty) -1L else xs.sorted.apply(math.min(xs.size - 1, xs.size * p / 100))
 
   private def runMixed(spark: SparkSession, sfDir: String, args: Array[String]): Unit = {
     import org.apache.hadoop.fs.Path
@@ -201,25 +188,25 @@ object ConcurrentBench {
     val soloTo = System.currentTimeMillis()
     soloQ.stop()
     val soloWin = collector.window(soloFrom, soloTo)
-    val soloMed = median(soloWin.map(_._1))
+    val soloMed = pct(soloWin.map(_._1), 50)
     System.err.println(s"[conc-mixed] ingest solo: ${soloWin.size} batches, " +
-      s"median ${soloMed}ms, p95 ${p95(soloWin.map(_._1))}ms")
+      s"median ${soloMed}ms, p95 ${pct(soloWin.map(_._1), 95)}ms")
 
     val runs = streams.map { n =>
       val q = startIngest(s"n$n")
       Thread.sleep(5000L)
-      val gc0 = gcMs()
-      val bw0 = Bench.bwGbps()
+      val gc = Measure.gcWindow()
+      val bw0 = Measure.bwGbps()
       val from = System.currentTimeMillis()
       val (wall, streamSecs) = nStreams(spark, sfDir, n)
       val to = System.currentTimeMillis()
-      val bw1 = Bench.bwGbps()
-      val gcDelta = gcMs() - gc0
+      val bw1 = Measure.bwGbps()
+      val gcDelta = gc.workloadMs
       Thread.sleep(1500L) // let the last in-flight micro-batch report
       q.stop()
       val win = collector.window(from, to)
-      val med = median(win.map(_._1))
-      val p95v = p95(win.map(_._1))
+      val med = pct(win.map(_._1), 50)
+      val p95v = pct(win.map(_._1), 95)
       val rowsDone = win.map(_._2).sum
       val achieved = if (wall > 0) rowsDone / wall else 0.0
       val qps = n * subset.size / wall
@@ -236,7 +223,7 @@ object ConcurrentBench {
     spark.streams.removeListener(collector)
     println(s"""{"metric":"concurrent_mixed","sf":"$sfDir","subset_n":${subset.size},""" +
       s""""solo_sum":${num(soloSum)},"rate_rows_per_sec":$ratePerSec,"trigger_ms":$triggerMs,""" +
-      s""""ingest_solo_ms_median":$soloMed,"ingest_solo_ms_p95":${p95(soloWin.map(_._1))},""" +
+      s""""ingest_solo_ms_median":$soloMed,"ingest_solo_ms_p95":${pct(soloWin.map(_._1), 95)},""" +
       s""""runs":[${runs.mkString(",")}]}""")
     spark.stop()
   }

@@ -23,9 +23,7 @@ import graft.operators.IvfPqIndex
 object PruneReceipt {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = Sessions.local(cpus.toInt, "graft-prune-receipt")
+    val spark = Sessions.local(Measure.cores(), "graft-prune-receipt")
     spark.sparkContext.setLogLevel("WARN")
     spark.conf.set("spark.sql.execution.rangeExchange.sampleSizePerPartition", "5000")
     import spark.implicits._

@@ -157,9 +157,7 @@ object RecallSweep {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = Sessions.local(cpus.toInt, "graft-recall-sweep")
+    val spark = Sessions.local(Measure.cores(), "graft-recall-sweep")
     spark.sparkContext.setLogLevel("WARN")
 
     // fresh temp dir per run (ADVICE r14: a fixed /tmp path let two
@@ -180,8 +178,7 @@ object RecallSweep {
       .createTempDirectory("graft_recall_multispan").toString
     writeMultiSpanningFixture(spark, multiSpanDir)
 
-    def num(d: Double): String =
-      "%.4f".formatLocal(java.util.Locale.ROOT, d)
+    def num(d: Double): String = Measure.num(d, 4)
 
     val fixtures = Seq("isotropic" -> sfDir, "clustered" -> clusteredDir,
       "misaligned" -> misalignedDir, "anisotropic" -> anisotropicDir,

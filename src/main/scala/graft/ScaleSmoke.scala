@@ -170,18 +170,15 @@ object ScaleSmoke {
 
   /** Two timed passes (cold scan + warm plan), min — the same protocol
     * as the saltab A/B. */
-  private def timeAb(tag: String, label: String)(mk: => DataFrame): Double = {
-    val ts = (1 to 2).map { _ =>
-      val t0 = System.nanoTime()
-      mk.write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val m = ts.min
-    println("[%s] %-28s %8s s  (passes: %s)".format(tag, label,
-      "%.2f".formatLocal(java.util.Locale.ROOT, m),
-      ts.map(d => "%.2f".formatLocal(java.util.Locale.ROOT, d)).mkString("/")))
-    m
-  }
+  private def timeAb(tag: String, label: String)(mk: => DataFrame): Double =
+    Measure.minOfPasses(tag, label, 2)(Measure.noop(mk))
+
+  private def n(d: Double): String = Measure.num(d, 2)
+
+  /** Drops the OS page cache before a cold pass; throws where the
+    * process may not write it. */
+  private def dropPageCache(): Unit = java.nio.file.Files.writeString(
+    java.nio.file.Paths.get("/proc/sys/vm/drop_caches"), "3")
 
   /** Standing scale gate (`runMain graft.ScaleSmoke gate r10`): builds
     * the x4 and x100 ORGANIC fixtures, times the pinned
@@ -220,7 +217,6 @@ object ScaleSmoke {
     }
     val lo = timings(multLo)
     val hi = timings(multHi)
-    def n(d: Double) = "%.2f".formatLocal(java.util.Locale.ROOT, d)
     val rows = organicSubset.map { name =>
       (lo(name), hi(name)) match {
         case (Some(tl), Some(th)) =>
@@ -447,7 +443,7 @@ object ScaleSmoke {
     // join build sides all scale WITH the data, the way a real corpus
     // grows.
     val organic = args.contains("organic")
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-scale-smoke")
+    val spark = Sessions.local(Measure.cores(), "graft-scale-smoke")
     spark.sparkContext.setLogLevel("WARN")
     if (args.contains("gate")) { runGate(spark, args); return }
 
@@ -495,7 +491,6 @@ object ScaleSmoke {
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(root, "_SEEDED_v1"), "ok")
       }
-      def nmb(d: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, d)
       val cells = Ks.map { k =>
         val dir = s"$root/files_$k"
         // synthetic manifest: file i owns box [100i, 100i+99] on both keys
@@ -547,11 +542,11 @@ object ScaleSmoke {
         val (tcAll, txAll, keptAll) = measure(allBounds, doCount = true,
           k * 100L)
         require(keptAll == k)
-        println(f"[manifest50k] k=$k%6d selective: construct ${nmb(tcSel)}s " +
-          f"count ${nmb(txSel)}s kept=$keptSel; all: construct ${nmb(tcAll)}s " +
-          f"count ${nmb(txAll)}s")
-        s"""{"files":$k,"t_construct_sel":${nmb(tcSel)},"t_count_sel":${nmb(txSel)},""" +
-          s""""kept_sel":$keptSel,"t_construct_all":${nmb(tcAll)},"t_count_all":${nmb(txAll)}}"""
+        println(f"[manifest50k] k=$k%6d selective: construct ${Measure.num(tcSel)}s " +
+          f"count ${Measure.num(txSel)}s kept=$keptSel; all: construct ${Measure.num(tcAll)}s " +
+          f"count ${Measure.num(txAll)}s")
+        s"""{"files":$k,"t_construct_sel":${Measure.num(tcSel)},"t_count_sel":${Measure.num(txSel)},""" +
+          s""""kept_sel":$keptSel,"t_construct_all":${Measure.num(tcAll)},"t_count_all":${Measure.num(txAll)}}"""
       }
       println(s"""{"mode":"manifest50k","cells":[${cells.mkString(",")}]}""")
       spark.stop()
@@ -600,23 +595,10 @@ object ScaleSmoke {
       // numbers, and the flag in the JSON says which you got). The
       // equality check runs AFTER timing — an earlier revision checked
       // first and silently re-warmed everything it was about to time.
-      val cold = scala.util.Try {
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get("/proc/sys/vm/drop_caches"), "3")
-      }.isSuccess
-      def timeCold(label: String)(mk: => DataFrame): Double = {
-        val ts = (1 to 2).map { _ =>
-          if (cold) java.nio.file.Files.writeString(
-            java.nio.file.Paths.get("/proc/sys/vm/drop_caches"), "3")
-          val t0 = System.nanoTime()
-          mk.write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println("[%s] %-28s %8s s  (passes: %s)".format("layoutab", label,
-          "%.2f".formatLocal(java.util.Locale.ROOT, ts.min),
-          ts.map(d => "%.2f".formatLocal(java.util.Locale.ROOT, d)).mkString("/")))
-        ts.min
-      }
+      val cold = scala.util.Try(dropPageCache()).isSuccess
+      def timeCold(label: String)(mk: => DataFrame): Double =
+        Measure.minOfPasses("layoutab", label, 2,
+          before = () => if (cold) dropPageCache())(Measure.noop(mk))
       val tPlain = timeCold("plain_scan")(agg(Tables.t(spark, dst, "lineitem")))
       val tZ = timeCold("zorder_scan")(agg(spark.read.parquet(zDir)))
       val tPruned = timeCold("manifest_pruned")(
@@ -640,7 +622,6 @@ object ScaleSmoke {
         "layouts disagree — receipt would be meaningless")
       val keptFiles = operators.Layout.scanPruned(spark, zDir, manifest,
         Seq(("l_partkey", lo, hi))).inputFiles.length
-      def n(d: Double) = "%.2f".formatLocal(java.util.Locale.ROOT, d)
       println(s"""{"plain_scan":${n(tPlain)},"zorder_scan":${n(tZ)},"manifest_pruned":${n(tPruned)},"files_kept":$keptFiles,"files_total":$nFiles,"cold":$cold,"mult":$mult,"mode":"layoutab"}""")
       spark.stop()
       return
@@ -681,26 +662,14 @@ object ScaleSmoke {
       def full() = scanFull().agg(sum(col("l_quantity").cast("double")).as("q"))
       def prunedDf() = operators.Layout.scanPruned(spark, mDir, manifest,
         Seq(("l_partkey", lo, hi)))
-      val cold = scala.util.Try {
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get("/proc/sys/vm/drop_caches"), "3")
-      }.isSuccess
-      def timeCold(label: String)(mk: => DataFrame): Double = {
-        val ts = (1 to 2).map { _ =>
-          if (cold) java.nio.file.Files.writeString(
-            java.nio.file.Paths.get("/proc/sys/vm/drop_caches"), "3")
+      val cold = scala.util.Try(dropPageCache()).isSuccess
+      def timeCold(label: String)(mk: => DataFrame): Double =
+        Measure.minOfPasses("manifestmany", label, 2, labelWidth = 18, before = { () =>
+          if (cold) dropPageCache()
           // drop Spark's listing/footer caches too — a warm
           // InMemoryFileIndex would hide exactly the cost being measured
           spark.catalog.refreshByPath(mDir)
-          val t0 = System.nanoTime()
-          mk.write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println("[%s] %-18s %8s s  (passes: %s)".format("manifestmany", label,
-          "%.2f".formatLocal(java.util.Locale.ROOT, ts.min),
-          ts.map(d => "%.2f".formatLocal(java.util.Locale.ROOT, d)).mkString("/")))
-        ts.min
-      }
+        })(Measure.noop(mk))
       val tFull = timeCold("full_scan")(full())
       val tPruned = timeCold("manifest_pruned")(
         prunedDf().agg(sum(col("l_quantity").cast("double")).as("q")))
@@ -717,7 +686,6 @@ object ScaleSmoke {
       // file table multiplies
       val tasksFull = scanFull().rdd.getNumPartitions
       val tasksPruned = prunedDf().rdd.getNumPartitions
-      def n(d: Double) = "%.2f".formatLocal(java.util.Locale.ROOT, d)
       println(s"""{"full_scan":${n(tFull)},"manifest_pruned":${n(tPruned)},""" +
         s""""files_kept":$filesKept,"files_total":$nFiles,""" +
         s""""tasks_full":$tasksFull,"tasks_pruned":$tasksPruned,""" +
@@ -748,24 +716,13 @@ object ScaleSmoke {
       updFiles().foreach(s => fsm.delete(s.getPath, false))
       def freeze(df: DataFrame): DataFrame = spark.createDataFrame(
         new java.util.ArrayList(java.util.Arrays.asList(df.collect(): _*)), df.schema)
-      val cold = scala.util.Try {
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get("/proc/sys/vm/drop_caches"), "3")
-      }.isSuccess
+      val cold = scala.util.Try(dropPageCache()).isSuccess
       def timed(label: String)(mk: => DataFrame): (DataFrame, Double) = {
         var out: DataFrame = null
-        val ts = (1 to 2).map { _ =>
-          if (cold) java.nio.file.Files.writeString(
-            java.nio.file.Paths.get("/proc/sys/vm/drop_caches"), "3")
-          spark.catalog.refreshByPath(mDir)
-          val t0 = System.nanoTime()
-          out = mk
-          (System.nanoTime() - t0) / 1e9
-        }
-        println("[%s] %-14s %8s s  (passes: %s)".format("manifestupd", label,
-          "%.2f".formatLocal(java.util.Locale.ROOT, ts.min),
-          ts.map(d => "%.2f".formatLocal(java.util.Locale.ROOT, d)).mkString("/")))
-        (out, ts.min)
+        val min = Measure.minOfPasses("manifestupd", label, 2, labelWidth = 14,
+          before = { () => if (cold) dropPageCache(); spark.catalog.refreshByPath(mDir) }
+        ) { out = mk }
+        (out, min)
       }
       // the manifest the table "shipped with" (also prices full_build)
       val (m0, tFullBuild) = timed("full_build")(
@@ -799,7 +756,6 @@ object ScaleSmoke {
       val total = m2.count()
       // leave the shared fixture as manifestmany expects it
       updFiles().foreach(s => fsm.delete(s.getPath, false))
-      def n(d: Double) = "%.2f".formatLocal(java.util.Locale.ROOT, d)
       println(s"""{"full_build":${n(tFullBuild)},"incr_update":${n(tIncr)},""" +
         s""""full_rebuild":${n(tRebuild)},"speedup":${n(tRebuild / tIncr)},""" +
         s""""files_total":$total,"files_new":${appended.length},""" +
@@ -838,7 +794,6 @@ object ScaleSmoke {
       val (t8, r8) = timeCompact(d8, 8)
       require(spark.read.parquet(d1).count() == n1 &&
         spark.read.parquet(d8).count() == n1, "compaction changed row counts")
-      def n(d: Double) = "%.2f".formatLocal(java.util.Locale.ROOT, d)
       println(s"[compactab] pool=1 ${n(t1)} s $r1")
       println(s"[compactab] pool=8 ${n(t8)} s $r8")
       println(s"""{"pool1_sec":${n(t1)},"pool8_sec":${n(t8)},"speedup":${n(t1 / t8)},""" +
@@ -901,17 +856,8 @@ object ScaleSmoke {
           case sc: org.apache.spark.sql.execution.FileSourceScanExec => sc
         }.map(_.metrics("numOutputRows").value).sum
       }
-      def timeWarm(label: String)(d: String): Double = {
-        val ts = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          agg(d).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println("[%s] %-18s %8s s  (passes: %s)".format("zdepthab", label,
-          "%.2f".formatLocal(java.util.Locale.ROOT, ts.min),
-          ts.map(x => "%.2f".formatLocal(java.util.Locale.ROOT, x)).mkString("/")))
-        ts.min
-      }
+      def timeWarm(label: String)(d: String): Double =
+        Measure.minOfPasses("zdepthab", label, 3, labelWidth = 18)(Measure.noop(agg(d)))
       // the composed stack: equi-depth buys ADDRESSABILITY (9x fewer
       // rows per probe), the manifest converts it into wall time by
       // not opening the 1000+ non-intersecting footers — time the
@@ -928,17 +874,9 @@ object ScaleSmoke {
       def pruned(d: String, man: DataFrame) = operators.Layout
         .scanPruned(spark, d, man, bounds)
         .agg(sum(col("l_quantity").cast("double")).as("q"))
-      def timePruned(label: String)(d: String, man: DataFrame): Double = {
-        val ts = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          pruned(d, man).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println("[%s] %-18s %8s s  (passes: %s)".format("zdepthab", label,
-          "%.2f".formatLocal(java.util.Locale.ROOT, ts.min),
-          ts.map(x => "%.2f".formatLocal(java.util.Locale.ROOT, x)).mkString("/")))
-        ts.min
-      }
+      def timePruned(label: String)(d: String, man: DataFrame): Double =
+        Measure.minOfPasses("zdepthab", label, 3, labelWidth = 18)(
+          Measure.noop(pruned(d, man)))
       try {
         val (rEw, rEd) = (rowsScanned(ewDir), rowsScanned(edDir))
         val (tEw, tEd) = (timeWarm("equal_width")(ewDir), timeWarm("equi_depth")(edDir))
@@ -956,7 +894,6 @@ object ScaleSmoke {
         require(close(sumOf(agg(edDir))) && close(sumOf(pruned(ewDir, manEw))) &&
           close(sumOf(pruned(edDir, manEd))),
           "layouts disagree — receipt would be meaningless")
-        def n(d: Double) = "%.2f".formatLocal(java.util.Locale.ROOT, d)
         println(s"""{"files_ew":${nFiles(ewDir)},"files_ed":${nFiles(edDir)},""" +
           s""""rows_scanned_ew":$rEw,"rows_scanned_ed":$rEd,""" +
           s""""sec_ew":${n(tEw)},"sec_ed":${n(tEd)},""" +
@@ -995,7 +932,6 @@ object ScaleSmoke {
         operators.PaneOps.slidingDdQuantilesNaive(ev, p24))
       val ddPane24 = timeAb("paneab", "dd_pane_k24")(
         operators.PaneOps.slidingDdQuantilesPane(ev, p24))
-      def n(d: Double) = "%.2f".formatLocal(java.util.Locale.ROOT, d)
       println(s"""{"dd_naive":${n(ddNaive)},"dd_pane":${n(ddPane)},"hll_naive":${n(hllNaive)},"hll_pane":${n(hllPane)},"dd_naive_k12":${n(ddNaive12)},"dd_pane_k12":${n(ddPane12)},"dd_naive_k24":${n(ddNaive24)},"dd_pane_k24":${n(ddPane24)},"mult":$mult,"mode":"paneab"}""")
       spark.stop()
       return
@@ -1096,7 +1032,6 @@ object ScaleSmoke {
       require(a == b && a.nonEmpty, s"shapes disagree: only-window=${(a -- b).take(3)} only-heap=${(b -- a).take(3)}")
       val tw = timeAb("topkab", "rank_window")(viaWindow)
       val th = timeAb("topkab", "graft_topk_heap")(viaHeap)
-      def n(d: Double) = "%.2f".formatLocal(java.util.Locale.ROOT, d)
       println(s"""{"rank_window":${n(tw)},"graft_topk_heap":${n(th)},"mult":$mult,"mode":"topkab"}""")
       spark.stop()
       return
@@ -1118,24 +1053,13 @@ object ScaleSmoke {
           .agg(count(lit(1)).as("n_items"),
             round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))) + lit(1e-9), 2)
               .as("revenue"))
-      def time2(label: String)(mk: => DataFrame): Double = {
-        val ts = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          mk.write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        val m = ts.min
-        println("[saltab] %-22s %8s s  (passes: %s)".format(label,
-          "%.2f".formatLocal(java.util.Locale.ROOT, m),
-          ts.map(d => "%.2f".formatLocal(java.util.Locale.ROOT, d)).mkString("/")))
-        m
-      }
+      def time2(label: String)(mk: => DataFrame): Double =
+        Measure.minOfPasses("saltab", label, 2, labelWidth = 22)(Measure.noop(mk))
       spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
       val plainOff = time2("plain_skewjoin_off")(plainJoin())
       spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
       val plainOn = time2("plain_skewjoin_on")(plainJoin())
       val salted = time2("manual_salt")(SparkEntry.queries("q_salted_join")(spark, dst))
-      def n(d: Double) = "%.2f".formatLocal(java.util.Locale.ROOT, d)
       println(s"""{"plain_skewjoin_off":${n(plainOff)},"plain_skewjoin_on":${n(plainOn)},"manual_salt":${n(salted)},"mult":$mult,"mode":"saltab"}""")
       spark.stop()
       return
@@ -1161,20 +1085,18 @@ object ScaleSmoke {
       val ts = (1 to passes).map { _ =>
         val t0 = System.nanoTime()
         val ok =
-          try { SparkEntry.queries(name)(spark, dst)
-            .write.format("noop").mode("overwrite").save(); true }
+          try { Measure.noop(SparkEntry.queries(name)(spark, dst)); true }
           catch { case e: Throwable =>
             System.err.println(s"[scale] $name FAILED: ${e.getMessage}"); false }
         (System.nanoTime() - t0) / 1e9 -> ok
       }
       val ok = ts.forall(_._2)
       println("[scale] %-28s %8s s%s".format(name,
-        ts.map(t => "%.2f".formatLocal(java.util.Locale.ROOT, t._1)).mkString("/"),
-        if (ok) "" else "  FAILED"))
+        ts.map(t => n(t._1)).mkString("/"), if (ok) "" else "  FAILED"))
       name -> (if (ok) Some(ts.map(_._1).min) else None) // a crash is not a timing
     }
     println("{" + times.map { case (k, v) =>
-        "\"" + k + "\":" + v.map(d => "%.2f".formatLocal(java.util.Locale.ROOT, d)).getOrElse("null") }
+        "\"" + k + "\":" + v.map(n).getOrElse("null") }
       .mkString(",") + s""","mult":$mult,"skew":$skewed}""")
     spark.stop()
     if (times.exists(_._2.isEmpty)) sys.exit(1)

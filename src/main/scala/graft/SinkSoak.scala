@@ -55,7 +55,7 @@ object SinkSoak {
     // 2..4-column interleave
     val sink = new ManifestedParquetSink(dataDir, manifestDir, Seq("k", "v"))
 
-    def num(d: Double): String = "%.4f".formatLocal(java.util.Locale.ROOT, d)
+    def num(d: Double): String = Measure.num(d, 4)
     def fileCount(): Int =
       fs.listStatus(new Path(dataDir))
         .count(s => s.isFile && !s.getPath.getName.startsWith("_") &&

@@ -57,8 +57,7 @@ object StateSoak {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.filter(_.forall(_.isDigit)).map(_.toInt).getOrElse(4000000)
     val users = args.drop(1).headOption.filter(_.forall(_.isDigit)).map(_.toInt).getOrElse(1000000)
-    val spark = Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-state-soak")
+    val spark = Sessions.local(Measure.cores(), "graft-state-soak")
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")

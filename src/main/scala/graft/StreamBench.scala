@@ -14,33 +14,16 @@ import graft.streaming.{Generators, Jobs, Sinks, StatefulProcessors, StreamingPi
   * reference's generators emit ~0.5-1 record/second by construction
   * (`FileStreamDataGenerator.java:104` sleeps 1-2000 ms per record), so
   * single-node throughput parity is about the ENGINE's sustainable rate,
-  * measured here on the same local[32] harness the batch bench uses.
+  * measured here on the same local[N] session the batch bench uses
+  * (`SPARK_GRAFT_CPUS`, default all cores).
   *
   * Usage: sbt 'runMain graft.StreamBench [nEvents]'   (default 200k)
   */
 object StreamBench {
 
-  private def timed[A](f: => A): Double = {
-    val t0 = System.nanoTime()
-    f
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  /** Bench's fixed spin calibration workload — sampled beside the
-    * bandwidth probe so the gate normalizes throughput with the SAME
-    * divisor terms the batch gate uses (see StreamGate's scaladoc). */
-  private def spinMs(): Double = {
-    val t0 = System.nanoTime()
-    var x = 0x9e3779b97f4a7c15L; var i = 0
-    while (i < 50000000) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1 }
-    if (x == 42L) System.err.println("")
-    (System.nanoTime() - t0) / 1e6
-  }
-
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(200000)
-    val spark = Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-stream-bench")
+    val spark = Sessions.local(Measure.cores(), "graft-stream-bench")
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
@@ -50,15 +33,16 @@ object StreamBench {
     Generators.writeCsvFiles(in, seed = 42, files = 32, perFile = n / 32)
 
     // host probe bracketing the whole cell sequence (round-18 task 5):
-    // spin + bandwidth, Bench's exact normalization terms
-    val spins = scala.collection.mutable.ArrayBuffer(spinMs())
-    val bws = scala.collection.mutable.ArrayBuffer(Bench.bwGbps())
+    // spin + bandwidth, so the gate normalizes throughput with the SAME
+    // divisor the batch gate uses (see StreamGate's scaladoc)
+    val spins = scala.collection.mutable.ArrayBuffer(Measure.spinMs())
+    val bws = scala.collection.mutable.ArrayBuffer(Measure.bwGbps())
 
     def run(name: String)(start: Jobs.Dirs => org.apache.spark.sql.streaming.StreamingQuery): (String, Double, Int) = {
       val d = Jobs.Dirs(in,
         Files.createTempDirectory(s"sbench-out-$name").toString,
         Files.createTempDirectory(s"sbench-ck-$name").toString)
-      val sec = timed {
+      val sec = Measure.seconds {
         val q = start(d)
         try q.processAllAvailable() finally q.stop()
       }
@@ -83,7 +67,7 @@ object StreamBench {
         val q = start(d)
         try q.processAllAvailable() finally q.stop()
       }
-      val sec = timed {
+      val sec = Measure.seconds {
         drain() // phase 1
         Generators.writeCsvFilesWide(d.in, seed = 43, files = 16,
           perFile = half, users = users, fileOffset = 16,
@@ -108,7 +92,7 @@ object StreamBench {
         Files.createTempDirectory(s"sbench-out-$name").toString,
         Files.createTempDirectory(s"sbench-ck-$name").toString)
       Generators.writeJsonDocs(d.in, seed = 42, files, perFile)
-      val sec = timed {
+      val sec = Measure.seconds {
         val q = start(d)
         try q.processAllAvailable() finally q.stop()
       }
@@ -151,7 +135,7 @@ object StreamBench {
       val quota = math.max(4L, (actual / sources) * 6L / 10L)
       Generators.writeJsonDocs(d.in, seed = 42, files, perFile,
         sources = sources, evalText = evalText)
-      val sec = timed {
+      val sec = Measure.seconds {
         def drain(): Unit = {
           val (p, q, sp) = Jobs.corpusPipeline(spark, d, grams, quota)
           try {
@@ -466,7 +450,7 @@ object StreamBench {
           val q = graft.operators.IvfPqIndex.startIngest(vecs, root, d.ckpt)
           try q.processAllAvailable() finally q.stop()
         }
-        val sec = timed {
+        val sec = Measure.seconds {
           drain() // phase 1 -> g1
           graft.operators.IvfPqIndex.handoff(spark, sfDir, root) // swap -> g2
           Generators.writeCsvFilesWide(d.in, seed = 43, files = 16,
@@ -503,7 +487,7 @@ object StreamBench {
           val q = graft.operators.IvfPqIndex.startIngest(vecs, root, d.ckpt)
           try q.processAllAvailable() finally q.stop()
         }
-        val sec = timed {
+        val sec = Measure.seconds {
           drain() // phase 1 -> g1
           graft.operators.IvfPqIndex.deleteVectors(spark, root,
             (1000001L to 1000064L), batchId = 9000L)
@@ -528,23 +512,18 @@ object StreamBench {
       // capstone corpus is n/10 docs for a comparable byte volume
       runCapstone(math.max(2048, n / 10)))
 
-    spins += spinMs()
-    bws += Bench.bwGbps()
+    spins += Measure.spinMs()
+    bws += Measure.bwGbps()
     val json = results.map { case (k, sec, rows) =>
       val rps = if (sec > 0) rows / sec else 0.0
-      f""""$k":{"sec":$sec%.2f,"rows":$rows,"rows_per_sec":$rps%.0f}"""
+      s""""$k":{"sec":${Measure.num(sec, 2)},"rows":$rows,"rows_per_sec":${Measure.num(rps, 0)}}"""
     }.mkString(",")
     // --- per-cell regression gate vs the committed stream_ref.json
     // (StreamGate's scaladoc has the contract; throughput normalizes by
     // MULTIPLYING with host_ratio — the seconds divisor, inverted)
-    def num(d: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, d)
-    val spinRatio = (spins.min / Bench.SpinRefMs).max(1.0).min(3.0)
-    val bwSorted = bws.sorted
-    val bwMedian =
-      if (bwSorted.size % 2 == 1) bwSorted(bwSorted.size / 2)
-      else (bwSorted(bwSorted.size / 2 - 1) + bwSorted(bwSorted.size / 2)) / 2.0
-    val bwRatio = (Bench.BwRefGbps / bwMedian).max(1.0).min(2.0)
-    val hostRatio = (spinRatio * bwRatio).max(1.0).min(3.0)
+    def num(d: Double): String = Measure.num(d)
+    val Measure.HostRatio(spinRatio, _, bwRatio, hostRatio) =
+      Measure.hostRatio(spins.toSeq, bws.toSeq)
     val normRps: Map[String, Double] = results.map { case (k, sec, rows) =>
       k -> (if (sec > 0) rows / sec * hostRatio else 0.0)
     }.toMap

@@ -60,59 +60,18 @@ object StreamGate {
       c -> math.max(ref.getOrElse(c, 0.0), norm.getOrElse(c, 0.0))
     }.toMap
 
-  // Same writer-owns-the-shape regex parsing as BenchGate — no JSON
-  // library on the bench classpath.
-  private val nRe = """"n_events"\s*:\s*(\d+)""".r
-  private val entryRe = """"([A-Za-z0-9_]+)"\s*:\s*([0-9]+(?:\.[0-9]+)?)""".r
-
   def load(path: String = RefFile): Option[Ref] =
-    try {
-      val p = java.nio.file.Paths.get(path)
-      if (!java.nio.file.Files.exists(p)) None
-      else {
-        val txt = java.nio.file.Files.readString(p)
-        val n = nRe.findFirstMatchIn(txt).map(_.group(1).toInt)
-        val body = txt.indexOf("\"norm_rps\"") match {
-          case -1 => ""
-          case i => txt.substring(i + "\"norm_rps\"".length)
-        }
-        n.map(v => Ref(v,
-          entryRe.findAllMatchIn(body)
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap))
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
+    Ledger.read(path)(txt => Ledger.field(txt, "n_events")
+      .map(n => Ref(n.toInt, Ledger.entries(txt, "norm_rps"))))
 
-  def save(path: String, n: Int, rps: Map[String, Double]): Unit = {
-    def num(d: Double): String =
-      "%.1f".formatLocal(java.util.Locale.ROOT, d)
-    val body = rps.toSeq.sortBy(_._1)
-      .map { case (c, v) => s""""$c":${num(v)}""" }
-      .grouped(4).map(_.mkString(",")).mkString(",\n    ")
-    val txt =
-      s"""{
-  "n_events": $n,
-  "note": "best host-normalized rows/sec per StreamBench cell (measured_rps * host_ratio); gate = no cell below reference/${RatioLimit}; refresh via SPARK_GRAFT_UPDATE_REF=1",
-  "norm_rps": {
-    $body
-  }
-}
-"""
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(path), txt)
-    ()
-  }
+  def save(path: String, n: Int, rps: Map[String, Double]): Unit =
+    Ledger.write(path, Seq(s""""n_events": $n""",
+      s""""note": "best host-normalized rows/sec per StreamBench cell (measured_rps * host_ratio); gate = no cell below reference/${RatioLimit}; refresh via SPARK_GRAFT_UPDATE_REF=1"""",
+      Ledger.mapField("norm_rps", rps, digits = 1, perLine = 4)))
 
   /** Compact JSON for the stdout gate block (cap — the consumer tails
     * the line). */
-  def regsJson(regs: Seq[Regression], cap: Int = 8): String = {
-    // A drained-zero-rows cell has ratio = +Infinity, and "%.1f" would
-    // render it as unquoted `Infinity` — invalid JSON on the gate line
-    // precisely when a cell is most broken. Clamp every non-finite
-    // value to a large finite sentinel instead.
-    def num(d: Double): String =
-      "%.1f".formatLocal(java.util.Locale.ROOT,
-        if (java.lang.Double.isFinite(d)) d else 9.0e9)
-    regs.take(cap).map(r =>
-      s"""{"cell":"${r.cell}","ref":${num(r.refRps)},"norm":${num(r.normRps)},"ratio":${num(r.ratio)}}""")
-      .mkString("[", ",", "]")
-  }
+  def regsJson(regs: Seq[Regression], cap: Int = 8): String =
+    Ledger.regsJson(regs.map(r => (r.cell, r.refRps, r.normRps, r.ratio)),
+      nameKey = "cell", digits = 1, cap)
 }

@@ -8,9 +8,7 @@ object Verify {
     val Array(sfDir, outDir, rest @ _*) = args
     // Optional extra args = only re-dump these queries (local iteration).
     val only: Set[String] = rest.toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = Sessions.local(cpus.toInt, "graft-verify")
+    val spark = Sessions.local(Measure.cores(), "graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
