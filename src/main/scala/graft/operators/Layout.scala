@@ -224,7 +224,7 @@ object Layout {
     * table is free. Scale shape: driver work is O(file count) listing —
     * the quantity being fixed — and each bin rewrite is an independent
     * single-task job with no exchange anywhere; bins run CONCURRENTLY on
-    * a bounded pool of `maxConcurrentBins` submitter threads (Spark job
+    * a bounded pool of `MaxConcurrentBins` submitter threads (Spark job
     * scheduling is thread-safe), so at production file counts the
     * wall-clock is bounded by IO, not by serialized job submission.
     *
@@ -260,8 +260,13 @@ object Layout {
     * appending; compacting a dir where fresh appends interleave with an
     * old generation keeps the data correct but degrades box tightness. */
   def compactSmallFiles(spark: SparkSession, path: String,
-      targetBytes: Long = 128L << 20, maxConcurrentBins: Int = 8): CompactReceipt =
-    compactCore(spark, path, targetBytes, maxConcurrentBins)._1
+      targetBytes: Long = 128L << 20): CompactReceipt =
+    compactCore(spark, path, targetBytes)._1
+
+  /** Bin rewrites a compaction submits at once: 8 ran 6.9x faster than
+    * the serialized loop at organic x100 (BASELINE.md "Compaction
+    * bin-parallelism receipt"). */
+  private val MaxConcurrentBins = 8
 
   /** [[compactSmallFiles]] plus DERIVED statistics: returns the
     * post-compaction manifest computed from the pre-compaction one with
@@ -283,8 +288,7 @@ object Layout {
     * DuckDB oracle hash-checks the arithmetic every round. */
   def compactSmallFilesWithManifest(spark: SparkSession, path: String,
       manifest: DataFrame, keyCols: Seq[String],
-      targetBytes: Long = 128L << 20,
-      maxConcurrentBins: Int = 8): (CompactReceipt, DataFrame) = {
+      targetBytes: Long = 128L << 20): (CompactReceipt, DataFrame) = {
     requireManifestShape(manifest, keyCols, "compactSmallFilesWithManifest")
     val dir = new org.apache.hadoop.fs.Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -303,7 +307,7 @@ object Layout {
         s"${(byName.keySet -- listed).take(5)}). Reconcile with updateManifest " +
         "first — deriving from a stale manifest would bake wrong statistics " +
         "into metadata.")
-    val (receipt, plan) = compactCore(spark, path, targetBytes, maxConcurrentBins)
+    val (receipt, plan) = compactCore(spark, path, targetBytes)
     val binned = plan.flatMap(_._2).toSet
     val derived = plan.map { case (out, members) =>
       val ms = members.map(byName)
@@ -419,9 +423,8 @@ object Layout {
   }
 
   private def compactCore(spark: SparkSession, path: String,
-      targetBytes: Long, maxConcurrentBins: Int): (CompactReceipt, Seq[(String, Seq[String])]) = {
+      targetBytes: Long): (CompactReceipt, Seq[(String, Seq[String])]) = {
     require(targetBytes > 0, "targetBytes must be positive")
-    require(maxConcurrentBins > 0, "maxConcurrentBins must be positive")
     val dir = new org.apache.hadoop.fs.Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // a previous run may have died mid-swap; complete it before listing,
@@ -486,7 +489,7 @@ object Layout {
       // serialized driver loop.
       if (rewritten > 0) {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(maxConcurrentBins, rewritten))
+          math.min(MaxConcurrentBins, rewritten))
         try {
           val futures = multiBins.map { case (bin, i) =>
             pool.submit(new java.util.concurrent.Callable[Unit] {

@@ -7,7 +7,9 @@ import graft.GQuery
 
 /** Oracle-checked registry coverage for the [[Layout]] primitives.
   *
-  * Every other layout receipt lives in sbt specs and ScaleSmoke modes;
+  * Every other layout receipt lives in sbt specs and in BASELINE.md's
+  * round-12/13 layout sections ("layoutab", "Manifest economics at a
+  * production file count", "Equi-depth Z-order");
   * this puts the full MAINTENANCE LIFECYCLE under the driver's DuckDB
   * oracle: Z-order write -> manifest build -> incremental append ->
   * [[Layout.updateManifest]] reconcile ->

@@ -591,15 +591,15 @@ GROUP BY 1, 2"""),
   // duplicated. The oracle is the plain join: salting must be
   // result-transparent.
   //
-  // WHICH TO USE (measured, `ScaleSmoke 16 saltab`, 20% hot key,
-  // broadcast disabled — see BASELINE.md round 8): for BATCH shuffle
-  // joins under AQE, prefer the PLAIN join — OptimizeSkewedJoin split
-  // the hot partitions at runtime and beat this manual salt 1.74 s vs
-  // 2.89 s (the salt's dim explode + wider exchange are pure overhead
-  // once AQE can split). Reach for manual salting where AQE cannot:
-  // streaming/stateful exchanges (AQE is batch-only), keyed AGGREGATION
-  // skew (a2b's regime — no runtime split exists for one giant group's
-  // reduce), or AQE-disabled clusters.
+  // WHICH TO USE (measured at x16 with a 20% hot key, broadcast
+  // disabled — BASELINE.md "Salted-join vs AQE skew-join A/B"): for
+  // BATCH shuffle joins under AQE, prefer the PLAIN join —
+  // OptimizeSkewedJoin split the hot partitions at runtime and beat
+  // this manual salt 1.74 s vs 2.89 s (the salt's dim explode + wider
+  // exchange are pure overhead once AQE can split). Reach for manual
+  // salting where AQE cannot: streaming/stateful exchanges (AQE is
+  // batch-only), keyed AGGREGATION skew (a2b's regime — no runtime
+  // split exists for one giant group's reduce), or AQE-disabled clusters.
   private val qSaltedJoin = GQuery(
     "q_salted_join",
     (s, dir) => {
