@@ -96,6 +96,15 @@ object Bench {
       profile(spark, args.lift(1).getOrElse(sfDir), profiled.get,
         args.lift(3).map(_.toInt).getOrElse(6)); return
     }
+    // The committed gate files are read before any timing, so one that
+    // does not parse stops the run at once (see BenchGate.load).
+    val sfName = new java.io.File(sfDir).getName
+    val refOpt = BenchGate.load().filter(_.sf == sfName)
+    // Two-consecutive rule (round-18): sub-0.2s-reference trips consult
+    // the committed previous sample's suspect set and are persisted as
+    // this sample's — see BenchGate's SmallRefSec scaladoc for the a15
+    // adjudication that motivated it.
+    val priorCounts = BenchGate.loadFlagCounts(sf = sfName)
     warmUp(spark, sfDir)
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
     // Option.empty = the pass threw; a crash must never report its (fast)
@@ -176,9 +185,8 @@ object Bench {
     // real gate. A genuine plan regression is immune by construction
     // (no retake makes a real 2x faster); only a band trip clears.
     // Worst ratios retake first; the cap bounds a fully-banded run.
-    val sfNameEarly = new java.io.File(sfDir).getName
     val bandRetaken: Map[String, Double] =
-      BenchGate.load().filter(_.sf == sfNameEarly).map { r =>
+      refOpt.map { r =>
         val prelimHost = Measure.hostRatio(spinSamples.toSeq, bwSamples.toSeq).value
         val prelimNorm = results.collect {
           case (k, Some(v)) => k -> v / prelimHost }.toMap
@@ -202,15 +210,10 @@ object Bench {
     val stealPct: Option[Double] = for {
       (s0, t0) <- steal0; (s1, t1) <- Measure.stealTicks() if t1 > t0
     } yield 100.0 * (s1 - s0) / (t1 - t0)
-    def num(d: Double): String = Measure.num(d)
-    def fmt(v: Option[Double]): String = v.map(num).getOrElse("null")
-    val detail = finalResults.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val failed = finalResults.collect { case (k, None) => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
+    val detail = Json.Obj(finalResults)
+    val failed = finalResults.collect { case (k, None) => k }
     val total = finalResults.flatMap(_._2).sum
-    val head = finalResults.filter(r => headline.contains(r._1))
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
+    val head = Json.Obj(finalResults.filter(r => headline.contains(r._1)))
     // Self-forensics summary: per-pass totals (a clean host shows
     // p1 ≈ p2 ≈ total; a stall-hit run shows one inflated pass), retake
     // count (how often the 1.4x-disagreement tripwire fired), and the
@@ -219,8 +222,7 @@ object Bench {
     // is the roving-stall band.
     val p1Total = ordered.flatMap { case (n, _) => pass1(n) }.sum
     val p2Total = ordered.flatMap { case (n, _) => pass2(n) }.sum
-    val passes =
-      s"""{"p1":${num(p1Total)},"p2":${num(p2Total)},"p3_n":${pass3.size}}"""
+    val passes = Json.obj("p1" -> p1Total, "p2" -> p2Total, "p3_n" -> pass3.size)
     // --- Band auto-annotation (round 13): the roving host band's
     // fingerprint — established by the round-11/12 forensics — is a
     // memory-bandwidth dip with a FLAT spin probe (a compute-bound probe
@@ -232,8 +234,10 @@ object Bench {
     // as host band, not plan regression — mechanically, not via prose.
     val bandSuspected = spinSamples.min / Measure.SpinRefMs <= 1.15 &&
       bwSamples.min < 0.85 * Measure.BwRefGbps
-    val probe =
-      s"""{"gc_ms":$gcDelta,"probe_gc_ms":$probeGc,"steal_pct":${stealPct.map(num).getOrElse("null")},"spin_ms":[${spinSamples.map(num).mkString(",")}],"bw_gbps":[${bwSamples.map(num).mkString(",")}],"bw_ref_gbps":${Measure.BwRefGbps},"band_suspected":$bandSuspected}"""
+    val bwRef = Json.Num(Measure.BwRefGbps, 1)
+    val probe = Json.obj("gc_ms" -> gcDelta, "probe_gc_ms" -> probeGc,
+      "steal_pct" -> stealPct, "spin_ms" -> spinSamples, "bw_gbps" -> bwSamples,
+      "bw_ref_gbps" -> bwRef, "band_suspected" -> bandSuspected)
     // --- Normalized gate (round-8, bandwidth term round-14): the raw
     // s/query gate drifts with the host, so the verdict is computed
     // against a host-normalized value (Measure.hostRatio has the
@@ -268,15 +272,8 @@ object Bench {
     // when no ledger applies (missing file or sf mismatch — e.g. local
     // sf0.001 iteration runs are never graded against sf0.1 entries).
     val fleetVerdict = if (normSpq <= GateSpq) "pass" else "weak"
-    val sfName = new java.io.File(sfDir).getName
     val normByQ: Map[String, Double] =
       finalResults.collect { case (k, Some(v)) => k -> v / hostRatio }.toMap
-    val refOpt = BenchGate.load().filter(_.sf == sfName)
-    // Two-consecutive rule (round-18): sub-0.2s-reference trips consult
-    // the committed previous sample's suspect set and are persisted as
-    // this sample's — see BenchGate's SmallRefSec scaladoc for the a15
-    // adjudication that motivated it.
-    val priorCounts = BenchGate.loadFlagCounts(sf = sfName)
     val gateRes = refOpt.map(r =>
         BenchGate.gate(r.norms, normByQ, priorCounts))
       .getOrElse(BenchGate.GateResult(Nil, Nil))
@@ -316,40 +313,53 @@ object Bench {
       case None => ("fleet_fallback", fleetVerdict)
     }
     if (sys.env.get("SPARK_GRAFT_UPDATE_REF").contains("1")) {
-      val base = refOpt.map(_.norms).getOrElse(Map.empty)
-      BenchGate.save(BenchGate.RefFile, sfName, BenchGate.merged(base, normByQ))
+      val baseN = BenchGate.update(BenchGate.RefFile, sfName, normByQ)
       System.err.println(s"[bench] ${BenchGate.RefFile} updated (" +
-        s"${normByQ.size} measured into ${base.size} existing entries)")
+        s"${normByQ.size} measured into $baseN existing entries)")
     }
-    val gate =
-      s"""{"raw_spq":${num(rawSpq)},"spin_ratio":${num(spinRatio)},"bw_ratio":${num(bwRatio)},"bw_median_gbps":${num(bwMedian)},"bw_ref_gbps":${Measure.BwRefGbps},"host_ratio":${num(hostRatio)},"norm_spq":${num(normSpq)},"norm_spq_same_subset":${fmt(normSpqSame)},"ledger_spq_same_subset":${fmt(ledgerSpqSame)},"diffuse_ratio":${fmt(diffuseRatio)},"same_subset_n":${sameSubset.size},"threshold":$GateSpq,"fleet_verdict":"$fleetVerdict","gate_kind":"$gateKind","ref_n":$refN,"unref_n":$unrefN,"regressions_n":${regs.size},"regressions":${BenchGate.regsJson(regs)},"suspects_n":${gateRes.suspects.size},"suspects":${BenchGate.regsJson(gateRes.suspects, 5)},"verdict":"$verdict","compute_n":$computeN,"maint_n":$maintN,"maint_sec":${num(maintSec)},"maint_lane":[${maintenanceLane.map("\"" + _ + "\"").mkString(",")}]}"""
-    val line =
-      s"""{"metric":"total","value":${num(total)},"unit":"sec","n_queries":${finalResults.size},"failed":$failed,"passes":$passes,"retakes":$retakes,"host_probe":$probe,"gate":$gate,"queries":$head,"sf":"$sfDir"}"""
+    val gate = Json.obj("raw_spq" -> rawSpq, "spin_ratio" -> spinRatio,
+      "bw_ratio" -> bwRatio, "bw_median_gbps" -> bwMedian, "bw_ref_gbps" -> bwRef,
+      "host_ratio" -> hostRatio, "norm_spq" -> normSpq,
+      "norm_spq_same_subset" -> normSpqSame, "ledger_spq_same_subset" -> ledgerSpqSame,
+      "diffuse_ratio" -> diffuseRatio, "same_subset_n" -> sameSubset.size,
+      "threshold" -> Json.Num(GateSpq, 2), "fleet_verdict" -> fleetVerdict,
+      "gate_kind" -> gateKind, "ref_n" -> refN, "unref_n" -> unrefN,
+      "regressions_n" -> regs.size, "regressions" -> BenchGate.regsJson(regs),
+      "suspects_n" -> gateRes.suspects.size,
+      "suspects" -> BenchGate.regsJson(gateRes.suspects, 5), "verdict" -> verdict,
+      "compute_n" -> computeN, "maint_n" -> maintN, "maint_sec" -> maintSec,
+      "maint_lane" -> maintenanceLane.toSeq)
+    val line = Json.obj("metric" -> "total", "value" -> total, "unit" -> "sec",
+      "n_queries" -> finalResults.size, "failed" -> failed, "passes" -> passes,
+      "retakes" -> retakes, "host_probe" -> probe, "gate" -> gate,
+      "queries" -> head, "sf" -> sfDir, "cores" -> Measure.cores())
     // Full map for forensics/BASELINE.md (stderr + file — NOT stdout, where
     // it would push the compact line out of the consumer's tail window).
-    System.err.println(s"[bench] detail $detail")
-    def mapJson(m: collection.Map[String, Option[Double]]): String =
-      ordered.collect { case (k, _) if m.contains(k) => "\"" + k + "\":" + fmt(m(k)) }
-        .mkString("{", ",", "}")
+    System.err.println(s"[bench] detail ${Json.render(detail)}")
+    def inOrder(m: collection.Map[String, _]): Json.Obj =
+      Json.Obj(ordered.collect { case (k, _) if m.contains(k) => k -> m(k) })
     // Maintenance-lane stage receipts (round-19 verdict task 6): the
     // last q_layout_lifecycle pass's per-stage wall times, so a
     // regressing stage is visible INSIDE the ~10 s lane total.
-    val layoutStages = graft.operators.LayoutQueries.lastStageTimings
-      .map { case (k, v) => "\"" + k + "\":" + num(v) }.mkString("{", ",", "}")
+    val layoutStages = Json.Obj(graft.operators.LayoutQueries.lastStageTimings)
     // pass4 = the band-escape retimings (round-19 verdict item 4: a
     // one-sided resampling mechanism must leave its receipts in the
     // artifact it modifies — every min-merged 4th sample is listed here).
-    val pass4Json = ordered.collect {
-      case (k, _) if bandRetaken.contains(k) =>
-        "\"" + k + "\":" + num(bandRetaken(k))
-    }.mkString("{", ",", "}")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_DETAIL.json"),
-      s"""{"total":${num(total)},"sf":"$sfDir","queries":$detail,"failed":$failed,"passes":$passes,"retakes":$retakes,"host_probe":$probe,"gate":$gate,"layout_stages":$layoutStages,"regressions_full":${BenchGate.regsJson(regs, Int.MaxValue)},"pass1":${mapJson(pass1.view.mapValues(identity).toMap)},"pass2":${mapJson(pass2)},"pass3":${mapJson(pass3)},"pass4":$pass4Json}""" + "\n")
-    catch { case _: Throwable => }
+      Json.render(Json.obj("total" -> total, "sf" -> sfDir, "cores" -> Measure.cores(),
+        "queries" -> detail, "failed" -> failed, "passes" -> passes,
+        "retakes" -> retakes, "host_probe" -> probe, "gate" -> gate,
+        "layout_stages" -> layoutStages,
+        "regressions_full" -> BenchGate.regsJson(regs, Int.MaxValue),
+        "pass1" -> inOrder(pass1), "pass2" -> inOrder(pass2),
+        "pass3" -> inOrder(pass3), "pass4" -> inOrder(bandRetaken))) + "\n")
+    catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[bench] BENCH_DETAIL.json not written: $e")
+    }
     // Quiet shutdown so nothing lands after the JSON line but sbt's one
     // [success] trailer.
     spark.sparkContext.setLogLevel("ERROR")
-    println(line)
+    println(Json.render(line))
     spark.stop()
   }
 
@@ -401,8 +411,10 @@ object Bench {
     }
     bws += Measure.bwGbps()
     val host = Measure.hostRatio(spins.toSeq, bws.toSeq).value
-    def n(d: Double) = Measure.num(d)
-    println(s"""{"query":"$name","sf":"$sfDir","passes":[${times.map(n).mkString(",")}],"min":${n(times.min)},"max":${n(times.max)},"bw_gbps":[${bws.map(n).mkString(",")}],"host_ratio":${n(host)},"norm_min":${n(times.min / host)}}""")
+    println(Json.render(Json.obj("query" -> name, "sf" -> sfDir,
+      "cores" -> Measure.cores(), "passes" -> times, "min" -> times.min,
+      "max" -> times.max, "bw_gbps" -> bws, "host_ratio" -> host,
+      "norm_min" -> times.min / host)))
     spark.stop()
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** PER-QUERY bench regression gate (round-17 verdict task 1).
   *
   * Why the fleet-average gate had to go: the old verdict compared mean
@@ -189,25 +191,29 @@ object BenchGate {
     }.toMap
 
   def load(path: String = RefFile): Option[Ref] =
-    Ledger.read(path)(txt => Ledger.field(txt, "sf")
-      .map(Ref(_, Ledger.entries(txt, "host_norm_sec"))))
+    Json.read(path).map(j =>
+      Ref(Json.get(j, "sf", path).asText, Json.numbers(j, "host_norm_sec", path)))
 
   def save(path: String, sf: String, norms: Map[String, Double]): Unit =
-    Ledger.write(path, Seq(s""""sf": "$sf"""",
-      s""""note": "best host-normalized seconds per query (measured_min / host_ratio); gate = no query > ${RatioLimit}x its entry (+${NoiseFloorSec}s floor); refresh via SPARK_GRAFT_UPDATE_REF=1"""",
-      Ledger.mapField("host_norm_sec", norms, digits = 3, perLine = 6)))
+    Json.writeLedger(path, Json.obj("sf" -> sf,
+      "note" -> s"best host-normalized seconds per query (measured_min / host_ratio); gate = no query > ${RatioLimit}x its entry (+${NoiseFloorSec}s floor); refresh via SPARK_GRAFT_UPDATE_REF=1",
+      "host_norm_sec" -> Json.sorted(norms, digits = 3)),
+      grouped = "host_norm_sec", perLine = 6)
 
-  // Flags-file shape, written only by [[saveFlagCounts]].
-  private val suspectsRe = """"suspects"\s*:\s*\[([^\]]*)\]""".r
-  private val nameRe = """"([A-Za-z0-9_]+)"""".r
-  private val countsRe = """"suspect_counts"\s*:\s*\{([^}]*)\}""".r
-  private val countEntryRe = """"([A-Za-z0-9_]+)"\s*:\s*(\d+)""".r
+  /** `SPARK_GRAFT_UPDATE_REF=1`: merges `norms` into the ledger at
+    * `path` and rewrites it; returns how many entries it held for `sf`.
+    * A ledger that cannot be read throws before anything is written. */
+  def update(path: String, sf: String, norms: Map[String, Double]): Int = {
+    val base = load(path).filter(_.sf == sf).map(_.norms).getOrElse(Map.empty)
+    save(path, sf, merged(base, norms))
+    base.size
+  }
 
   /** Previous gated sample's suspect set, as PROMOTION INPUT: empty
-    * when the file is missing, unparseable, tagged with a different
-    * sf, or YOUNGER than [[MinSampleGapMs]] (same-band samples are not
-    * independent evidence — see the field's scaladoc). `now` is
-    * injectable for tests. */
+    * when the file is missing, tagged with a different sf, or YOUNGER
+    * than [[MinSampleGapMs]] (same-band samples are not independent
+    * evidence — see the field's scaladoc). A file that exists but does
+    * not parse throws. `now` is injectable for tests. */
   def loadFlags(path: String = FlagsFile, sf: String,
       now: Long = System.currentTimeMillis()): Set[String] =
     loadFlagCounts(path, sf, now).keySet
@@ -218,17 +224,14 @@ object BenchGate {
     * one trip). Same staleness/sf guards as [[loadFlags]]. */
   def loadFlagCounts(path: String = FlagsFile, sf: String,
       now: Long = System.currentTimeMillis()): Map[String, Int] =
-    Ledger.read(path) { txt =>
-      val oldEnough = Ledger.field(txt, "written_at_ms").flatMap(_.toLongOption)
-        .forall(w => now - w >= MinSampleGapMs)
-      if (!oldEnough || !Ledger.field(txt, "sf").contains(sf)) None
-      else countsRe.findFirstMatchIn(txt) match {
-        case Some(m) =>
-          Some(countEntryRe.findAllMatchIn(m.group(1))
-            .map(e => e.group(1) -> e.group(2).toInt).toMap)
-        case None => suspectsRe.findFirstMatchIn(txt).map(m =>
-          nameRe.findAllMatchIn(m.group(1)).map(_.group(1) -> 1).toMap)
-      }
+    Json.read(path).filter { j =>
+      val oldEnough = !j.has("written_at_ms") ||
+        now - Json.number(j, "written_at_ms", path).asLong >= MinSampleGapMs
+      oldEnough && Json.get(j, "sf", path).asText == sf
+    }.map { j =>
+      if (j.has("suspect_counts"))
+        Json.fields(j.get("suspect_counts")).map { case (q, n) => q -> n.asInt }.toMap
+      else Json.get(j, "suspects", path).elements.asScala.map(_.asText -> 1).toMap
     }.getOrElse(Map.empty)
 
   /** Persist THIS gated sample's suspect set (possibly empty — a calm
@@ -245,76 +248,15 @@ object BenchGate {
   def saveFlagCounts(path: String, sf: String, counts: Map[String, Int],
       now: Long = System.currentTimeMillis()): Unit = {
     val names = counts.keys.toSeq.sorted
-    Ledger.write(path, Seq(s""""sf": "$sf"""", s""""written_at_ms": $now""",
-      s""""note": "sub-${SmallRefSec}s-reference gate trips from the latest gated bench sample, with consecutive-trip counts; a flagged query promotes on a >=${PromoteRatio}x repeat or on its ${ConsecutivePromote}th consecutive trip, samples >= ${MinSampleGapMs / 3600000}h apart (BenchGate.scala)"""",
-      s""""suspects": [${names.map("\"" + _ + "\"").mkString(",")}]""",
-      s""""suspect_counts": {${names.map(q => s""""$q":${counts(q)}""").mkString(",")}}"""))
+    Json.writeLedger(path, Json.obj("sf" -> sf, "written_at_ms" -> now,
+      "note" -> s"sub-${SmallRefSec}s-reference gate trips from the latest gated bench sample, with consecutive-trip counts; a flagged query promotes on a >=${PromoteRatio}x repeat or on its ${ConsecutivePromote}th consecutive trip, samples >= ${MinSampleGapMs / 3600000}h apart (BenchGate.scala)",
+      "suspects" -> names,
+      "suspect_counts" -> Json.Obj(names.map(q => q -> counts(q)))))
   }
 
-  /** Compact JSON fragment for the stdout gate object (cap the list —
-    * the consumer tails ~2 kB; the full list goes to BENCH_DETAIL). */
-  def regsJson(regs: Seq[Regression], cap: Int = 10): String =
-    Ledger.regsJson(regs.map(r => (r.query, r.refSec, r.normSec, r.ratio)),
-      nameKey = "q", digits = 3, cap)
-}
-
-/** The one codec of the committed gate files (`bench_ref.json`,
-  * `bench_flags.json`, `stream_ref.json`). Each file is written only by
-  * [[write]], so reading is a structural regex over that exact shape, not
-  * a general JSON reader — no JSON library enters the bench classpath. */
-private[graft] object Ledger {
-  private val entryRe = """"([A-Za-z0-9_]+)"\s*:\s*([0-9]+(?:\.[0-9]+)?)""".r
-
-  /** `parse` of the file's text; None when the file is missing or
-    * unreadable, or `parse` throws. */
-  def read[A](path: String)(parse: String => Option[A]): Option[A] =
-    try {
-      val p = java.nio.file.Paths.get(path)
-      if (!java.nio.file.Files.exists(p)) None
-      else parse(java.nio.file.Files.readString(p))
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** The first scalar value of field `key`, quotes stripped. */
-  def field(txt: String, key: String): Option[String] =
-    s""""$key"\\s*:\\s*"?([^",}\\s]+)""".r.findFirstMatchIn(txt).map(_.group(1))
-
-  /** The `"name": number` entries that follow field `section`. */
-  def entries(txt: String, section: String): Map[String, Double] = {
-    val body = txt.indexOf(s""""$section"""") match {
-      case -1 => ""
-      case i => txt.substring(i + section.length + 2)
-    }
-    entryRe.findAllMatchIn(body).map(m => m.group(1) -> m.group(2).toDouble).toMap
-  }
-
-  /** A JSON object with one top-level field per line. */
-  def write(path: String, fields: Seq[String]): Unit = {
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
-      fields.mkString("{\n  ", ",\n  ", "\n}\n"))
-    ()
-  }
-
-  /** Field `section` holding `m` sorted by name, `perLine` entries a line. */
-  def mapField(section: String, m: Map[String, Double], digits: Int,
-      perLine: Int): String = {
-    val body = m.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""$k":${Measure.num(v, digits)}""" }
-      .grouped(perLine).map(_.mkString(",")).mkString(",\n    ")
-    s""""$section": {\n    $body\n  }"""
-  }
-
-  /** Compact JSON list of gate rows (name, ref, norm, ratio), capped —
-    * the consumer tails the line. A zero reference or a drained-zero-rows
-    * cell makes the ratio +Infinity, which a fixed-point format renders as
-    * unquoted `Infinity` — invalid JSON precisely when a row is most
-    * broken — so every non-finite value is clamped to a large finite
-    * sentinel. */
-  def regsJson(rows: Seq[(String, Double, Double, Double)], nameKey: String,
-      digits: Int, cap: Int): String = {
-    def num(d: Double): String =
-      Measure.num(if (java.lang.Double.isFinite(d)) d else 9.0e9, digits)
-    rows.take(cap).map { case (name, ref, norm, ratio) =>
-      s"""{"$nameKey":"$name","ref":${num(ref)},"norm":${num(norm)},"ratio":${num(ratio)}}"""
-    }.mkString("[", ",", "]")
-  }
+  /** Gate rows for the stdout gate object (capped — the consumer tails
+    * ~2 kB; the full list goes to BENCH_DETAIL). */
+  def regsJson(regs: Seq[Regression], cap: Int = 10): Seq[Json.Obj] =
+    regs.take(cap).map(r => Json.obj("q" -> r.query, "ref" -> r.refSec,
+      "norm" -> r.normSec, "ratio" -> r.ratio))
 }

@@ -54,8 +54,6 @@ object ConcurrentBench {
     "d_minhash_lsh_pairs", "d_curate_corpus", "e_knn_brute",
     "t_tfidf", "x8_cep_skip_past")
 
-  private def num(d: Double): String = Measure.num(d)
-
   private def mkExec(spark: SparkSession, sfDir: String)(name: String): Unit =
     Measure.noop(SparkEntry.queries(name)(spark, sfDir))
 
@@ -109,13 +107,12 @@ object ConcurrentBench {
       System.err.println(f"[conc] n=$n%-2d wall $wall%7.2f s  ${qps}%5.2f q/s  " +
         f"throughput_x $tput%4.2f  stream secs ${streamSecs.map(s => f"$s%.1f").mkString("/")}  " +
         f"bw $bw0%4.1f->$bw1%4.1f GB/s  gc ${gcDelta}ms")
-      s"""{"n":$n,"wall":${num(wall)},"qps":${num(qps)},"throughput_x":${num(tput)},""" +
-        s""""stream_sec":[${streamSecs.map(num).mkString(",")}],""" +
-        s""""gc_ms":$gcDelta,"bw_gbps":[${num(bw0)},${num(bw1)}]}"""
+      Json.obj("n" -> n, "wall" -> wall, "qps" -> qps, "throughput_x" -> tput,
+        "stream_sec" -> streamSecs, "gc_ms" -> gcDelta, "bw_gbps" -> Seq(bw0, bw1))
     }
-    println(s"""{"metric":"concurrent","sf":"$sfDir","subset_n":${subset.size},""" +
-      s""""solo_sum":${num(soloSum)},"solo":{${solo.map { case (k, v) => s""""$k":${num(v)}""" }.mkString(",")}},""" +
-      s""""runs":[${runs.mkString(",")}]}""")
+    println(Json.render(Json.obj("metric" -> "concurrent", "sf" -> sfDir,
+      "cores" -> Measure.cores(), "subset_n" -> subset.size, "solo_sum" -> soloSum,
+      "solo" -> Json.Obj(solo), "runs" -> runs)))
     spark.stop()
   }
 
@@ -214,17 +211,18 @@ object ConcurrentBench {
       System.err.println(f"[conc-mixed] n=$n%-2d wall $wall%7.2f s  throughput_x $tput%4.2f  " +
         f"ingest med ${med}ms p95 ${p95v}ms (solo ${soloMed}ms)  " +
         f"achieved ${achieved}%.0f rows/s of $ratePerSec  gc ${gcDelta}ms")
-      s"""{"n":$n,"wall":${num(wall)},"qps":${num(qps)},"throughput_x":${num(tput)},""" +
-        s""""stream_sec":[${streamSecs.map(num).mkString(",")}],""" +
-        s""""ingest_batches":${win.size},"ingest_ms_median":$med,"ingest_ms_p95":$p95v,""" +
-        s""""ingest_rows_per_sec":${num(achieved)},""" +
-        s""""gc_ms":$gcDelta,"bw_gbps":[${num(bw0)},${num(bw1)}]}"""
+      Json.obj("n" -> n, "wall" -> wall, "qps" -> qps, "throughput_x" -> tput,
+        "stream_sec" -> streamSecs, "ingest_batches" -> win.size,
+        "ingest_ms_median" -> med, "ingest_ms_p95" -> p95v,
+        "ingest_rows_per_sec" -> achieved, "gc_ms" -> gcDelta,
+        "bw_gbps" -> Seq(bw0, bw1))
     }
     spark.streams.removeListener(collector)
-    println(s"""{"metric":"concurrent_mixed","sf":"$sfDir","subset_n":${subset.size},""" +
-      s""""solo_sum":${num(soloSum)},"rate_rows_per_sec":$ratePerSec,"trigger_ms":$triggerMs,""" +
-      s""""ingest_solo_ms_median":$soloMed,"ingest_solo_ms_p95":${pct(soloWin.map(_._1), 95)},""" +
-      s""""runs":[${runs.mkString(",")}]}""")
+    println(Json.render(Json.obj("metric" -> "concurrent_mixed", "sf" -> sfDir,
+      "cores" -> Measure.cores(), "subset_n" -> subset.size, "solo_sum" -> soloSum,
+      "rate_rows_per_sec" -> ratePerSec, "trigger_ms" -> triggerMs,
+      "ingest_solo_ms_median" -> soloMed,
+      "ingest_solo_ms_p95" -> pct(soloWin.map(_._1), 95), "runs" -> runs)))
     spark.stop()
   }
 }

@@ -22,8 +22,9 @@ object Measure {
   def cores(): Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
-  /** Fixed-point number for hand-built JSON. Locale.ROOT: the JVM
-    * default locale may use a decimal comma, which is not a JSON number. */
+  /** Fixed-point number text, as [[Json]] writes numbers. Locale.ROOT:
+    * the JVM default locale may use a decimal comma, which is not a JSON
+    * number. */
   def num(d: Double, digits: Int = 3): String =
     s"%.${digits}f".formatLocal(java.util.Locale.ROOT, d)
 

@@ -182,7 +182,7 @@ object ScaleSmoke {
 
   private val Usage = "usage: sbt 'runMain graft.ScaleSmoke gate [rN]'"
 
-  private def n(d: Double): String = Measure.num(d, 2)
+  private def n(d: Double) = Json.Num(d, 2)
 
   /** The run's tag from `gate [rN]` (`rX` when omitted); None for any
     * other argument list. */
@@ -225,9 +225,11 @@ object ScaleSmoke {
     * is the stable signal a real scaling change must move. `prev_*` is
     * the prior's max-RATIO member and `prev_max_t_hi` THAT member's own
     * t_hi (ADVICE r18: mixing them compared absolutes of different
-    * queries); `prev_worst` names it. */
+    * queries); `prev_worst` names it. `cores` is the run's local[N],
+    * recorded because a ratio depends on it as much as on the code. */
   def verdict(lo: Map[String, Option[Double]], hi: Map[String, Option[Double]],
-      prior: Option[(String, String)], queries: Seq[String] = organicSubset): Verdict = {
+      prior: Option[(String, String)], cores: Int,
+      queries: Seq[String] = organicSubset): Verdict = {
     def times(q: String) = (lo.getOrElse(q, None), hi.getOrElse(q, None))
     def ratio(tl: Double, th: Double) = th / math.max(tl, LoClampSec)
     val rows = queries.map { name =>
@@ -235,10 +237,11 @@ object ScaleSmoke {
         case (Some(tl), Some(th)) =>
           val r = ratio(tl, th)
           val pass = th <= AbsFloorSec || r <= RatioMax
-          (name, s"""{"t_lo":${n(tl)},"t_hi":${n(th)},"ratio":${n(r)},"pass":$pass}""", pass)
+          (name, Json.obj("t_lo" -> n(tl), "t_hi" -> n(th), "ratio" -> n(r),
+            "pass" -> pass), pass)
         case (tl, th) =>
-          val f = (v: Option[Double]) => v.map(n).getOrElse("null")
-          (name, s"""{"t_lo":${f(tl)},"t_hi":${f(th)},"ratio":null,"pass":false}""", false)
+          (name, Json.obj("t_lo" -> tl.map(n), "t_hi" -> th.map(n), "ratio" -> None,
+            "pass" -> false), false)
       }
     }
     val failed = rows.collect { case (name, _, false) => name }
@@ -249,31 +252,34 @@ object ScaleSmoke {
         case _ => None
       }
     }.groupBy(_._1)
-    val prevRatios: Map[String, (Double, Double)] = prior.map { case (_, txt) =>
-      val re = """"([a-z0-9_]+)":\{"t_lo":[0-9.]+,"t_hi":([0-9.]+),"ratio":([0-9.]+)""".r
-      re.findAllMatchIn(txt)
-        .map(m => (m.group(1), m.group(2).toDouble, m.group(3).toDouble))
-        .collect { case (q, th, r) if th > AbsFloorSec => q -> (r, th) }.toMap
-    }.getOrElse(Map.empty)
-    val famJson = famRows.toSeq.sortBy(_._1).map { case (fam, qs) =>
+    val prevRatios = prior.map { case (tag, txt) => priorRatios(tag, txt) }
+      .getOrElse(Map.empty)
+    val families = famRows.toSeq.sortBy(_._1).map { case (fam, qs) =>
       val (_, worst, maxR, worstHi) = qs.maxBy(_._3)
-      val prevPairs = queries.filter(q => costFamily(q) == fam)
-        .flatMap(q => prevRatios.get(q).map(q -> _))
-      val (prevStr, prevHiStr, prevWorst) =
-        if (prevPairs.isEmpty) ("null", "null", "null")
-        else {
-          val (q, (r, th)) = prevPairs.maxBy(_._2._1)
-          (n(r), n(th), s""""$q"""")
-        }
-      s""""$fam":{"n":${qs.size},"max_ratio":${n(maxR)},"worst":"$worst","worst_t_hi":${n(worstHi)},"prev_max_ratio":$prevStr,"prev_max_t_hi":$prevHiStr,"prev_worst":$prevWorst}"""
-    }.mkString(",")
-    val prevTag = prior.map { case (t, _) => s""""$t"""" }.getOrElse("null")
-    val json = s"""{"mode":"scale_gate","fixture":"organic","mult_lo":$MultLo,"mult_hi":$MultHi,""" +
-      s""""ratio_max":$RatioMax,"abs_floor_sec":$AbsFloorSec,""" +
-      s""""queries":{${rows.map { case (k, v, _) => s""""$k":$v""" }.mkString(",")}},""" +
-      s""""prev_tag":$prevTag,"families":{$famJson},""" +
-      s""""failed":[${failed.map(f => s""""$f"""").mkString(",")}],"pass":${failed.isEmpty}}"""
+      val prev = queries.filter(q => costFamily(q) == fam)
+        .flatMap(q => prevRatios.get(q).map(q -> _)).maxByOption(_._2._1)
+      fam -> Json.obj("n" -> qs.size, "max_ratio" -> n(maxR), "worst" -> worst,
+        "worst_t_hi" -> n(worstHi), "prev_max_ratio" -> prev.map(p => n(p._2._1)),
+        "prev_max_t_hi" -> prev.map(p => n(p._2._2)), "prev_worst" -> prev.map(_._1))
+    }
+    val json = Json.render(Json.obj("mode" -> "scale_gate", "fixture" -> "organic",
+      "mult_lo" -> MultLo, "mult_hi" -> MultHi, "ratio_max" -> Json.Num(RatioMax, 1),
+      "abs_floor_sec" -> Json.Num(AbsFloorSec, 1), "cores" -> cores,
+      "queries" -> Json.Obj(rows.map { case (k, v, _) => k -> v }),
+      "prev_tag" -> prior.map(_._1), "families" -> Json.Obj(families),
+      "failed" -> failed, "pass" -> failed.isEmpty))
     Verdict(json, failed)
+  }
+
+  /** The timed, non-exempt queries of the artifact `SCALE_<tag>.json`
+    * whose text is `text`: name -> (ratio, t_hi). */
+  def priorRatios(tag: String, text: String): Map[String, (Double, Double)] = {
+    val src = s"SCALE_$tag.json"
+    Json.fields(Json.get(Json.parse(text, src), "queries", src)).collect {
+      case (q, c) if Seq("t_lo", "t_hi", "ratio").forall(k => c.path(k).isNumber) &&
+          c.get("t_hi").asDouble > AbsFloorSec =>
+        q -> (c.get("ratio").asDouble, c.get("t_hi").asDouble)
+    }.toMap
   }
 
   /** Builds (or reuses) the x`mult` organic fixture set and returns its
@@ -391,7 +397,7 @@ object ScaleSmoke {
     val hi = timings(MultHi)
     val prior = priorTag(tag, Option(new java.io.File(".").list()).toSeq.flatten)
       .map(t => t -> Files.readString(Paths.get(s"SCALE_$t.json"), StandardCharsets.UTF_8))
-    val v = verdict(lo, hi, prior)
+    val v = verdict(lo, hi, prior, Measure.cores())
     Files.writeString(Paths.get(s"SCALE_$tag.json"), v.json + "\n")
     println(v.json)
     v

@@ -61,19 +61,9 @@ object Sessions {
     * sf0.01-0.1 fixtures never need 200 reducers). Wires GraftExtensions
     * like the cluster builder — the harness mains must exercise the same
     * injectFunction/injectOptimizerRule path a cluster deployment uses. */
-  def local(cores: Int, appName: String = "graft"): SparkSession = {
-    val b = tuned(SparkSession.builder().master(s"local[$cores]").appName(appName), cores)
+  def local(cores: Int, appName: String = "graft"): SparkSession =
+    tuned(SparkSession.builder().master(s"local[$cores]").appName(appName), cores)
       .config("spark.sql.extensions", "org.apache.spark.sql.graftext.GraftExtensions")
       .config("spark.ui.enabled", "false")
-    // Operator escape hatch: `SPARK_GRAFT_CONF=k=v;k=v` overlays the
-    // opinionated defaults (e.g. A/B-ing an AQE knob on a harness run)
-    // without a rebuild. Applied last, so it wins over `tuned`.
-    sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(';')).map(_.trim).filter(_.contains('='))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        b.config(k, v)
-      }
-    b.getOrCreate()
-  }
+      .getOrCreate()
 }

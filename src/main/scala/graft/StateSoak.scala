@@ -73,7 +73,7 @@ object StateSoak {
     /** One pipeline through load -> recover -> sustain. `mk` must build a
       * RESTARTABLE query (file sink; memory sinks cannot recover a
       * checkpoint), reading `in` and checkpointing under the given dir. */
-    def soak(name: String)(mk: (String, String, String) => StreamingQuery): String = {
+    def soak(name: String)(mk: (String, String, String) => StreamingQuery): (String, Json.Obj) = {
       val in = Files.createTempDirectory(s"soak-in-$name").toString
       val out = Files.createTempDirectory(s"soak-out-$name").toString
       val ck = Files.createTempDirectory(s"soak-ck-$name").toString
@@ -106,11 +106,11 @@ object StateSoak {
         f"[soak] $name%-14s load ${load.sec}%6.1f s (${rps(load)}%8.0f r/s)  " +
         f"recover ${rec.sec}%5.1f s  sustain ${sus.sec}%6.1f s (${rps(sus)}%8.0f r/s)  " +
         f"state ${sus.stateRows}%,d rows / ${sus.sstBytes / 1024 / 1024}%,d MB sst")
-      f""""$name":{"load_sec":${load.sec}%.1f,"load_rps":${rps(load)}%.0f,""" +
-        f""""recover_sec":${rec.sec}%.1f,""" +
-        f""""sustain_sec":${sus.sec}%.1f,"sustain_rps":${rps(sus)}%.0f,""" +
-        f""""state_rows_load":${load.stateRows},"state_rows_final":${sus.stateRows},""" +
-        f""""state_mem_mb":${sus.stateMem / 1024 / 1024},"sst_mb":${sus.sstBytes / 1024 / 1024}}"""
+      name -> Json.obj("load_sec" -> Json.Num(load.sec, 1),
+        "load_rps" -> Json.Num(rps(load), 0), "recover_sec" -> Json.Num(rec.sec, 1),
+        "sustain_sec" -> Json.Num(sus.sec, 1), "sustain_rps" -> Json.Num(rps(sus), 0),
+        "state_rows_load" -> load.stateRows, "state_rows_final" -> sus.stateRows,
+        "state_mem_mb" -> sus.stateMem / 1024 / 1024, "sst_mb" -> sus.sstBytes / 1024 / 1024)
     }
 
     val cells: Seq[(String, (String, String, String) => StreamingQuery)] = Seq(
@@ -199,7 +199,8 @@ object StateSoak {
       .map { case (name, mk) => soak(name)(mk) }
     require(results.nonEmpty, s"no soak cell matches ${only.getOrElse(Set.empty)}")
 
-    println(s"""{"metric":"state_soak","n_events":$n,"users":$users,${results.mkString(",")}}""")
+    println(Json.render(Json.Obj(Seq("metric" -> "state_soak", "n_events" -> n,
+      "users" -> users, "cores" -> Measure.cores()) ++ results)))
     spark.stop()
   }
 }

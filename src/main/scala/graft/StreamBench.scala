@@ -28,6 +28,8 @@ object StreamBench {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
+    // read before any cell runs: a ledger that does not parse stops here
+    val refOpt = StreamGate.load().filter(_.n == n)
     val in = Files.createTempDirectory("sbench-in").toString
     // 32 files -> 2 micro-batches at the file source's 16-file trigger cap
     Generators.writeCsvFiles(in, seed = 42, files = 32, perFile = n / 32)
@@ -97,19 +99,6 @@ object StreamBench {
         try q.processAllAvailable() finally q.stop()
       }
       (name, sec, files * perFile)
-    }
-
-    /** The capstone's doc wire shape (doc_id, ts, lang, source, text). */
-    def docsStream(in: String): org.apache.spark.sql.DataFrame = {
-      import org.apache.spark.sql.types._
-      val schema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("ts_s", LongType),
-        StructField("text", StringType), StructField("lang", StringType),
-        StructField("source", StringType)))
-      spark.readStream.schema(schema).json(in)
-        .withColumn("ts",
-          org.apache.spark.sql.functions.timestamp_seconds(
-            org.apache.spark.sql.functions.col("ts_s"))).drop("ts_s")
     }
 
     /** Job-9 capstone end-to-end: quota admission -> quality gate +
@@ -310,12 +299,12 @@ object StreamBench {
         // measure
         val lam = StreamingPipelines.dsirCalibrate(spark, "/root/testdata/sf0.001")
         runDocs("dsir_score_stateless", math.max(2048, n / 10)) { d =>
-          Sinks.file(StreamingPipelines.dsirScore(docsStream(d.in), lam),
+          Sinks.file(StreamingPipelines.dsirScore(Jobs.docSource(spark, d.in), lam),
             d.out, d.ckpt)
         }
       },
       runDocs("code_detect_stateless", math.max(2048, n / 10)) { d =>
-        Sinks.file(StreamingPipelines.codeDetect(docsStream(d.in)),
+        Sinks.file(StreamingPipelines.codeDetect(Jobs.docSource(spark, d.in)),
           d.out, d.ckpt)
       },
       // round-17: semantic eval decontamination at ingest — the frozen
@@ -328,7 +317,7 @@ object StreamBench {
         val eval = graft.operators.EmbeddingOps
           .embedEvalModel(spark, "/root/testdata/sf0.001")
         runDocs("embed_decontaminate_stateless", math.max(2048, n / 10)) { d =>
-          val withEmb = docsStream(d.in).withColumn("embedding",
+          val withEmb = Jobs.docSource(spark, d.in).withColumn("embedding",
             org.apache.spark.sql.functions.expr(
               "transform(sequence(0, 63), i -> cast(sin(doc_id * 0.37 + i) AS float))"))
           Sinks.file(StreamingPipelines.embedDecontaminate(withEmb, eval),
@@ -344,7 +333,7 @@ object StreamBench {
         val model = StreamingPipelines.sourceKlCalibrate(spark, "/root/testdata/sf0.001")
         runDocs("source_kl_windowed", math.max(2048, n / 10)) { d =>
           Sinks.file(StreamingPipelines.sourceKl(
-              docsStream(d.in).withWatermark("ts", "1 minute"),
+              Jobs.docSource(spark, d.in).withWatermark("ts", "1 minute"),
               model, windowDur = "5 minutes"),
             d.out, d.ckpt)
         }
@@ -366,7 +355,7 @@ object StreamBench {
           StreamingPipelines.dupSpanCalibrate(spark, "/root/testdata/sf0.001"))
         runDocs("dup_span_windowed", math.max(2048, n / 10)) { d =>
           Sinks.file(StreamingPipelines.dupSpanStream(
-              docsStream(d.in).withWatermark("ts", "1 minute"),
+              Jobs.docSource(spark, d.in).withWatermark("ts", "1 minute"),
               gramTable, windowDur = "5 minutes", minDup = 1L),
             d.out, d.ckpt)
         }
@@ -383,7 +372,7 @@ object StreamBench {
           StreamingPipelines.dupSpanRewriteCalibrate(spark, "/root/testdata/sf0.001"))
         runDocs("dup_span_rewrite_windowed", math.max(2048, n / 10)) { d =>
           Sinks.file(StreamingPipelines.dupSpanRewriteStream(
-              docsStream(d.in).withWatermark("ts", "1 minute"),
+              Jobs.docSource(spark, d.in).withWatermark("ts", "1 minute"),
               gramTable, windowDur = "5 minutes", minDup = 1L),
             d.out, d.ckpt)
         }
@@ -398,7 +387,7 @@ object StreamBench {
           StreamingPipelines.mediaNeardupCalibrate(spark, "/root/testdata/sf0.001"))
         runDocs("media_neardup_windowed", math.max(2048, n / 10)) { d =>
           Sinks.file(StreamingPipelines.mediaNeardupStream(
-              docsStream(d.in).withWatermark("ts", "1 minute"),
+              Jobs.docSource(spark, d.in).withWatermark("ts", "1 minute"),
               banded, windowDur = "5 minutes"),
             d.out, d.ckpt)
         }
@@ -415,7 +404,7 @@ object StreamBench {
           StreamingPipelines.mediaKeeperCalibrate(spark, "/root/testdata/sf0.001"))
         runDocs("media_keeper_windowed", math.max(2048, n / 10)) { d =>
           Sinks.file(StreamingPipelines.mediaKeeperStream(
-              docsStream(d.in).withWatermark("ts", "1 minute"),
+              Jobs.docSource(spark, d.in).withWatermark("ts", "1 minute"),
               calib, windowDur = "5 minutes"),
             d.out, d.ckpt)
         }
@@ -514,20 +503,18 @@ object StreamBench {
 
     spins += Measure.spinMs()
     bws += Measure.bwGbps()
-    val json = results.map { case (k, sec, rows) =>
-      val rps = if (sec > 0) rows / sec else 0.0
-      s""""$k":{"sec":${Measure.num(sec, 2)},"rows":$rows,"rows_per_sec":${Measure.num(rps, 0)}}"""
-    }.mkString(",")
+    val cells = results.map { case (k, sec, rows) =>
+      k -> Json.obj("sec" -> Json.Num(sec, 2), "rows" -> rows,
+        "rows_per_sec" -> Json.Num(if (sec > 0) rows / sec else 0.0, 0))
+    }
     // --- per-cell regression gate vs the committed stream_ref.json
     // (StreamGate's scaladoc has the contract; throughput normalizes by
     // MULTIPLYING with host_ratio — the seconds divisor, inverted)
-    def num(d: Double): String = Measure.num(d)
     val Measure.HostRatio(spinRatio, _, bwRatio, hostRatio) =
       Measure.hostRatio(spins.toSeq, bws.toSeq)
     val normRps: Map[String, Double] = results.map { case (k, sec, rows) =>
       k -> (if (sec > 0) rows / sec * hostRatio else 0.0)
     }.toMap
-    val refOpt = StreamGate.load().filter(_.n == n)
     val regs = refOpt.map(r => StreamGate.regressions(r.rps, normRps))
       .getOrElse(Seq.empty)
     val refN = refOpt.map(r => normRps.keysIterator.count(r.rps.contains))
@@ -537,14 +524,16 @@ object StreamBench {
       case None => ("unreferenced", "pass")
     }
     if (sys.env.get("SPARK_GRAFT_UPDATE_REF").contains("1")) {
-      val base = refOpt.map(_.rps).getOrElse(Map.empty)
-      StreamGate.save(StreamGate.RefFile, n, StreamGate.merged(base, normRps))
+      val baseN = StreamGate.update(StreamGate.RefFile, n, normRps)
       System.err.println(s"[stream-bench] ${StreamGate.RefFile} updated " +
-        s"(${normRps.size} cells into ${base.size} existing entries)")
+        s"(${normRps.size} cells into $baseN existing entries)")
     }
-    val gate =
-      s""""gate":{"spin_ratio":${num(spinRatio)},"bw_ratio":${num(bwRatio)},"host_ratio":${num(hostRatio)},"gate_kind":"$gateKind","ref_n":$refN,"unref_n":${normRps.size - refN},"regressions_n":${regs.size},"regressions":${StreamGate.regsJson(regs)},"verdict":"$verdict"}"""
-    println(s"""{"metric":"stream_throughput","n_events":$n,$json,$gate}""")
+    val gate = Json.obj("spin_ratio" -> spinRatio, "bw_ratio" -> bwRatio,
+      "host_ratio" -> hostRatio, "gate_kind" -> gateKind, "ref_n" -> refN,
+      "unref_n" -> (normRps.size - refN), "regressions_n" -> regs.size,
+      "regressions" -> StreamGate.regsJson(regs), "verdict" -> verdict)
+    println(Json.render(Json.Obj(Seq("metric" -> "stream_throughput", "n_events" -> n,
+      "cores" -> Measure.cores()) ++ cells :+ ("gate" -> gate))))
     spark.stop()
   }
 }

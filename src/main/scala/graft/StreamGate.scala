@@ -61,17 +61,28 @@ object StreamGate {
     }.toMap
 
   def load(path: String = RefFile): Option[Ref] =
-    Ledger.read(path)(txt => Ledger.field(txt, "n_events")
-      .map(n => Ref(n.toInt, Ledger.entries(txt, "norm_rps"))))
+    Json.read(path).map(j => Ref(Json.number(j, "n_events", path).asInt,
+      Json.numbers(j, "norm_rps", path)))
 
   def save(path: String, n: Int, rps: Map[String, Double]): Unit =
-    Ledger.write(path, Seq(s""""n_events": $n""",
-      s""""note": "best host-normalized rows/sec per StreamBench cell (measured_rps * host_ratio); gate = no cell below reference/${RatioLimit}; refresh via SPARK_GRAFT_UPDATE_REF=1"""",
-      Ledger.mapField("norm_rps", rps, digits = 1, perLine = 4)))
+    Json.writeLedger(path, Json.obj("n_events" -> n,
+      "note" -> s"best host-normalized rows/sec per StreamBench cell (measured_rps * host_ratio); gate = no cell below reference/${RatioLimit}; refresh via SPARK_GRAFT_UPDATE_REF=1",
+      "norm_rps" -> Json.sorted(rps, digits = 1)),
+      grouped = "norm_rps", perLine = 4)
 
-  /** Compact JSON for the stdout gate block (cap — the consumer tails
+  /** `SPARK_GRAFT_UPDATE_REF=1`: merges `rps` into the ledger at `path`
+    * and rewrites it; returns how many entries it held for `n`. A ledger
+    * that cannot be read throws before anything is written. */
+  def update(path: String, n: Int, rps: Map[String, Double]): Int = {
+    val base = load(path).filter(_.n == n).map(_.rps).getOrElse(Map.empty)
+    save(path, n, merged(base, rps))
+    base.size
+  }
+
+  /** Gate rows for the stdout gate block (capped — the consumer tails
     * the line). */
-  def regsJson(regs: Seq[Regression], cap: Int = 8): String =
-    Ledger.regsJson(regs.map(r => (r.cell, r.refRps, r.normRps, r.ratio)),
-      nameKey = "cell", digits = 1, cap)
+  def regsJson(regs: Seq[Regression], cap: Int = 8): Seq[Json.Obj] =
+    regs.take(cap).map(r => Json.obj("cell" -> r.cell,
+      "ref" -> Json.Num(r.refRps, 1), "norm" -> Json.Num(r.normRps, 1),
+      "ratio" -> Json.Num(r.ratio, 1)))
 }

@@ -20,21 +20,11 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // The codec escapes backslash, quote and every control char (<0x20):
+    // a tab or CR in builder-authored SQL must not make the driver's
+    // json.load fail and silently zero the round's correctness.
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Json.render(Json.Obj(SparkEntry.oracleSql.toSeq)))
     // Comparison-environment receipt (separate file — the driver's
     // json.load of oracle_sql.json must see only name->SQL pairs): the
     // LOCAL DuckDB version the oracles were developed against, so a
@@ -44,7 +34,8 @@ object Verify {
       Seq("python3", "-c", "import duckdb; print(duckdb.__version__)")).!!.trim)
       .getOrElse("unavailable")
     Files.writeString(Paths.get(s"$outDir/verify_meta.json"),
-      s"""{"duckdb_local": ${q(duckv)}, "spark": ${q(spark.version)}, "java": ${q(System.getProperty("java.version"))}}""")
+      Json.render(Json.obj("duckdb_local" -> duckv, "spark" -> spark.version,
+        "java" -> System.getProperty("java.version"))))
     spark.stop()
   }
 }

@@ -368,8 +368,8 @@ FROM (SELECT qid, vec_id, ad,
     * encoding correlated shares of it. This is the INDEPENDENCE half of
     * OPQ's objective (Ge et al. 2013, "Optimized Product Quantization":
     * rotate to minimize distortion = balance variance AND decorrelate
-    * subspaces); the RecallSweep round-16 receipt shows it is the half
-    * that matters for a single reflection — the variance-BALANCING
+    * subspaces); BASELINE.md "Round 16: OPQ rotation recall lane" shows
+    * it is the half that matters for a single reflection — the variance-BALANCING
     * reflection (v → uniform) was measured first and LOWERED flat-PQ
     * recall on concentrated geometry (0.367 → 0.267 on the anisotropic
     * fixture), because smearing one direction across all subspaces
@@ -490,9 +490,10 @@ FROM (SELECT qid, vec_id, ad,
     * onto coordinate 8 (subspace 1), stage 3 masks {0, 8} and targets
     * coordinate 16 (subspace 2). The single-reflection form can only
     * concentrate ONE direction; when cluster identity spans a 2-3-dim
-    * subspace (the multi-spanning RecallSweep fixture) the remaining
-    * identity directions stay smeared across every codebook — this
-    * chain hands each of the top three to its OWN subspace. Frames are
+    * subspace (the multi-spanning fixture of BASELINE.md "Round 17: OPQ
+    * beyond rank-1") the remaining identity directions stay smeared
+    * across every codebook — this chain hands each of the top three to
+    * its OWN subspace. Frames are
     * pinned between stages so each power iteration scans a
     * materialized input, not a growing expression tree. Cost: the
     * rank-1 calibration + 2 extra pinned-frame scans per added stage;
@@ -1175,9 +1176,9 @@ FROM sz"""),
   // probed cells' row count.
   /** e_knn_ivfpq's machinery with parametrized `nprobe`/`k` (round 14):
     * the registered query is exactly `ivfPqUntrained(_, _, 2, 3)`; the
-    * [[graft.RecallSweep]] receipt drives nprobe 1/2/4 over the SAME
-    * implementation so the published recall/cost frontier can never
-    * drift from the operator it grades. */
+    * recall-vs-nprobe sweep (BASELINE.md "Round-14: trained residual
+    * IVF-PQ + the recall-vs-nprobe sweep") drove nprobe 1/2/4 over the
+    * SAME implementation, so the published frontier grades this operator. */
   private[graft] def ivfPqUntrained(s: SparkSession, dir: String,
       nprobe: Int, k: Int): DataFrame = {
     val base = prepped(s, dir)
@@ -1357,7 +1358,8 @@ FROM (SELECT qid, vec_id, ad,
     * each cell's per-dimension mean with the family's 6dp + 1e-9 pins,
     * keep the previous centroid for cells that attracted nothing. One
     * corpus scan + a 16-row-bounded agg per step — full FAISS-style
-    * coarse training, priced on the RecallSweep misaligned fixture. */
+    * coarse training, priced on the misaligned fixture (BASELINE.md
+    * "Recall lane: trained coarse quantizer"). */
   private[graft] def coarseLloydStep(base: DataFrame, cents: DataFrame): DataFrame = {
     // assignment IS ivfAssign (the one definition — training, add,
     // probe, and this refinement must walk the same trajectory)

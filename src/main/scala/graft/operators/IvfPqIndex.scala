@@ -743,7 +743,8 @@ object IvfPqIndex {
     * priced against the build-time baseline — residuals ARE the
     * model-fit signal (a frozen coarse model codes a drifted
     * distribution with growing residuals, which 4-bit PQ quantizes
-    * badly; the RecallSweep misaligned lane prices the endpoint); a
+    * badly; BASELINE.md "Recall lane: trained coarse quantizer" prices
+    * the endpoint on the misaligned fixture); a
     * breach writes the create-once `_drift_alert`. The POLICY stays
     * external: a retrain needs a refreshed reference corpus only the
     * operator can designate — detection is wired in, the rebuild
@@ -1199,19 +1200,19 @@ object IvfPqIndex {
       /** Probe-depth knobs for [[filteredNprobe]] (round-19 verdict
         * task 7): `nprobeBase` is the unfiltered operating point,
         * `nprobeMax` the deepest probe the selectivity rule may
-        * recommend — 8 because the RecallSweep filtered_axis receipt
-        * prices the lever exactly over nprobe 1..8 (clustered recall
-        * 0 → 0.37). */
+        * recommend — 8 because BASELINE.md "Round 18: filtered-ANN
+        * recall lane" prices the lever exactly over nprobe 1..8
+        * (clustered recall 0 → 0.37). */
       nprobeBase: Int = 2,
       nprobeMax: Int = 8)
 
   /** SELECTIVITY-AWARE PROBE DEPTH for filtered search (round-19
     * verdict task 7). Filtered search probes cells by query GEOMETRY
     * alone, so a selective predicate thins each probed cell's candidate
-    * pool and recall collapses at the unfiltered operating point — the
-    * RecallSweep filtered_axis receipt prices the fix (clustered recall
-    * 0 at nprobe=1 → 0.37 at nprobe=8). The lever is cell-level
-    * overfetch: estimate the predicate's selectivity p from the
+    * pool and recall collapses at the unfiltered operating point —
+    * BASELINE.md "Round 18: filtered-ANN recall lane" prices the fix
+    * (clustered recall 0 at nprobe=1 → 0.37 at nprobe=8). The lever is
+    * cell-level overfetch: estimate the predicate's selectivity p from the
     * generation's coded table (ONE narrow pushed-filter aggregate over
     * the attr column — maintenance-tick cadence, not per probe) and
     * deepen so the expected surviving candidate mass matches the

@@ -133,6 +133,14 @@ object Jobs {
     // optional provenance; absent in older feeds -> coalesced to 'src0'
     org.apache.spark.sql.types.StructField("source", org.apache.spark.sql.types.StringType)))
 
+  /** The document stream in directory `in` (JSON lines in the wire
+    * format above), with `ts` a timestamp. */
+  def docSource(spark: SparkSession, in: String): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.{col, timestamp_seconds}
+    spark.readStream.schema(docWireSchema).json(in)
+      .withColumn("ts", timestamp_seconds(col("ts_s"))).drop("ts_s")
+  }
+
   /** Job 9 (beyond the reference — the LLM-corpus capstone): a streaming
     * training-data pipeline over a monitored directory of JSON document
     * lines: per-source admission quota
@@ -149,9 +157,7 @@ object Jobs {
   def corpusPipeline(spark: SparkSession, d: Dirs, evalGrams: Array[Long],
       quota: Long = 8L): (StreamingQuery, StreamingQuery, StreamingQuery) = {
     import org.apache.spark.sql.functions._
-    val docs = spark.readStream.schema(docWireSchema).json(d.in)
-      .withColumn("ts", timestamp_seconds(col("ts_s"))).drop("ts_s")
-    val routed = StatefulProcessors.quotaRouteStream(docs, quota).toDF()
+    val routed = StatefulProcessors.quotaRouteStream(docSource(spark, d.in), quota).toDF()
     def restore(df: org.apache.spark.sql.DataFrame) = df.select(
       col("doc_id"), timestamp_micros(col("ts_us")).as("ts"),
       col("lang"), col("text"), col("source"))

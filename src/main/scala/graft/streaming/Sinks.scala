@@ -463,7 +463,8 @@ final class ManifestedParquetSink(dataDir: String, manifestDir: String,
     // `autoReclusterAt` files of batch-arrival debris, re-cluster it
     // inline — between micro-batches is exactly where the single-writer
     // contract makes the swap safe (the stream is THIS thread; no append
-    // can be in flight). The SinkSoak receipt prices why: the per-batch
+    // can be in flight). BASELINE.md "Manifested-sink soak" (round 13)
+    // and "Round-14 SinkSoak re-run" price why: the per-batch
     // refresh cost is linear in file count, so an unmaintained live
     // table's ingest latency climbs without bound, while the threshold
     // policy resets the curve for one batch's worth of rewrite cost. A

@@ -115,7 +115,7 @@ class BenchGateSpec extends AnyFunSuite {
 
   test("regsJson clamps a non-finite ratio to valid JSON (ADVICE r18)") {
     val r = BenchGate.Regression("q_dead", 0.0, 1.0, Double.PositiveInfinity)
-    val j = BenchGate.regsJson(Seq(r))
+    val j = Json.render(BenchGate.regsJson(Seq(r)))
     assert(!j.contains("Infinity") && !j.contains("NaN"), j)
     assert(j.contains("\"q_dead\""))
   }

@@ -36,7 +36,7 @@ class ScaleSmokeSpec extends AnyFunSuite {
   private def run(cells: (String, Option[Double], Option[Double])*): JsonNode = {
     val v = ScaleSmoke.verdict(
       cells.map(c => c._1 -> c._2).toMap, cells.map(c => c._1 -> c._3).toMap,
-      prior = None, queries = cells.map(_._1))
+      prior = None, cores = 4, queries = cells.map(_._1))
     mapper.readTree(v.json)
   }
 
@@ -48,11 +48,12 @@ class ScaleSmokeSpec extends AnyFunSuite {
     val v = ScaleSmoke.verdict(
       cells.map { case (q, c) => q -> time(c.get("t_lo")) }.toMap,
       cells.map { case (q, c) => q -> time(c.get("t_hi")) }.toMap,
-      prior = Some("r18" -> read("SCALE_r18.json")))
+      prior = Some("r18" -> read("SCALE_r18.json")), cores = 8)
     val out = mapper.readTree(v.json)
 
-    assert(fields(out).map(_._1).toSet === fields(r19).map(_._1).toSet + "prev_tag")
+    assert(fields(out).map(_._1).toSet === fields(r19).map(_._1).toSet + "prev_tag" + "cores")
     assert(out.get("prev_tag").asText === "r18")
+    assert(out.get("cores").asInt === 8)
     Seq("mode", "fixture", "mult_lo", "mult_hi", "ratio_max", "abs_floor_sec",
       "failed", "pass").foreach(k => assert(out.get(k) === r19.get(k), k))
     assert(v.pass === r19.get("pass").asBoolean)
@@ -105,7 +106,7 @@ class ScaleSmokeSpec extends AnyFunSuite {
     assert(q.get("crash_hi").get("t_lo").asDouble === 1.0)
     assert(q.get("crash_hi").get("t_hi").isNull)
     assert(out.get("failed").elements().asScala.map(_.asText).toSeq === Seq("crash_hi", "crash_lo"))
-    assert(!ScaleSmoke.verdict(Map.empty, Map.empty, None, Seq("missing")).pass,
+    assert(!ScaleSmoke.verdict(Map.empty, Map.empty, None, 4, Seq("missing")).pass,
       "a query with no timing at all is a crash")
   }
 
@@ -147,13 +148,13 @@ class ScaleSmokeSpec extends AnyFunSuite {
     val prior = Some("r19" -> read("SCALE_r19.json"))
     val out = mapper.readTree(ScaleSmoke.verdict(
       Map("q_percentiles" -> Some(1.0)), Map("q_percentiles" -> Some(12.0)),
-      prior, Seq("q_percentiles")).json)
+      prior, 4, Seq("q_percentiles")).json)
     assert(out.get("prev_tag").asText === "r19")
     val fam = out.get("families").get("exact_percentile")
     assert(fam.get("prev_max_ratio").asDouble === 11.18)
     assert(fam.get("prev_max_t_hi").asDouble === 16.55)
     assert(fam.get("prev_worst").asText === "q_percentiles")
-    assert(mapper.readTree(ScaleSmoke.verdict(Map.empty, Map.empty, None, Nil).json)
+    assert(mapper.readTree(ScaleSmoke.verdict(Map.empty, Map.empty, None, 4, Nil).json)
       .get("prev_tag").isNull)
   }
 

@@ -31,7 +31,7 @@ class StreamGateSpec extends AnyFunSuite {
     // parseable precisely when a cell is most broken
     val regs = StreamGate.regressions(ref, Map("window_count" -> 0.0))
     assert(regs.nonEmpty && regs.head.ratio.isPosInfinity)
-    val j = StreamGate.regsJson(regs)
+    val j = Json.render(StreamGate.regsJson(regs))
     assert(!j.contains("Infinity") && !j.contains("NaN"), j)
     assert(j.contains("\"window_count\""))
   }

@@ -43,7 +43,7 @@ class AnnSweepInvariantsSpec extends SparkSpec {
   test("residual training lifts recall over the untrained codebook on clustered geometry") {
     val s = spark
     val dir = java.nio.file.Files.createTempDirectory("ann-clustered").toString
-    graft.RecallSweep.writeClusteredFixture(s, dir)
+    graft.AnnFixtures.writeClusteredFixture(s, dir)
     val truth = graft.SparkEntry.queries("e_knn_l2")(s, dir)
       .filter(col("rnk") <= 3).select(col("qid"), col("vec_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -79,7 +79,7 @@ class AnnSweepInvariantsSpec extends SparkSpec {
     // a win at fixed PQ resolution (BASELINE.md round-15 lane).
     val s = spark
     val dir = java.nio.file.Files.createTempDirectory("ann-misaligned").toString
-    graft.RecallSweep.writeMisalignedFixture(s, dir)
+    graft.AnnFixtures.writeMisalignedFixture(s, dir)
     val truth = graft.SparkEntry.queries("e_knn_l2")(s, dir)
       .filter(col("rnk") <= 3).select(col("qid"), col("vec_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -130,14 +130,14 @@ class AnnSweepInvariantsSpec extends SparkSpec {
       (approx & truth).size.toDouble / truth.size
     }
     val spanDir = java.nio.file.Files.createTempDirectory("ann-spanning").toString
-    graft.RecallSweep.writeSpanningFixture(s, spanDir)
+    graft.AnnFixtures.writeSpanningFixture(s, spanDir)
     val spanTrained = recallOn(spanDir, "e_knn_pq_trained")
     val spanOpq = recallOn(spanDir, "e_knn_opq")
     assert(spanOpq > spanTrained + 0.25,
       s"OPQ rotation stopped paying on spanning geometry: trained=$spanTrained opq=$spanOpq")
     assert(spanOpq >= 0.4, s"spanning OPQ recall regressed to $spanOpq")
     val anisoDir = java.nio.file.Files.createTempDirectory("ann-aniso").toString
-    graft.RecallSweep.writeAnisotropicFixture(s, anisoDir)
+    graft.AnnFixtures.writeAnisotropicFixture(s, anisoDir)
     val anisoTrained = recallOn(anisoDir, "e_knn_pq_trained")
     val anisoOpq = recallOn(anisoDir, "e_knn_opq")
     assert(anisoOpq >= anisoTrained,
@@ -175,13 +175,13 @@ class AnnSweepInvariantsSpec extends SparkSpec {
       (approx & truth).size.toDouble / truth.size
     }
     val spanDir = java.nio.file.Files.createTempDirectory("ann-span-ivf").toString
-    graft.RecallSweep.writeSpanningFixture(s, spanDir)
+    graft.AnnFixtures.writeSpanningFixture(s, spanDir)
     val spanTrained = recallOn(spanDir, EmbeddingOps.ivfPqTrainedResidual(s, spanDir, 2, 3))
     val spanOpq = recallOn(spanDir, EmbeddingOps.opqIvfPqTrainedResidual(s, spanDir, 2, 3))
     assert(spanOpq >= spanTrained + 0.1,
       s"OPQ-IVF-PQ stopped paying on spanning geometry: trained=$spanTrained opq=$spanOpq")
     val misDir = java.nio.file.Files.createTempDirectory("ann-mis-ivf").toString
-    graft.RecallSweep.writeMisalignedFixture(s, misDir)
+    graft.AnnFixtures.writeMisalignedFixture(s, misDir)
     val misTrained = recallOn(misDir, EmbeddingOps.ivfPqTrainedResidual(s, misDir, 2, 3))
     val misOpq = recallOn(misDir, EmbeddingOps.opqIvfPqTrainedResidual(s, misDir, 2, 3))
     assert(misOpq < misTrained,
@@ -216,7 +216,7 @@ class AnnSweepInvariantsSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val msDir = java.nio.file.Files.createTempDirectory("ann-multispan").toString
-    graft.RecallSweep.writeMultiSpanningFixture(s, msDir)
+    graft.AnnFixtures.writeMultiSpanningFixture(s, msDir)
     val rotated = EmbeddingOps.opq3Rotated(s, msDir)
       .getOrElse(fail("vacuous — empty multispan calibration"))
     val varByCoord = rotated
@@ -244,7 +244,7 @@ class AnnSweepInvariantsSpec extends SparkSpec {
     assert(isoOpq3 >= isoOpq + 0.1,
       s"rank-3 stopped paying on organic geometry: opq=$isoOpq opq3=$isoOpq3")
     val spanDir = java.nio.file.Files.createTempDirectory("ann-span-r17").toString
-    graft.RecallSweep.writeSpanningFixture(s, spanDir)
+    graft.AnnFixtures.writeSpanningFixture(s, spanDir)
     val spanOpq = recallOn(spanDir, "e_knn_opq")
     val spanOpq3 = recallOn(spanDir, "e_knn_opq3")
     assert(spanOpq3 >= 0.35,
@@ -287,13 +287,13 @@ class AnnSweepInvariantsSpec extends SparkSpec {
       (approx & truth).size.toDouble / truth.size
     }
     val cluDir = java.nio.file.Files.createTempDirectory("ann-clu-r17").toString
-    graft.RecallSweep.writeClusteredFixture(s, cluDir)
+    graft.AnnFixtures.writeClusteredFixture(s, cluDir)
     val cluTrained = recallOn(cluDir, EmbeddingOps.ivfPqTrainedResidual(s, cluDir, 2, 3))
     val cluOpqRes = recallOn(cluDir, EmbeddingOps.opqResidualKnn(s, cluDir, 2, 3))
     assert(cluOpqRes > cluTrained,
       s"residual-OPQ lost its clustered crown: trained=$cluTrained opqRes=$cluOpqRes")
     val misDir = java.nio.file.Files.createTempDirectory("ann-mis-r17").toString
-    graft.RecallSweep.writeMisalignedFixture(s, misDir)
+    graft.AnnFixtures.writeMisalignedFixture(s, misDir)
     val misTrained = recallOn(misDir, EmbeddingOps.ivfPqTrainedResidual(s, misDir, 2, 3))
     val misOpqPre = recallOn(misDir, EmbeddingOps.opqIvfPqTrainedResidual(s, misDir, 2, 3))
     val misOpqRes = recallOn(misDir, EmbeddingOps.opqResidualKnn(s, misDir, 2, 3))
@@ -303,7 +303,7 @@ class AnnSweepInvariantsSpec extends SparkSpec {
       s"residual-OPQ reached misaligned parity ($misTrained -> $misOpqRes) — " +
         "the opt-in rule is stale; update the BASELINE.md round-17 lane")
     val anisoDir = java.nio.file.Files.createTempDirectory("ann-aniso-r17").toString
-    graft.RecallSweep.writeAnisotropicFixture(s, anisoDir)
+    graft.AnnFixtures.writeAnisotropicFixture(s, anisoDir)
     val anisoTrained = recallOn(anisoDir, EmbeddingOps.ivfPqTrainedResidual(s, anisoDir, 2, 3))
     val anisoOpqRes = recallOn(anisoDir, EmbeddingOps.opqResidualKnn(s, anisoDir, 2, 3))
     assert(anisoOpqRes < anisoTrained,
@@ -342,14 +342,14 @@ class AnnSweepInvariantsSpec extends SparkSpec {
     assert(orgRows.forall(_._3 < 0.05),
       s"organic fracs should be near-uniform (~1/64): $orgRows")
     val spanDir = java.nio.file.Files.createTempDirectory("spec-span").toString
-    graft.RecallSweep.writeSpanningFixture(s, spanDir)
+    graft.AnnFixtures.writeSpanningFixture(s, spanDir)
     val (spanRows, spanRank) = read(spanDir)
     assert(spanRank === 1,
       s"spanning has one dominant direction; diagnostic must recommend rank 1, got $spanRank")
     assert(spanRows.head._3 > 0.5,
       s"spanning lambda1 should dominate the spectrum: $spanRows")
     val msDir = java.nio.file.Files.createTempDirectory("spec-mspan").toString
-    graft.RecallSweep.writeMultiSpanningFixture(s, msDir)
+    graft.AnnFixtures.writeMultiSpanningFixture(s, msDir)
     val (msRows, msRank) = read(msDir)
     assert(msRank === 2,
       s"multispan lambda2/lambda1 ~ 0.36, lambda3/lambda1 ~ 0.2; expected rank 2, got $msRank")
@@ -399,7 +399,7 @@ class AnnSweepInvariantsSpec extends SparkSpec {
   test("filtered search: scan-side predicate beats post-filtering, deeper nprobe is the overfetch lever (round-18 lane)") {
     val s = spark
     val dir = java.nio.file.Files.createTempDirectory("ann-filtered").toString
-    graft.RecallSweep.writeClusteredFixture(s, dir)
+    graft.AnnFixtures.writeClusteredFixture(s, dir)
     val attr = 7
     val pr = graft.Tables.t(s, dir, "embeddings")
       .withColumn("ed", expr("transform(embedding, x -> cast(x as double))"))

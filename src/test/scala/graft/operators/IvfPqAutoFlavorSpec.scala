@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{RecallSweep, SparkSpec}
+import graft.{AnnFixtures, SparkSpec}
 
 /** Flavor.Auto's decision procedure (round-18 verdict task 4), tied to
   * the round-17 recall-lane winners per fixture geometry so the choice
@@ -41,11 +41,11 @@ class IvfPqAutoFlavorSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory(s"auto_flavor_$name").toString
     name match {
       case "isotropic" => return "/root/testdata/sf0.001" // the near-isotropic organic lane
-      case "clustered" => RecallSweep.writeClusteredFixture(s, dir)
-      case "misaligned" => RecallSweep.writeMisalignedFixture(s, dir)
-      case "anisotropic" => RecallSweep.writeAnisotropicFixture(s, dir)
-      case "spanning" => RecallSweep.writeSpanningFixture(s, dir)
-      case "multispan" => RecallSweep.writeMultiSpanningFixture(s, dir)
+      case "clustered" => AnnFixtures.writeClusteredFixture(s, dir)
+      case "misaligned" => AnnFixtures.writeMisalignedFixture(s, dir)
+      case "anisotropic" => AnnFixtures.writeAnisotropicFixture(s, dir)
+      case "spanning" => AnnFixtures.writeSpanningFixture(s, dir)
+      case "multispan" => AnnFixtures.writeMultiSpanningFixture(s, dir)
     }
     dir
   }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.{RecallSweep, SparkSpec}
+import graft.{AnnFixtures, SparkSpec}
 
 /** The selectivity-aware probe depth (round-19 verdict task 7):
   * [[IvfPqIndex.filteredNprobe]] estimates the predicate's selectivity
@@ -65,11 +65,11 @@ class IvfPqFilteredNprobeSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory(s"np_lane_$name").toString
     name match {
       case "isotropic" => return "/root/testdata/sf0.001"
-      case "clustered" => RecallSweep.writeClusteredFixture(s, dir)
-      case "misaligned" => RecallSweep.writeMisalignedFixture(s, dir)
-      case "anisotropic" => RecallSweep.writeAnisotropicFixture(s, dir)
-      case "spanning" => RecallSweep.writeSpanningFixture(s, dir)
-      case "multispan" => RecallSweep.writeMultiSpanningFixture(s, dir)
+      case "clustered" => AnnFixtures.writeClusteredFixture(s, dir)
+      case "misaligned" => AnnFixtures.writeMisalignedFixture(s, dir)
+      case "anisotropic" => AnnFixtures.writeAnisotropicFixture(s, dir)
+      case "spanning" => AnnFixtures.writeSpanningFixture(s, dir)
+      case "multispan" => AnnFixtures.writeMultiSpanningFixture(s, dir)
     }
     dir
   }

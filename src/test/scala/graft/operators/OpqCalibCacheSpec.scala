@@ -32,7 +32,7 @@ class OpqCalibCacheSpec extends SparkSpec {
   test("a regenerated corpus at the same path invalidates the cached calibration") {
     val s = spark
     val dir = java.nio.file.Files.createTempDirectory("opq_calib_inval").toString
-    graft.RecallSweep.writeClusteredFixture(s, dir)
+    graft.AnnFixtures.writeClusteredFixture(s, dir)
     val onClustered = collected(graft.SparkEntry.queries("e_spectrum_decay")(s, dir))
     assert(onClustered.nonEmpty)
     // overwrite the corpus IN PLACE with different content (the sf0.001
