@@ -393,28 +393,44 @@ object Bench {
     * in one JVM and print every pass beside a spin sample, so a bench
     * swing can be attributed (wide pass spread + spin spread = host band;
     * uniformly slower passes + flat spin = plan or data change) without
-    * re-running the whole registry. The receipt carries the bandwidth
-    * samples and the same host_ratio the per-query gate divides by, so
-    * its `norm_min` is directly comparable to a bench_ref.json entry. */
+    * re-running the whole registry. Each pass also splits off its
+    * construction seconds (building the DataFrame, before the action)
+    * and the Spark jobs started during construction and during the
+    * action, counted by a listener: construction jobs are the fixed
+    * per-query floor (schema inference, eager pins, driver-side
+    * training). The receipt carries the bandwidth samples and the same
+    * host_ratio the per-query gate divides by, so its `norm_min` is
+    * directly comparable to a bench_ref.json entry. */
   private def profile(spark: SparkSession, sfDir: String, name: String,
       passes: Int): Unit = {
     warmUp(spark, sfDir)
     spark.sparkContext.setLogLevel("ERROR")
     val fn = SparkEntry.queries(name)
+    val jobs = new Measure.JobCounter(spark.sparkContext)
     val spins = scala.collection.mutable.ArrayBuffer.empty[Double]
     val bws = scala.collection.mutable.ArrayBuffer(Measure.bwGbps())
-    val times = (1 to passes).map { i =>
+    val runs = (1 to passes).map { i =>
       val s0 = Measure.spinMs(); spins += s0
-      val dt = Measure.seconds(Measure.noop(fn(spark, sfDir)))
-      println(f"[profile] $name%-24s pass$i%-2d $dt%7.3f s   spin $s0%6.1f ms")
-      dt
+      val j0 = jobs.count()
+      val t0 = System.nanoTime()
+      val df = fn(spark, sfDir)
+      val construct = (System.nanoTime() - t0) / 1e9
+      val j1 = jobs.count()
+      val dt = construct + Measure.seconds(Measure.noop(df))
+      val (cj, aj) = (j1 - j0, jobs.count() - j1)
+      println(f"[profile] $name%-24s pass$i%-2d $dt%7.3f s   construct $construct%6.3f s" +
+        f"   jobs $cj%3d + $aj%-3d   spin $s0%6.1f ms")
+      (dt, construct, cj, aj)
     }
+    jobs.close()
     bws += Measure.bwGbps()
     val host = Measure.hostRatio(spins.toSeq, bws.toSeq).value
+    val times = runs.map(_._1)
     println(Json.render(Json.obj("query" -> name, "sf" -> sfDir,
       "cores" -> Measure.cores(), "passes" -> times, "min" -> times.min,
-      "max" -> times.max, "bw_gbps" -> bws, "host_ratio" -> host,
-      "norm_min" -> times.min / host)))
+      "max" -> times.max, "construct_s" -> runs.map(_._2),
+      "construct_jobs" -> runs.map(_._3), "action_jobs" -> runs.map(_._4),
+      "bw_gbps" -> bws, "host_ratio" -> host, "norm_min" -> times.min / host)))
     spark.stop()
   }
 }

@@ -31,7 +31,8 @@ import scala.jdk.CollectionConverters._
   *  - Updating: `SPARK_GRAFT_UPDATE_REF=1` merges the run into the
   *    ledger (per-query min of reference and measured, new queries
   *    added) and rewrites the file; committing it is a reviewed act,
-  *    so a one-off fast outlier cannot silently tighten the gate.
+  *    so a one-off fast outlier cannot silently tighten the gate. A run
+  *    at another sf than the ledger's refuses to update it.
   *
   * Noise floor: a regression must ALSO exceed the reference by
   * `NoiseFloorSec` absolute — the registry is full of 0.03-0.15 s
@@ -201,10 +202,16 @@ object BenchGate {
       grouped = "host_norm_sec", perLine = 6)
 
   /** `SPARK_GRAFT_UPDATE_REF=1`: merges `norms` into the ledger at
-    * `path` and rewrites it; returns how many entries it held for `sf`.
-    * A ledger that cannot be read throws before anything is written. */
+    * `path` and rewrites it; returns how many entries it held. A missing
+    * ledger is seeded. A ledger that cannot be read, or that holds
+    * another sf than the run's, throws before anything is written: a
+    * local sf0.001 run must not replace the sf0.1 references. */
   def update(path: String, sf: String, norms: Map[String, Double]): Int = {
-    val base = load(path).filter(_.sf == sf).map(_.norms).getOrElse(Map.empty)
+    val base = load(path).map { r =>
+      if (r.sf != sf) throw new IllegalStateException(
+        s"$path holds sf ${r.sf}; refusing to update it from a run at sf $sf")
+      r.norms
+    }.getOrElse(Map.empty)
     save(path, sf, merged(base, norms))
     base.size
   }

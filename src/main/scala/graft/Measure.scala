@@ -4,7 +4,9 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.util.control.NonFatal
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftext.ListenerBusDrain
 
 /** The measurement core every harness `main` shares: the core count, the
   * noop-sink action and wall timer, the fixture warm-up, the min-of-passes
@@ -46,6 +48,17 @@ object Measure {
     val t0 = System.nanoTime()
     body
     (System.nanoTime() - t0) / 1e9
+  }
+
+  /** Spark jobs started in `sc` since registration, counted by a
+    * listener. `count()` drains the listener bus first, so every job
+    * submitted before the call is in the figure. */
+  final class JobCounter(sc: org.apache.spark.SparkContext) extends SparkListener {
+    private val started = new AtomicLong
+    override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+    sc.addSparkListener(this)
+    def count(): Long = { ListenerBusDrain(sc); started.get }
+    def close(): Unit = sc.removeSparkListener(this)
   }
 
   /** Untimed warm-up: scan every fixture table once so the first timed

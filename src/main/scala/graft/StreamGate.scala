@@ -25,7 +25,8 @@ package graft
   *    noise is proportional, and single-shot cells (no min-of-passes)
   *    get the wider 2.5x band instead.
   *  - `SPARK_GRAFT_UPDATE_REF=1` merges (per-cell max, new cells
-  *    added); committing the file is a reviewed act.
+  *    added) at the ledger's n_events and refuses any other;
+  *    committing the file is a reviewed act.
   */
 object StreamGate {
 
@@ -71,10 +72,15 @@ object StreamGate {
       grouped = "norm_rps", perLine = 4)
 
   /** `SPARK_GRAFT_UPDATE_REF=1`: merges `rps` into the ledger at `path`
-    * and rewrites it; returns how many entries it held for `n`. A ledger
-    * that cannot be read throws before anything is written. */
+    * and rewrites it; returns how many entries it held. A missing ledger
+    * is seeded. A ledger that cannot be read, or that holds another
+    * n_events than the run's, throws before anything is written. */
   def update(path: String, n: Int, rps: Map[String, Double]): Int = {
-    val base = load(path).filter(_.n == n).map(_.rps).getOrElse(Map.empty)
+    val base = load(path).map { r =>
+      if (r.n != n) throw new IllegalStateException(
+        s"$path holds n_events ${r.n}; refusing to update it from a run at n_events $n")
+      r.rps
+    }.getOrElse(Map.empty)
     save(path, n, merged(base, rps))
     base.size
   }

@@ -13,27 +13,108 @@ final case class GQuery(
     oracle: Option[String],
     doc: String = "")
 
-/** Loaders for the driver's deterministic parquet fixtures (TESTDATA.md). */
+/** Loaders for the deterministic parquet fixture tables (TESTDATA.md).
+  *
+  * Each table's schema is inferred once per session: parquet inference
+  * starts a Spark job, and the registry reads these tables ~300 times a
+  * pass. A later read of the same file supplies the remembered schema
+  * (`spark.read.schema(s).parquet(path)`), which plans with no job. The
+  * entry is keyed on the file's canonical path plus the session confs
+  * that change what inference returns ([[InferenceConfs]]), and guarded
+  * by a stamp taken fresh on every call: size, modification time and
+  * file key of the file, or of every file under a Spark-written
+  * directory. A rewritten fixture therefore misses and is inferred
+  * again; the cache never serves a stale schema. A path the local
+  * filesystem cannot stamp is inferred on every read.
+  */
 object Tables {
+  import java.nio.file.{Files, Path, Paths}
+  import java.nio.file.attribute.BasicFileAttributes
+  import java.util.concurrent.TimeUnit
+  import org.apache.spark.sql.types._
+  import scala.jdk.CollectionConverters._
+
   val all: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir) else
-      normalizeNtz(spark.read.parquet(s"$dir/$name.parquet"))
+      normalizeNtz(read(spark, s"$dir/$name.parquet"))
+
+  /** Session confs that change the schema parquet inference returns;
+    * `events` sets the first. */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive")
+
+  /** (canonical path, inference confs) -> (stamp, schema), per session.
+    * Session keys are weak, like [[CorpusCache]]'s; a changed stamp
+    * replaces the entry, so each session holds one per table and conf
+    * set. Inference runs outside the lock: two racing misses infer the
+    * same schema, and the last write wins. */
+  private val schemas = new scala.collection.mutable.WeakHashMap[SparkSession,
+    scala.collection.mutable.Map[(String, Seq[String]), (String, StructType)]]
+
+  /** `spark.read.parquet(path)`, with the schema from the cache when the
+    * path's stamp and the inference confs match an earlier read. */
+  private def read(spark: SparkSession, path: String): DataFrame =
+    stamp(path) match {
+      case None => spark.read.parquet(path)
+      case Some((canon, st)) =>
+        val key = (canon, InferenceConfs.map(c => spark.conf.getOption(c).getOrElse("")))
+        val hit = schemas.synchronized {
+          schemas.get(spark).flatMap(_.get(key)).collect { case (s, schema) if s == st => schema }
+        }
+        hit match {
+          case Some(schema) => spark.read.schema(schema).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            val schema = df.schema
+            // A file rewritten while it was inferred keeps no entry.
+            if (stamp(path).contains((canon, st))) schemas.synchronized {
+              schemas.getOrElseUpdate(spark, scala.collection.mutable.Map.empty)
+                .put(key, (st, schema))
+            }
+            df
+        }
+    }
+
+  /** The path's canonical form and its stamp: relative name, size,
+    * modification time and file key of the file, or of every regular
+    * file under it when it is a directory. None when the local
+    * filesystem cannot see the path. */
+  private def stamp(path: String): Option[(String, String)] =
+    try {
+      val canon = Paths.get(path).toRealPath()
+      val leaves: Seq[Path] =
+        if (!Files.isDirectory(canon)) Seq(canon)
+        else {
+          val walk = Files.walk(canon)
+          try walk.iterator.asScala.filter(Files.isRegularFile(_)).toSeq.sorted
+          finally walk.close()
+        }
+      Some(canon.toString -> leaves.map { f =>
+        val a = Files.readAttributes(f, classOf[BasicFileAttributes])
+        s"${canon.relativize(f)}|${a.size}|${a.lastModifiedTime.to(TimeUnit.NANOSECONDS)}|" +
+          Option(a.fileKey).getOrElse("")
+      }.mkString(";"))
+    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Driver fixtures are written as parquet timestamp[us] with no UTC
     * adjustment, which Spark 4 infers as TIMESTAMP_NTZ — a type
     * `unix_micros`/`window()`/watermarks all reject. Cast every NTZ
-    * column (o_orderdate, l_shipdate, ...) back to TimestampType;
-    * lossless under the engine's pinned UTC session timezone. The swap
-    * recurses into struct/array/map types (a nested NTZ would otherwise
-    * pass through and still break downstream), and the source column is
-    * read backtick-quoted so a dotted column name resolves literally
-    * (matching withColumn's literal-name semantics). */
-  private def normalizeNtz(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types._
+    * column (o_orderdate, l_shipdate, ...) back to TimestampType in one
+    * projection; lossless under the engine's pinned UTC session
+    * timezone. Column order and names are kept. The swap recurses into
+    * struct/array/map types (a nested NTZ would otherwise pass through
+    * and still break downstream), and each column is read
+    * backtick-quoted so a dotted column name resolves literally. */
+  private[graft] def normalizeNtz(df: DataFrame): DataFrame = {
     def swap(dt: DataType): DataType = dt match {
       case TimestampNTZType => TimestampType
       case s: StructType   => StructType(s.fields.map(f => f.copy(dataType = swap(f.dataType))))
@@ -41,11 +122,13 @@ object Tables {
       case m: MapType      => m.copy(keyType = swap(m.keyType), valueType = swap(m.valueType))
       case other           => other
     }
-    df.schema.fields.foldLeft(df) { (d, f) =>
+    val fields = df.schema.fields
+    if (fields.forall(f => swap(f.dataType) == f.dataType)) df
+    else df.select(fields.toSeq.map { f =>
+      val c = df.col(s"`${f.name.replace("`", "``")}`")
       val swapped = swap(f.dataType)
-      if (swapped == f.dataType) d
-      else d.withColumn(f.name, d.col(s"`${f.name}`").cast(swapped))
-    }
+      if (swapped == f.dataType) c else c.cast(swapped).as(f.name)
+    }: _*)
   }
 
   /** Normalize the `events` fixture's `ts` to TimestampType regardless of
@@ -62,11 +145,11 @@ object Tables {
     */
   private def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/events.parquet")
+    val df = read(spark, s"$dir/events.parquet")
     df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
+      case LongType =>
         df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType => normalizeNtz(df)
+      case TimestampNTZType => normalizeNtz(df)
       case _ => df
     }
   }

@@ -167,6 +167,40 @@ class LedgerCodecSpec extends AnyFunSuite {
     assert(BenchGate.load(p).get === BenchGate.Ref("sf0.1", Map("q_a" -> 0.5, "q_b" -> 0.2)))
   }
 
+  test("an update at another scope than the ledger's throws and leaves the ledger byte-unchanged") {
+    val bench = temp("bench_ref_scope", bytes("bench_ref.json"))
+    val benchSf = BenchGate.load(bench).get.sf
+    val e1 = intercept[IllegalStateException](
+      BenchGate.update(bench, "sf0.001", Map("q5_region_revenue" -> 0.1)))
+    Seq(bench, benchSf, "sf0.001").foreach(w => assert(e1.getMessage.contains(w), e1.getMessage))
+    assert(bytes(bench) === bytes("bench_ref.json"))
+
+    val stream = temp("stream_ref_scope", bytes("stream_ref.json"))
+    val n = StreamGate.load(stream).get.n
+    val e2 = intercept[IllegalStateException](
+      StreamGate.update(stream, n + 1, Map("window_count" -> 1.0)))
+    Seq(stream, n.toString, (n + 1).toString).foreach(w =>
+      assert(e2.getMessage.contains(w), e2.getMessage))
+    assert(bytes(stream) === bytes("stream_ref.json"))
+  }
+
+  test("an update at the ledger's own scope still merges into the committed ledgers") {
+    val committed = BenchGate.load("bench_ref.json").get
+    val bench = temp("bench_ref_same", bytes("bench_ref.json"))
+    val (q, r) = committed.norms.head
+    assert(BenchGate.update(bench, committed.sf, Map(q -> r / 2, "q_brand_new" -> 1.0)) ===
+      committed.norms.size)
+    assert(BenchGate.load(bench).get ===
+      BenchGate.Ref(committed.sf, committed.norms + (q -> r / 2) + ("q_brand_new" -> 1.0)))
+
+    val sref = StreamGate.load("stream_ref.json").get
+    val stream = temp("stream_ref_same", bytes("stream_ref.json"))
+    val (c, v) = sref.rps.head
+    assert(StreamGate.update(stream, sref.n, Map(c -> v * 2, "new_cell" -> 5.0)) === sref.rps.size)
+    assert(StreamGate.load(stream).get ===
+      StreamGate.Ref(sref.n, sref.rps + (c -> v * 2) + ("new_cell" -> 5.0)))
+  }
+
   test("numbers keep fixed digits, strings escape, non-finite values clamp") {
     val j = Json.render(Json.obj("d" -> 1.5, "n" -> Json.Num(58.0, 1), "i" -> 3,
       "l" -> 4L, "b" -> true, "none" -> None, "some" -> Some(0.25),
