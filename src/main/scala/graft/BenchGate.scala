@@ -108,7 +108,7 @@ object BenchGate {
     * code, while a real mid-band regression trips every sample. */
   val ConsecutivePromote = 3
   /** Committed one-round memory for the two-consecutive rule: the
-    * previous gated run's suspect list ([[saveFlags]]), sf-tagged like
+    * previous gated run's suspect list ([[saveFlagCounts]]), sf-tagged like
     * the ledger. */
   val FlagsFile = "bench_flags.json"
   /** Independence gap for the two-consecutive rule: a prior suspect
@@ -148,21 +148,15 @@ object BenchGate {
       }
     }
 
-  /** The gate (round-18 policy): classify [[trips]] into immediate
-    * regressions vs one-round suspects per the [[SmallRefSec]] /
-    * [[HardFloorSec]] rules above. `priorSuspects` is the PREVIOUS
-    * gated sample's suspect set ([[loadFlags]]). */
-  def gate(ref: Map[String, Double], norm: Map[String, Double],
-      priorSuspects: Set[String]): GateResult =
-    gate(ref, norm, priorSuspects.map(_ -> 1).toMap)
-
-  /** Count-aware gate (round-19): `priorCounts` is the previous gated
-    * sample's suspect set with each query's consecutive-trip count
-    * ([[loadFlagCounts]]). A small trip promotes when it repeats at
-    * [[PromoteRatio]]+ magnitude OR when this trip is its
-    * [[ConsecutivePromote]]-th consecutive; otherwise it stays a
-    * suspect whose count increments in `suspectCounts`. A query that
-    * measures clean drops out entirely (counts reset, not accumulate). */
+  /** The gate: classify [[trips]] into immediate regressions vs
+    * suspects per the [[SmallRefSec]] / [[HardFloorSec]] rules above.
+    * `priorCounts` is the previous gated sample's suspect set with each
+    * query's consecutive-trip count ([[loadFlagCounts]]). A small trip
+    * promotes when it repeats at [[PromoteRatio]]+ magnitude OR when
+    * this trip is its [[ConsecutivePromote]]-th consecutive; otherwise
+    * it stays a suspect whose count increments in `suspectCounts`. A
+    * query that measures clean drops out entirely (counts reset, not
+    * accumulate). */
   def gate(ref: Map[String, Double], norm: Map[String, Double],
       priorCounts: Map[String, Int]): GateResult = {
     val (immediate, small) = trips(ref, norm).partition(t =>
@@ -216,19 +210,13 @@ object BenchGate {
     base.size
   }
 
-  /** Previous gated sample's suspect set, as PROMOTION INPUT: empty
-    * when the file is missing, tagged with a different sf, or YOUNGER
-    * than [[MinSampleGapMs]] (same-band samples are not independent
-    * evidence — see the field's scaladoc). A file that exists but does
-    * not parse throws. `now` is injectable for tests. */
-  def loadFlags(path: String = FlagsFile, sf: String,
-      now: Long = System.currentTimeMillis()): Set[String] =
-    loadFlagCounts(path, sf, now).keySet
-
-  /** Count-aware flags load (round-19): each suspect with its
-    * consecutive-trip count. Pre-round-19 flags files carry only the
-    * `suspects` array — those parse at count 1 (they recorded exactly
-    * one trip). Same staleness/sf guards as [[loadFlags]]. */
+  /** Previous gated sample's suspects with their consecutive-trip
+    * counts, as PROMOTION INPUT: empty when the file is missing, tagged
+    * with a different sf, or YOUNGER than [[MinSampleGapMs]] (same-band
+    * samples are not independent evidence — see the field's scaladoc).
+    * A file that exists but does not parse throws. Pre-round-19 flags
+    * files carry only the `suspects` array — those parse at count 1
+    * (they recorded exactly one trip). `now` is injectable for tests. */
   def loadFlagCounts(path: String = FlagsFile, sf: String,
       now: Long = System.currentTimeMillis()): Map[String, Int] =
     Json.read(path).filter { j =>
@@ -241,17 +229,12 @@ object BenchGate {
       else Json.get(j, "suspects", path).elements.asScala.map(_.asText -> 1).toMap
     }.getOrElse(Map.empty)
 
-  /** Persist THIS gated sample's suspect set (possibly empty — a calm
+  /** Persist THIS gated sample's suspects (possibly none — a calm
     * sample clearing a stale flag is the rule working, not data loss).
     * Committed alongside the round's artifacts, it is the "previous
-    * sample" the next round's gate run consults. */
-  def saveFlags(path: String, sf: String, suspects: Seq[String],
-      now: Long = System.currentTimeMillis()): Unit =
-    saveFlagCounts(path, sf, suspects.map(_ -> 1).toMap, now)
-
-  /** Count-aware flags save (round-19): the `suspects` array stays for
-    * readability/compat; `suspect_counts` carries each query's
-    * consecutive-trip count toward [[ConsecutivePromote]]. */
+    * sample" the next round's gate run consults. The `suspects` array
+    * stays for readability/compat; `suspect_counts` carries each
+    * query's consecutive-trip count toward [[ConsecutivePromote]]. */
   def saveFlagCounts(path: String, sf: String, counts: Map[String, Int],
       now: Long = System.currentTimeMillis()): Unit = {
     val names = counts.keys.toSeq.sorted

@@ -64,7 +64,6 @@ object OperatorIndex {
     "StatefulProcessors.heavyHitters" -> "q_cms_topk",
     "StatefulProcessors.topKPerKey" -> "q_topk_per_brand",
     "StatefulProcessors.packStream" -> "d_pack_sequences",
-    "StatefulProcessors.sourceQuotaStream" -> "d_source_quota",
     "StatefulProcessors.quotaRouteStream" -> "d_source_quota",
     "StatefulProcessors.reservoirStream" -> "d_reservoir_sample",
     "StatefulProcessors.staircaseWindows" -> "w4_hour_window",
@@ -74,11 +73,8 @@ object OperatorIndex {
     "StatefulProcessors.cepNegation" -> "x4_cep_negation",
     "StatefulProcessors.cepTimes" -> "x5_cep_times",
     "StatefulProcessors.cepTimesRange" -> "x6_cep_times_range",
-    "StatefulProcessors.cepTimesRangeTimers" -> "x6_cep_times_range",
     "StatefulProcessors.cepOneOrMore" -> "x7_cep_one_or_more",
-    "StatefulProcessors.cepOneOrMoreTimers" -> "x7_cep_one_or_more",
     "StatefulProcessors.cepSkipPast" -> "x8_cep_skip_past",
-    "StatefulProcessors.cepSkipPastTimers" -> "x8_cep_skip_past",
     "StatefulProcessors.cepSkipToNext" -> "x9_cep_skip_to_next",
     "StatefulProcessors.cepSkipToLast" -> "x10_cep_skip_to_last",
     "StatefulProcessors.cdcSnapshot" -> "q_cdc_apply",

@@ -38,12 +38,17 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    // Before any read, so every read in a session shares one cache key.
+    // It changes only INT64 TIMESTAMP(NANOS) columns, which only `events`
+    // can carry.
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if (name == "events") events(spark, dir) else
       normalizeNtz(read(spark, s"$dir/$name.parquet"))
+  }
 
   /** Session confs that change the schema parquet inference returns;
-    * `events` sets the first. */
+    * `t` sets the first. */
   private val InferenceConfs = Seq(
     "spark.sql.legacy.parquet.nanosAsLong",
     "spark.sql.parquet.binaryAsString",
@@ -144,7 +149,6 @@ object Tables {
     *     through unchanged.
     */
   private def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = read(spark, s"$dir/events.parquet")
     df.schema("ts").dataType match {
       case LongType =>

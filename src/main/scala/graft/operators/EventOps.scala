@@ -630,8 +630,9 @@ FROM r WHERE us3 IS NOT NULL AND us3 - us <= 21600000000"""),
   // = take the max k ≤ 4; a run that could only reach k = 1 is no match.
   // Plan: three lead()s + a CASE on ONE per-user window — the range
   // quantifier costs the same single exchange as times(3), zero joins.
-  // Streaming dual: StatefulProcessors.CepTimesRangeProcessor (O(horizon)
-  // pending anchors, emits on cap or horizon close).
+  // Streaming dual: StatefulProcessors.CepRangeProcessor (O(horizon)
+  // pending anchors, emits on cap, on a beyond-horizon arrival, or when
+  // the watermark passes the horizon).
   /** X6 core over any event frame — public so the streaming-equivalence
     * spec can run it on an augmented (flushed) event set. Generic in the
     * quantifier bounds: one lead() per possible run length, CASE ladder
@@ -690,7 +691,8 @@ FROM k WHERE n_times IS NOT NULL"""),
   // us-range frame minus the anchor's rn — identical to the arrival-
   // order streaming fold even when several clicks share a microsecond.
   // Plan: one exchange; the (us, event_id) sort serves both window
-  // specs. Streaming dual: StatefulProcessors.CepOneOrMoreProcessor.
+  // specs. Streaming dual: StatefulProcessors.CepRangeProcessor with
+  // minTimes = 1 and no cap (`cepOneOrMore`).
   /** X7 core over any event frame — public for the streaming-equivalence
     * spec, like [[cepTimesRangeBatch]]. */
   def cepOneOrMoreBatch(ev: DataFrame, gapUs: Long,
@@ -741,8 +743,9 @@ FROM g"""),
   // user with 10^9 clicks costs constant memory. The DuckDB oracle
   // walks the same chain with a recursive CTE over precomputed
   // horizon-end ranks (next anchor rank = this match's end rank + 1).
-  // Streaming dual: StatefulProcessors.CepSkipPastProcessor — O(1)
-  // state (just the open match), even cheaper than x7's pending list.
+  // Streaming dual: StatefulProcessors.CepSkipPastTimerProcessor — O(1)
+  // state (the open match and its timer), even cheaper than x7's
+  // pending list.
 
   /** One `typ` event of the per-user substream, microsecond-stamped. */
   private[graft] final case class ClickAt(event_id: Long, user_id: Long, us: Long)

@@ -20,9 +20,9 @@ object Jobs {
     * no null field reaches `Dataset[Ev]` — one malformed line must not
     * kill a stateful query with a deserialization NPE (the bad rows go to
     * the quarantine side, dropped here; route them to a sink if needed). */
-  private def typedSrc(spark: SparkSession, d: Dirs): org.apache.spark.sql.Dataset[Ev] = {
+  def typedSource(spark: SparkSession, in: String): org.apache.spark.sql.Dataset[Ev] = {
     import spark.implicits._
-    val (good, _) = StreamingPipelines.parseCsvQuarantine(spark.readStream.text(d.in))
+    val (good, _) = StreamingPipelines.parseCsvQuarantine(spark.readStream.text(in))
     good.as[Ev]
   }
 
@@ -96,7 +96,7 @@ object Jobs {
       windowMs: Long = 1000L, advanceMs: Long = 10000L, bufferMs: Long = 2000L,
       triggerMs: Long = 100L): StreamingQuery = {
     import spark.implicits._
-    val tagged = typedSrc(spark, d)
+    val tagged = typedSource(spark, d.in)
       .map(e => StatefulProcessors.PartEv((e.event_id % nPartitions).toInt, e))
     Sinks.file(
       StatefulProcessors
@@ -108,7 +108,7 @@ object Jobs {
   /** Job 7 (StatefulOperations.java): double-event alerts -> console. */
   def stateful(spark: SparkSession, d: Dirs): StreamingQuery =
     Sinks.console(
-      StatefulOps.doubleEventAlerts(typedSrc(spark, d)).toDF(),
+      StatefulOps.doubleEventAlerts(typedSource(spark, d.in)).toDF(),
       OutputMode.Append, d.ckpt)
 
   /** Job 8 (CourseUseCase.java, capstone): per-(user,action) window counts
@@ -118,7 +118,7 @@ object Jobs {
       StreamingPipelines.userActionWindowCount(src(spark, d)),
       s"${d.out}/counts", s"${d.ckpt}/counts")
     val durations = Sinks.file(
-      StatefulOps.sessionizeActions(typedSrc(spark, d), clearOn = "error").toDF(),
+      StatefulOps.sessionizeActions(typedSource(spark, d.in), clearOn = "error").toDF(),
       s"${d.out}/durations", s"${d.ckpt}/durations")
     (counts, durations)
   }

@@ -3,7 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, StatefulProcessorHandle, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** X1/X2 on Spark 4's `transformWithState` — the modern arbitrary-state
   * API and the closest analog of Flink's keyed `ValueState` (the
@@ -33,15 +33,38 @@ object StatefulProcessors {
     * silent key loses no owed emission — detector/CEP state whose pending
     * value can never fire again once real time has moved `d` past the
     * pattern horizon (pick `d` >> gap/threshold + max event-time skew).
-    * Processors whose expiry must EMIT (x6/x7/x8/x10 finalize-on-evidence
-    * runs, the timer sessionizer, the nearest join) or whose state IS the
-    * product (top-k, drift sums, quotas, packer fills, space-saving
-    * counters — all hard-bounded) do not take the knob; the full
-    * per-processor table lives in PLANS.md ("State-lifetime audit"). */
+    * Processors whose expiry must EMIT (the x6/x7/x8 runs the watermark
+    * finalizes, x10's finalize-on-evidence runs, the timer sessionizer,
+    * the nearest join) or whose state IS the product (top-k, drift sums,
+    * quotas, packer fills, space-saving counters — all hard-bounded) do
+    * not take the knob; the full per-processor table lives in PLANS.md
+    * ("State-lifetime audit"). */
   private def ttlOr(ttl: Option[java.time.Duration]): TTLConfig =
     ttl.map(TTLConfig(_)).getOrElse(TTLConfig.NONE)
   private[streaming] def ttlMode(ttl: Option[java.time.Duration]): TimeMode =
     if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
+
+  /** Delete-before-rearm: move the key's one timer to `want` (ms), or
+    * disarm it when `want` < 0. The armed expiry lives in `armed`, so a
+    * superseded timer is deleted instead of leaking into the timer store
+    * (one per batch per active key) until its natural expiry. */
+  private def rearm(h: StatefulProcessorHandle, armed: ValueState[Long], want: Long): Unit = {
+    val prev = if (armed.exists()) armed.get() else -1L
+    if (prev != want) {
+      if (prev >= 0L) h.deleteTimer(prev)
+      if (want >= 0L) { h.registerTimer(want); armed.update(want) } else armed.clear()
+    }
+  }
+
+  /** Watermark on `ts` `delay` behind the newest event, keyed by user,
+    * event-time timers: the wiring of every per-user processor whose
+    * state the watermark finalizes. Rows older than the watermark are
+    * dropped before the processor sees them. */
+  private def byUserEventTime[O: org.apache.spark.sql.Encoder](events: Dataset[Ev],
+      delay: String, p: StatefulProcessor[Long, Ev, O]): Dataset[O] =
+    events.withWatermark("ts", delay)
+      .groupByKey(_.user_id)(Encoders.scalaLong)
+      .transformWithState(p, TimeMode.EventTime(), OutputMode.Append())
 
   /** X1: remember last watched-event timestamp per user; alert when two
     * arrive within the threshold. */
@@ -163,15 +186,7 @@ object StatefulProcessors {
             sess.update((t, t, 1L))
         }
       }
-      cur().foreach { s =>
-        val want = s._2 + gapMs
-        val prev = if (armed.exists()) armed.get() else -1L
-        if (prev != want) {
-          if (prev >= 0L) getHandle.deleteTimer(prev)
-          getHandle.registerTimer(want)
-          armed.update(want)
-        }
-      }
+      cur().foreach(s => rearm(getHandle, armed, s._2 + gapMs))
       out.result().iterator
     }
 
@@ -252,9 +267,6 @@ object StatefulProcessors {
       .transformWithState(new SessionizeProcessor(clearOn, ttl),
         ttlMode(ttl), OutputMode.Append())
 
-  /** Timer-closed sessions; the watermark on `ts` (TimeMode.EventTime)
-    * drives timer expiry, so a session closes once event time provably
-    * moved past its gap — no further input needed for that key. */
   private implicit val faEnc = Encoders.product[FunnelAdvance]
 
   /** `ttl`: a funnel-expiry window — a user silent for `ttl` restarts
@@ -267,12 +279,12 @@ object StatefulProcessors {
       .transformWithState(new FunnelProcessor(steps, ttl),
         ttlMode(ttl), OutputMode.Append())
 
+  /** Timer-closed sessions; the watermark on `ts` (TimeMode.EventTime)
+    * drives timer expiry, so a session closes once event time provably
+    * moved past its gap — no further input needed for that key. */
   def sessionSummaries(events: Dataset[Ev], gapMs: Long = 5000L,
       delay: String = "10 seconds"): Dataset[SessionSummary] =
-    events.withWatermark("ts", delay)
-      .groupByKey(_.user_id)
-      .transformWithState(new SessionTimerProcessor(gapMs),
-        TimeMode.EventTime(), OutputMode.Append())
+    byUserEventTime(events, delay, new SessionTimerProcessor(gapMs))
 
   /** One space-saving counter: estimated count and max overestimation. */
   final case class HeavyHitter(shard: Int, item: String, est: Long, err: Long)
@@ -473,9 +485,12 @@ object StatefulProcessors {
       .transformWithState(new SequencePackerProcessor(binTokens, shards),
         TimeMode.None(), OutputMode.Append())
 
-  /** One document's admission decision from the online source quota. */
-  final case class QuotaDecision(source: String, doc_id: Long,
-      seq: Long, admitted: Boolean)
+  /** Full document row entering / leaving the routing quota (timestamps
+    * as epoch micros so the wire tuple stays primitive). */
+  final case class DocIn(source: String, doc_id: Long, ts_us: Long,
+      lang: String, text: String)
+  final case class RoutedDoc(source: String, doc_id: Long, ts_us: Long,
+      lang: String, text: String, seq: Long, admitted: Boolean)
 
   /** Online per-source quota — the streaming dual of the batch
     * `d_source_quota`. The batch query keeps the top-q documents per
@@ -485,54 +500,13 @@ object StatefulProcessors {
     * with `admitted = false` so a downstream splitter can route them to
     * a spill/backfill path (rather than silently vanishing — the same
     * auditability discipline as the late-data router). Deterministic in
-    * arrival order, doc_id order within a micro-batch. State is ONE
-    * counter per source — O(sources) forever, the same bounded-state
-    * argument as the online packer; a TTL would turn it into a
-    * quota-per-retention-window if sources should refresh. */
-  final class SourceQuotaProcessor(quota: Long)
-      extends StatefulProcessor[String, (String, Long), QuotaDecision] {
-
-    @transient private var admitted: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      admitted = getHandle.getValueState[Long]("admitted",
-        Encoders.scalaLong, TTLConfig.NONE)
-
-    override def handleInputRows(source: String, rows: Iterator[(String, Long)],
-        tv: TimerValues): Iterator[QuotaDecision] = {
-      var n = if (admitted.exists()) admitted.get() else 0L
-      val out = rows.toSeq.sortBy(_._2).map { case (_, docId) =>
-        n += 1
-        QuotaDecision(source, docId, n, n <= quota)
-      }
-      admitted.update(n)
-      out.iterator
-    }
-  }
-
-  private implicit val slEnc = Encoders.tuple(Encoders.STRING, Encoders.scalaLong)
-  private implicit val qdEnc = Encoders.product[QuotaDecision]
-
-  def sourceQuotaStream(docs: org.apache.spark.sql.DataFrame,
-      quota: Long = 8L): Dataset[QuotaDecision] =
-    docs.selectExpr("source", "doc_id")
-      .as[(String, Long)](slEnc)
-      .groupByKey(_._1)(Encoders.STRING)
-      .transformWithState(new SourceQuotaProcessor(quota),
-        TimeMode.None(), OutputMode.Append())
-
-  /** Full document row entering / leaving the routing quota (timestamps
-    * as epoch micros so the wire tuple stays primitive). */
-  final case class DocIn(source: String, doc_id: Long, ts_us: Long,
-      lang: String, text: String)
-  final case class RoutedDoc(source: String, doc_id: Long, ts_us: Long,
-      lang: String, text: String, seq: Long, admitted: Boolean)
-
-  /** [[SourceQuotaProcessor]] that CARRIES the document through the
-    * decision, so a pipeline can split admitted/spilled rows without a
-    * stream-stream join back to the payload (which would need
-    * watermark-bounded state of its own). Same counter semantics and
-    * O(sources) state; the payload rides the shuffle once. */
+    * arrival order, doc_id order within a micro-batch. The document
+    * rides through the decision, so a pipeline splits admitted/spilled
+    * rows without a stream-stream join back to the payload (which would
+    * need watermark-bounded state of its own). State is ONE counter per
+    * source — O(sources) forever, the same bounded-state argument as the
+    * online packer; a TTL would turn it into a quota-per-retention-window
+    * if sources should refresh. */
   final class QuotaRouteProcessor(quota: Long)
       extends StatefulProcessor[String, DocIn, RoutedDoc] {
 
@@ -668,10 +642,7 @@ object StatefulProcessors {
       // Arm/refresh the idleness check (onPeriodicEmit's micro-batch
       // stand-in); delete-before-rearm so one timer is live per key and
       // idleness is marked once, not once per superseded batch.
-      if (armed.exists()) getHandle.deleteTimer(armed.get())
-      val want = now + advanceMs + 1L
-      getHandle.registerTimer(want)
-      armed.update(want)
+      rearm(getHandle, armed, now + advanceMs + 1L)
       out.result().iterator
     }
 
@@ -805,10 +776,7 @@ object StatefulProcessors {
     * delayed finalization (event-time timers). */
   def nearestJoin(events: Dataset[Ev], tolUs: Long = 900000000L,
       delay: String = "10 seconds"): Dataset[NearestMatch] =
-    events.withWatermark("ts", delay)
-      .groupByKey(_.user_id)
-      .transformWithState(new NearestJoinProcessor(tolUs),
-        TimeMode.EventTime(), OutputMode.Append())
+    byUserEventTime(events, delay, new NearestJoinProcessor(tolUs))
 
   /** X3 output: one completed first->second->third sequence (event-time
     * microseconds per matched stage). */
@@ -1014,7 +982,7 @@ object StatefulProcessors {
       .transformWithState(new CepTimesProcessor(typ, gapUs, ttl),
         ttlMode(ttl), OutputMode.Append())
 
-  /** X6/X7 output: a finalized quantifier match — anchor, match size,
+  /** X6/X7/X8 output: a finalized quantifier match — anchor, match size,
     * and last member. */
   final case class CepRangeMatch(
       user_id: Long, first_id: Long, first_us: Long, n_times: Long, last_us: Long)
@@ -1023,71 +991,30 @@ object StatefulProcessors {
   private val pendingEnc = Encoders.tuple(Encoders.scalaLong,
     Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong)
 
-  /** X6 streaming dual (Flink-CEP `times(min, max)` range quantifier,
-    * greedy, relaxed contiguity): per key, every `typ` event opens an
-    * anchor; each later `typ` event inside the anchor's `gapUs` horizon
-    * grows every open anchor by one. An anchor finalizes by emitting its
-    * longest run when it either reaches `maxTimes` (the greedy cap — the
-    * batch x6 CASE ladder's first arm) or sees a `typ` event beyond its
-    * horizon (no further growth possible); runs shorter than `minTimes`
-    * die silently. State is the in-horizon pending-anchor list — the
-    * same gap-bounded O(horizon) contract as [[CepNegationProcessor]],
-    * never event volume. In-horizon anchors at stream end stay pending
-    * (emission needs proof the run cannot grow), matching the other CEP
-    * processors' finalize-on-evidence discipline. */
-  final class CepTimesRangeProcessor(typ: String, gapUs: Long,
-      minTimes: Int, maxTimes: Int)
-      extends StatefulProcessor[Long, Ev, CepRangeMatch] {
+  /** Timer deadline (ms) of a run anchored at `anchorUs`: one past the
+    * horizon, so the watermark must strictly pass it. */
+  private def horizonMs(anchorUs: Long, gapUs: Long): Long =
+    (anchorUs + gapUs) / 1000L + 1L
 
-    @transient private var pending: org.apache.spark.sql.streaming.ListState[(Long, Long, Long, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      pending = getHandle.getListState[(Long, Long, Long, Long)]("range_pending",
-        pendingEnc, TTLConfig.NONE)
-
-    override def handleInputRows(user: Long, rows: Iterator[Ev],
-        tv: TimerValues): Iterator[CepRangeMatch] = {
-      val out = Seq.newBuilder[CepRangeMatch]
-      // (first_id, first_us, count, last_us), insertion-ordered
-      var ps = (if (pending.exists()) pending.get().toVector else Vector.empty)
-      rows.toSeq.sortBy(e => (evUs(e), e.event_id))
-        .filter(_.event_type == typ).foreach { e =>
-          val us = evUs(e)
-          val (dead, live) = ps.partition { case (_, aUs, _, _) => us - aUs > gapUs }
-          dead.foreach { case (id, aUs, c, lUs) =>
-            if (c >= minTimes) out += CepRangeMatch(user, id, aUs, c, lUs)
-          }
-          ps = live.flatMap { case (id, aUs, c, _) =>
-            val c2 = c + 1
-            if (c2 >= maxTimes) { out += CepRangeMatch(user, id, aUs, c2, us); None }
-            else Some((id, aUs, c2, us))
-          }
-          ps = ps :+ ((e.event_id, us, 1L, us))
-        }
-      pending.clear()
-      if (ps.nonEmpty) pending.put(ps.toArray)
-      out.result().iterator
-    }
-  }
-
-  /** X6 wiring: times(2..4) range quantifier over the typed stream. */
-  def cepTimesRange(events: Dataset[Ev], typ: String = "click",
-      gapUs: Long = 21600000000L, minTimes: Int = 2, maxTimes: Int = 4): Dataset[CepRangeMatch] =
-    events.groupByKey(_.user_id)
-      .transformWithState(new CepTimesRangeProcessor(typ, gapUs, minTimes, maxTimes),
-        TimeMode.None(), OutputMode.Append())
-
-  /** X6 with EVENT-TIME-TIMER finalization — third instance of the timer
-    * recipe: pending range-quantifier anchors arm one per-key timer at
-    * the earliest deadline; the watermark passing an anchor's horizon
-    * finalizes it exactly as a beyond-horizon arrival would (emit when
-    * the run reached `minTimes`, drop silently otherwise). Same
-    * mechanical two steps as x7/x8; x10 is the one quantifier the recipe
-    * does NOT transfer to unchanged (its skip-to-last overlap re-anchors
-    * at the finalized match's last member, which only a subsequent
-    * ARRIVAL can extend — a timer would have to decide the singleton's
-    * fate without evidence). */
-  final class CepTimesRangeTimerProcessor(typ: String, gapUs: Long,
+  /** X6 and X7 streaming dual (Flink-CEP `times(min, max)` range
+    * quantifier, greedy, relaxed contiguity; x7's `oneOrMore` with
+    * noSkip is the same fold with `minTimes = 1` and no cap): per key,
+    * every `typ` event opens an anchor, and each later `typ` event
+    * inside the anchor's `gapUs` horizon grows every open anchor by one.
+    * An anchor finalizes with its longest run when it reaches `maxTimes`
+    * (the greedy cap — the batch x6 CASE ladder's first arm), when a
+    * `typ` event beyond its horizon arrives, or when the watermark
+    * passes its horizon; runs shorter than `minTimes` die silently.
+    *
+    * The watermark arm is the Watermarks paper's completeness rule: one
+    * event-time timer per key sits at the earliest pending deadline, so
+    * a key that goes silent is finalized by ANY key's traffic advancing
+    * the global watermark, with no further input of its own. State is
+    * the in-horizon pending-anchor list plus the armed expiry — bounded
+    * by the live horizon, never event volume. Rows older than the
+    * watermark are dropped before the fold (TimeMode.EventTime), so no
+    * late event can reopen a finalized anchor. */
+  final class CepRangeProcessor(typ: String, gapUs: Long,
       minTimes: Int, maxTimes: Int)
       extends StatefulProcessor[Long, Ev, CepRangeMatch] {
 
@@ -1103,22 +1030,13 @@ object StatefulProcessors {
     private def persist(ps: Vector[(Long, Long, Long, Long)]): Unit = {
       pending.clear()
       if (ps.nonEmpty) pending.put(ps.toArray)
-      val prev = if (armed.exists()) armed.get() else -1L
-      if (ps.isEmpty) {
-        if (prev >= 0L) { getHandle.deleteTimer(prev); armed.clear() }
-      } else {
-        val want = (ps.map(_._2).min + gapUs) / 1000L + 1L
-        if (prev != want) {
-          if (prev >= 0L) getHandle.deleteTimer(prev)
-          getHandle.registerTimer(want)
-          armed.update(want)
-        }
-      }
+      rearm(getHandle, armed, if (ps.isEmpty) -1L else horizonMs(ps.map(_._2).min, gapUs))
     }
 
     override def handleInputRows(user: Long, rows: Iterator[Ev],
         tv: TimerValues): Iterator[CepRangeMatch] = {
       val out = Seq.newBuilder[CepRangeMatch]
+      // (first_id, first_us, count, last_us), insertion-ordered
       var ps = (if (pending.exists()) pending.get().toVector else Vector.empty)
       rows.toSeq.sortBy(e => (evUs(e), e.event_id))
         .filter(_.event_type == typ).foreach { e =>
@@ -1146,174 +1064,50 @@ object StatefulProcessors {
       val out = done.sortBy { case (id, aUs, _, _) => (aUs, id) }.collect {
         case (id, aUs, c, lUs) if c >= minTimes => CepRangeMatch(user, id, aUs, c, lUs)
       }
-      armed.clear()
-      persist(rest)
-      out.iterator
-    }
-  }
-
-  /** X6 timer wiring: watermark-driven finalization of pending range
-    * anchors. */
-  def cepTimesRangeTimers(events: Dataset[Ev], typ: String = "click",
-      gapUs: Long = 21600000000L, minTimes: Int = 2, maxTimes: Int = 4,
-      delay: String = "10 seconds"): Dataset[CepRangeMatch] =
-    events.withWatermark("ts", delay)
-      .groupByKey(_.user_id)
-      .transformWithState(new CepTimesRangeTimerProcessor(typ, gapUs, minTimes, maxTimes),
-        TimeMode.EventTime(), OutputMode.Append())
-
-  /** X7 streaming dual (Flink-CEP `oneOrMore`, greedy, noSkip): like the
-    * range quantifier with no cap — every anchor emits exactly once,
-    * when a `typ` event beyond its horizon proves the match can no
-    * longer grow, carrying every in-horizon member (count ≥ 1 always
-    * matches, the anchor alone sufficing). noSkip: every event is also
-    * its own anchor, so overlapping runs emit from each start — Flink's
-    * default AfterMatchSkipStrategy. Same gap-bounded pending-list
-    * state as the range processor. */
-  final class CepOneOrMoreProcessor(typ: String, gapUs: Long)
-      extends StatefulProcessor[Long, Ev, CepRangeMatch] {
-
-    @transient private var pending: org.apache.spark.sql.streaming.ListState[(Long, Long, Long, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      pending = getHandle.getListState[(Long, Long, Long, Long)]("oom_pending",
-        pendingEnc, TTLConfig.NONE)
-
-    override def handleInputRows(user: Long, rows: Iterator[Ev],
-        tv: TimerValues): Iterator[CepRangeMatch] = {
-      val out = Seq.newBuilder[CepRangeMatch]
-      var ps = (if (pending.exists()) pending.get().toVector else Vector.empty)
-      rows.toSeq.sortBy(e => (evUs(e), e.event_id))
-        .filter(_.event_type == typ).foreach { e =>
-          val us = evUs(e)
-          val (dead, live) = ps.partition { case (_, aUs, _, _) => us - aUs > gapUs }
-          dead.foreach { case (id, aUs, c, lUs) =>
-            out += CepRangeMatch(user, id, aUs, c, lUs)
-          }
-          ps = live.map { case (id, aUs, c, _) => (id, aUs, c + 1L, us) } :+
-            ((e.event_id, us, 1L, us))
-        }
-      pending.clear()
-      if (ps.nonEmpty) pending.put(ps.toArray)
-      out.result().iterator
-    }
-  }
-
-  /** X7 wiring: greedy oneOrMore quantifier over the typed stream. */
-  def cepOneOrMore(events: Dataset[Ev], typ: String = "click",
-      gapUs: Long = 21600000000L): Dataset[CepRangeMatch] =
-    events.groupByKey(_.user_id)
-      .transformWithState(new CepOneOrMoreProcessor(typ, gapUs),
-        TimeMode.None(), OutputMode.Append())
-
-  /** X7 with EVENT-TIME-TIMER finalization — the variant the round-13
-    * state-lifetime audit names as the fix for x7's one honest ceiling:
-    * the arrival-driven processor can only emit an anchor's run when a
-    * LATER `typ` event for the same key proves the horizon passed, so a
-    * key that goes silent parks its pending list forever (and TTL can't
-    * evict it — expiry owes an emission). Here every batch re-arms one
-    * timer per key at the EARLIEST pending deadline (delete-before-
-    * rearm, the [[SessionTimerProcessor]] discipline); when the
-    * watermark passes it, the expired anchors emit and drop with no
-    * further input for that key — the w3/j4 pattern applied to the CEP
-    * quantifier. Arrival-driven finalization is kept (prompt emissions
-    * while the key is active); the timer catches the silent tail, so
-    * state is ALWAYS bounded by the live horizon. One global watermark
-    * advance (any key's traffic) flushes every quiet key — where the
-    * arrival-driven variant needs a per-key flush event. Same
-    * [[CepRangeMatch]] rows as x7; equivalence on complete input pinned
-    * in CepTimerSpec. */
-  final class CepOneOrMoreTimerProcessor(typ: String, gapUs: Long)
-      extends StatefulProcessor[Long, Ev, CepRangeMatch] {
-
-    @transient private var pending: org.apache.spark.sql.streaming.ListState[(Long, Long, Long, Long)] = _
-    @transient private var armed: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      pending = getHandle.getListState[(Long, Long, Long, Long)]("oomt_pending",
-        pendingEnc, TTLConfig.NONE)
-      armed = getHandle.getValueState[Long]("oomt_armed", Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    /** Re-arm the per-key timer at the earliest pending deadline (ms,
-      * one past the horizon so wm must strictly pass it). */
-    private def rearm(ps: Vector[(Long, Long, Long, Long)]): Unit = {
-      val prev = if (armed.exists()) armed.get() else -1L
-      if (ps.isEmpty) {
-        if (prev >= 0L) { getHandle.deleteTimer(prev); armed.clear() }
-      } else {
-        val want = (ps.map(_._2).min + gapUs) / 1000L + 1L
-        if (prev != want) {
-          if (prev >= 0L) getHandle.deleteTimer(prev)
-          getHandle.registerTimer(want)
-          armed.update(want)
-        }
-      }
-    }
-
-    private def persist(ps: Vector[(Long, Long, Long, Long)]): Unit = {
-      pending.clear()
-      if (ps.nonEmpty) pending.put(ps.toArray)
-      rearm(ps)
-    }
-
-    override def handleInputRows(user: Long, rows: Iterator[Ev],
-        tv: TimerValues): Iterator[CepRangeMatch] = {
-      val out = Seq.newBuilder[CepRangeMatch]
-      var ps = (if (pending.exists()) pending.get().toVector else Vector.empty)
-      rows.toSeq.sortBy(e => (evUs(e), e.event_id))
-        .filter(_.event_type == typ).foreach { e =>
-          val us = evUs(e)
-          val (dead, live) = ps.partition { case (_, aUs, _, _) => us - aUs > gapUs }
-          dead.foreach { case (id, aUs, c, lUs) =>
-            out += CepRangeMatch(user, id, aUs, c, lUs)
-          }
-          ps = live.map { case (id, aUs, c, _) => (id, aUs, c + 1L, us) } :+
-            ((e.event_id, us, 1L, us))
-        }
-      persist(ps)
-      out.result().iterator
-    }
-
-    override def handleExpiredTimer(user: Long, tv: TimerValues,
-        expired: ExpiredTimerInfo): Iterator[CepRangeMatch] = {
-      val wmUs = tv.getCurrentWatermarkInMs() * 1000L
-      var ps = (if (pending.exists()) pending.get().toVector else Vector.empty)
-      val (done, rest) = ps.partition { case (_, aUs, _, _) => wmUs > aUs + gapUs }
-      val out = done.sortBy { case (id, aUs, _, _) => (aUs, id) }
-        .map { case (id, aUs, c, lUs) => CepRangeMatch(user, id, aUs, c, lUs) }
       armed.clear() // the fired timer is gone; persist() re-arms for the rest
       persist(rest)
       out.iterator
     }
   }
 
-  /** X7 timer wiring: watermark on `ts` drives silent-key finalization. */
-  def cepOneOrMoreTimers(events: Dataset[Ev], typ: String = "click",
+  /** X6 wiring: times(2..4) range quantifier over the typed stream;
+    * the watermark on `ts` (`delay` behind the newest event) finalizes
+    * silent keys. */
+  def cepTimesRange(events: Dataset[Ev], typ: String = "click",
+      gapUs: Long = 21600000000L, minTimes: Int = 2, maxTimes: Int = 4,
+      delay: String = "10 seconds"): Dataset[CepRangeMatch] =
+    byUserEventTime(events, delay, new CepRangeProcessor(typ, gapUs, minTimes, maxTimes))
+
+  /** X7 wiring: greedy oneOrMore (noSkip) — the range processor with no
+    * lower bound beyond the anchor itself and no cap, so every anchor
+    * emits exactly once, carrying every in-horizon member; overlapping
+    * runs emit from each start (Flink's default AfterMatchSkipStrategy). */
+  def cepOneOrMore(events: Dataset[Ev], typ: String = "click",
       gapUs: Long = 21600000000L, delay: String = "10 seconds"): Dataset[CepRangeMatch] =
-    events.withWatermark("ts", delay)
-      .groupByKey(_.user_id)
-      .transformWithState(new CepOneOrMoreTimerProcessor(typ, gapUs),
-        TimeMode.EventTime(), OutputMode.Append())
+    byUserEventTime(events, delay, new CepRangeProcessor(typ, gapUs, 1, Int.MaxValue))
 
   /** X8 streaming dual (Flink-CEP AfterMatchSkipStrategy
     * `skipPastLastEvent` over oneOrMore): greedy NON-OVERLAPPING runs —
     * exactly one match is open per key at any moment; a `typ` event
-    * inside its `gapUs` horizon joins it, the first event beyond the
+    * inside its `gapUs` horizon joins it, and the first event beyond the
     * horizon closes and emits it and anchors the next. State is ONE
-    * tuple per key (the open match) — O(1), cheaper than x7's pending
-    * list, because skip-past forbids overlap by construction. The open
-    * match at stream end stays pending (finalize-on-evidence, like the
-    * other CEP processors); the batch x8 closes it at end-of-input, so
-    * the equivalence spec feeds a beyond-horizon flush event. */
-  final class CepSkipPastProcessor(typ: String, gapUs: Long)
+    * tuple per key (the open match) plus its armed expiry — O(1),
+    * because skip-past forbids overlap by construction. The open match
+    * arms a timer at its horizon (re-armed on every re-anchor); the
+    * watermark passing it emits and clears with no further input for
+    * that key, so the stream matches the batch x8 on the raw fixture off
+    * ONE global watermark advance (CepTimerSpec). */
+  final class CepSkipPastTimerProcessor(typ: String, gapUs: Long)
       extends StatefulProcessor[Long, Ev, CepRangeMatch] {
 
     @transient private var cur: ValueState[(Long, Long, Long, Long)] = _
+    @transient private var armed: ValueState[Long] = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      cur = getHandle.getValueState[(Long, Long, Long, Long)]("skip_cur",
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+      cur = getHandle.getValueState[(Long, Long, Long, Long)]("skipt_cur",
         pendingEnc, TTLConfig.NONE)
+      armed = getHandle.getValueState[Long]("skipt_armed", Encoders.scalaLong, TTLConfig.NONE)
+    }
 
     override def handleInputRows(user: Long, rows: Iterator[Ev],
         tv: TimerValues): Iterator[CepRangeMatch] = {
@@ -1332,66 +1126,7 @@ object StatefulProcessors {
           }
         }
       cur.update(st)
-      out.result().iterator
-    }
-  }
-
-  /** X8 wiring: skip-past-last-event segmentation over the typed stream. */
-  def cepSkipPast(events: Dataset[Ev], typ: String = "click",
-      gapUs: Long = 21600000000L): Dataset[CepRangeMatch] =
-    events.groupByKey(_.user_id)
-      .transformWithState(new CepSkipPastProcessor(typ, gapUs),
-        TimeMode.None(), OutputMode.Append())
-
-  /** X8 with event-time-timer finalization — the second instance of the
-    * [[CepOneOrMoreTimerProcessor]] recipe, proving the transfer claim:
-    * the one open match per key arms a timer at `anchor + gap`
-    * (delete-before-rearm on every re-anchor); the watermark passing it
-    * emits and clears with no further input for that key. Where the
-    * arrival-driven x8's equivalence spec must inject one flush event
-    * PER KEY and then exclude the flush anchors from the batch side,
-    * the timer variant matches the batch query on the raw fixture off
-    * ONE global watermark advance — no augmentation, no exclusion
-    * (CepTimerSpec). */
-  final class CepSkipPastTimerProcessor(typ: String, gapUs: Long)
-      extends StatefulProcessor[Long, Ev, CepRangeMatch] {
-
-    @transient private var cur: ValueState[(Long, Long, Long, Long)] = _
-    @transient private var armed: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      cur = getHandle.getValueState[(Long, Long, Long, Long)]("skipt_cur",
-        pendingEnc, TTLConfig.NONE)
-      armed = getHandle.getValueState[Long]("skipt_armed", Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    private def rearm(anchorUs: Long): Unit = {
-      val want = (anchorUs + gapUs) / 1000L + 1L
-      val prev = if (armed.exists()) armed.get() else -1L
-      if (prev != want) {
-        if (prev >= 0L) getHandle.deleteTimer(prev)
-        getHandle.registerTimer(want)
-        armed.update(want)
-      }
-    }
-
-    override def handleInputRows(user: Long, rows: Iterator[Ev],
-        tv: TimerValues): Iterator[CepRangeMatch] = {
-      val out = Seq.newBuilder[CepRangeMatch]
-      var st = if (cur.exists()) cur.get() else (-1L, -1L, -1L, -1L)
-      rows.toSeq.sortBy(e => (evUs(e), e.event_id))
-        .filter(_.event_type == typ).foreach { e =>
-          val us = evUs(e)
-          val (id, aUs, c, lUs) = st
-          if (id < 0L) st = (e.event_id, us, 1L, us)
-          else if (us - aUs <= gapUs) st = (id, aUs, c + 1L, us)
-          else {
-            out += CepRangeMatch(user, id, aUs, c, lUs)
-            st = (e.event_id, us, 1L, us)
-          }
-        }
-      cur.update(st)
-      if (st._1 >= 0L) rearm(st._2)
+      if (st._1 >= 0L) rearm(getHandle, armed, horizonMs(st._2, gapUs))
       out.result().iterator
     }
 
@@ -1405,19 +1140,17 @@ object StatefulProcessors {
         Iterator.single(CepRangeMatch(user, st._1, st._2, st._3, st._4))
       } else {
         // growable still (a re-anchor raced the fired timer): re-arm
-        if (st._1 >= 0L) rearm(st._2)
+        if (st._1 >= 0L) rearm(getHandle, armed, horizonMs(st._2, gapUs))
         Iterator.empty
       }
     }
   }
 
-  /** X8 timer wiring: watermark-driven finalization of the open segment. */
-  def cepSkipPastTimers(events: Dataset[Ev], typ: String = "click",
+  /** X8 wiring: skip-past-last-event segmentation over the typed stream;
+    * the watermark on `ts` finalizes the open segment. */
+  def cepSkipPast(events: Dataset[Ev], typ: String = "click",
       gapUs: Long = 21600000000L, delay: String = "10 seconds"): Dataset[CepRangeMatch] =
-    events.withWatermark("ts", delay)
-      .groupByKey(_.user_id)
-      .transformWithState(new CepSkipPastTimerProcessor(typ, gapUs),
-        TimeMode.EventTime(), OutputMode.Append())
+    byUserEventTime(events, delay, new CepSkipPastTimerProcessor(typ, gapUs))
 
   /** X9 output: one completed click+ -> purchase match (anchor click,
     * click count through the matched end event, end event id/us). */
@@ -1507,7 +1240,9 @@ object StatefulProcessors {
     * its last member (which the closing event may immediately extend or
     * close as a singleton — both handled in the same fold step), and
     * the chain's end-of-stream fixpoint stays pending until evidence
-    * arrives, like every CEP processor here. */
+    * arrives. Unlike x6/x7/x8 it takes no timer: only a later ARRIVAL
+    * can say whether the re-anchored singleton extends, and a timer
+    * would have to decide that without evidence. */
   final class CepSkipToLastProcessor(typ: String, gapUs: Long)
       extends StatefulProcessor[Long, Ev, CepRangeMatch] {
 
@@ -1864,10 +1599,7 @@ object StatefulProcessors {
       val effective = combined(floor)
       out ++= closeReady(effective)
       if (effective > floor) closedUpTo.update(effective)
-      if (armed.exists()) getHandle.deleteTimer(armed.get())
-      val want = now + advanceMs + 1L
-      getHandle.registerTimer(want)
-      armed.update(want)
+      rearm(getHandle, armed, now + advanceMs + 1L)
       out.result().iterator
     }
 

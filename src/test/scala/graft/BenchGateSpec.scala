@@ -14,7 +14,7 @@ class BenchGateSpec extends AnyFunSuite {
 
   test("a genuine 2x+ regression on a non-micro query is caught") {
     val measured = Map("q_fast" -> 0.060, "q_mid" -> 0.900, "q_heavy" -> 3.400)
-    val r = BenchGate.gate(ref, measured, Set.empty[String])
+    val r = BenchGate.gate(ref, measured, Map.empty[String, Int])
     assert(r.regressions.map(_.query) === Seq("q_heavy"),
       "a heavy (>= SmallRefSec ref) doubling fails immediately")
     assert(r.regressions.head.ratio > 2.0 && r.regressions.head.refSec === 1.500)
@@ -48,7 +48,7 @@ class BenchGateSpec extends AnyFunSuite {
     // a15_level_shift ref 0.135, banded-sample norm 0.313 (ratio 2.32,
     // +0.178 s — 28 ms past the old floor)
     val r = BenchGate.gate(Map("a15_level_shift" -> 0.135),
-      Map("a15_level_shift" -> 0.313), priorSuspects = Set.empty)
+      Map("a15_level_shift" -> 0.313), priorCounts = Map.empty)
     assert(r.regressions.isEmpty,
       "a one-off banded sample must not flip the verdict on a micro plan")
     assert(r.suspects.map(_.query) === Seq("a15_level_shift"))
@@ -58,20 +58,20 @@ class BenchGateSpec extends AnyFunSuite {
     // persistence alone: q_cdc_apply's envelope (2.2-2.6x on 3 of 4
     // same-binary samples) must stay a suspect forever, never weak
     val persistent = BenchGate.gate(Map("q_cdc_apply" -> 0.174),
-      Map("q_cdc_apply" -> 0.449), priorSuspects = Set("q_cdc_apply"))
+      Map("q_cdc_apply" -> 0.449), priorCounts = Map("q_cdc_apply" -> 1))
     assert(persistent.regressions.isEmpty &&
       persistent.suspects.map(_.query) === Seq("q_cdc_apply"),
       "a persistent 2.x-band trip must not promote")
     // persistence + magnitude: a prior-flagged query at >= 3x IS weak
     val real = BenchGate.gate(Map("a15_level_shift" -> 0.135),
       Map("a15_level_shift" -> 0.560),
-      priorSuspects = Set("a15_level_shift"))
+      priorCounts = Map("a15_level_shift" -> 1))
     assert(real.regressions.map(_.query) === Seq("a15_level_shift"),
       "a flagged query repeating at 4x is a real regression")
     assert(real.suspects.isEmpty)
     // magnitude without persistence stays a suspect (first sighting)
     val firstBig = BenchGate.gate(Map("a15_level_shift" -> 0.135),
-      Map("a15_level_shift" -> 0.560), priorSuspects = Set.empty)
+      Map("a15_level_shift" -> 0.560), priorCounts = Map.empty)
     assert(firstBig.regressions.isEmpty && firstBig.suspects.nonEmpty)
   }
 
@@ -103,7 +103,7 @@ class BenchGateSpec extends AnyFunSuite {
     BenchGate.saveFlagCounts(p, "sf0.1", Map("q_a" -> 2, "q_b" -> 1), now = t0)
     assert(BenchGate.loadFlagCounts(p, "sf0.1", now = later) ===
       Map("q_a" -> 2, "q_b" -> 1))
-    assert(BenchGate.loadFlags(p, "sf0.1", now = later) === Set("q_a", "q_b"),
+    assert(BenchGate.loadFlagCounts(p, "sf0.1", now = later).keySet === Set("q_a", "q_b"),
       "the set view stays consistent with the counts")
     // a pre-round-19 flags file (suspects array only, no counts) must
     // load each suspect at count 1 — it recorded exactly one trip
@@ -123,7 +123,7 @@ class BenchGateSpec extends AnyFunSuite {
   test("a prior suspect that measures clean is dropped (flags clear, not accumulate)") {
     val r = BenchGate.gate(Map("a15_level_shift" -> 0.135),
       Map("a15_level_shift" -> 0.150),
-      priorSuspects = Set("a15_level_shift"))
+      priorCounts = Map("a15_level_shift" -> 1))
     assert(r.regressions.isEmpty && r.suspects.isEmpty)
   }
 
@@ -131,40 +131,40 @@ class BenchGateSpec extends AnyFunSuite {
     // 0.15 -> 1.4 s is >1.0 s absolute excess: an 8x+ blow-up the capped
     // (<=3x) host normalization can never produce — a real scale-killer
     val r = BenchGate.gate(Map("q_fast2" -> 0.150),
-      Map("q_fast2" -> 1.400), priorSuspects = Set.empty)
+      Map("q_fast2" -> 1.400), priorCounts = Map.empty)
     assert(r.regressions.map(_.query) === Seq("q_fast2"))
     assert(r.suspects.isEmpty)
   }
 
   test("at-or-above-SmallRefSec references keep the immediate-fail rule") {
     val r = BenchGate.gate(Map("q_exact" -> BenchGate.SmallRefSec),
-      Map("q_exact" -> (BenchGate.SmallRefSec * 2 + 0.2)), priorSuspects = Set.empty)
+      Map("q_exact" -> (BenchGate.SmallRefSec * 2 + 0.2)), priorCounts = Map.empty)
     assert(r.regressions.map(_.query) === Seq("q_exact"))
     // the a14 calibration case: ref 0.237 is INSIDE the suspect class —
     // the same binary measured 1.8x and 3.1x an hour apart (BASELINE.md)
     val r2 = BenchGate.gate(Map("a14_rolling_dau" -> 0.237),
-      Map("a14_rolling_dau" -> 0.731), priorSuspects = Set.empty)
+      Map("a14_rolling_dau" -> 0.731), priorCounts = Map.empty)
     assert(r2.regressions.isEmpty && r2.suspects.map(_.query) === Seq("a14_rolling_dau"))
   }
 
   test("flags file round-trips, is sf-scoped and age-gated, and loads empty when missing") {
     val p = java.nio.file.Files.createTempFile("bench_flags", ".json").toString
     val t0 = 1000000000000L
-    BenchGate.saveFlags(p, "sf0.1", Seq("a15_level_shift", "q_other"), now = t0)
+    BenchGate.saveFlagCounts(p, "sf0.1", Map("a15_level_shift" -> 1, "q_other" -> 1), now = t0)
     val later = t0 + BenchGate.MinSampleGapMs + 1
-    assert(BenchGate.loadFlags(p, "sf0.1", now = later) ===
+    assert(BenchGate.loadFlagCounts(p, "sf0.1", now = later).keySet ===
       Set("a15_level_shift", "q_other"))
     // independence gap: a sample inside the same band window must not
     // count as the second of "two consecutive" (round-18 calibration:
     // back-to-back banded samples promoted noise)
-    assert(BenchGate.loadFlags(p, "sf0.1", now = t0 + 3600 * 1000L).isEmpty,
+    assert(BenchGate.loadFlagCounts(p, "sf0.1", now = t0 + 3600 * 1000L).keySet.isEmpty,
       "a young prior sample must not promote")
-    assert(BenchGate.loadFlags(p, "sf0.001", now = later).isEmpty,
+    assert(BenchGate.loadFlagCounts(p, "sf0.001", now = later).keySet.isEmpty,
       "a local-sf run must not consume sf0.1 flags")
-    BenchGate.saveFlags(p, "sf0.1", Seq.empty, now = t0)
-    assert(BenchGate.loadFlags(p, "sf0.1", now = later).isEmpty,
+    BenchGate.saveFlagCounts(p, "sf0.1", Map.empty, now = t0)
+    assert(BenchGate.loadFlagCounts(p, "sf0.1", now = later).keySet.isEmpty,
       "an empty save must clear stale flags")
-    assert(BenchGate.loadFlags("/tmp/definitely-missing-flags.json", "sf0.1").isEmpty)
+    assert(BenchGate.loadFlagCounts("/tmp/definitely-missing-flags.json", "sf0.1").keySet.isEmpty)
   }
 
   test("merge takes the per-query min and admits new queries") {

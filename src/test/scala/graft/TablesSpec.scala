@@ -84,6 +84,15 @@ class TablesSpec extends SparkSpec {
     }
   }
 
+  test("a table read before the session's first events read stays cached after it") {
+    val s = spark.newSession()
+    val (_, first) = jobsOf(s)(Tables.t(s, sf, "region").schema)
+    assert(first >= 1, "the first read in a session should infer (vacuous listener?)")
+    Tables.t(s, sf, "events").schema
+    val (_, again) = jobsOf(s)(Tables.t(s, sf, "region").schema)
+    assert(again == 0, s"region was inferred again after the events read: $again jobs")
+  }
+
   test("a cached read gives the uncached read's schema, order, nullability and rows") {
     val s = spark.newSession()
     Tables.all.foreach { t =>

@@ -12,17 +12,6 @@ import graft.{SparkEntry, SparkSpec}
   * transformWithState spec. */
 class CdcStreamSpec extends SparkSpec {
 
-  private def withRocksDb[A](f: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   private def ev(id: Long, tsMs: Long, user: Long, typ: String, v: Double): Ev =
     Ev(id, new Timestamp(tsMs), user, typ, v)
 

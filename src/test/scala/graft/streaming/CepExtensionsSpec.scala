@@ -11,17 +11,6 @@ import graft.{SparkEntry, SparkSpec}
   * other processors. */
 class CepExtensionsSpec extends SparkSpec {
 
-  private def withRocksDb[A](f: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   private def ev(id: Long, tsMs: Long, user: Long, typ: String): Ev =
     Ev(id, new Timestamp(tsMs), user, typ, 0.0)
 
@@ -400,14 +389,15 @@ class CepExtensionsSpec extends SparkSpec {
           ev(1, 1000, 1, "click"), ev(2, 1500, 1, "signup"),
           ev(3, 3000, 1, "click"), ev(4, 5000, 1, "click"),
           ev(5, 12000, 1, "click"), ev(6, 30000, 1, "click"),
-          // user 2: lone click — stays pending, nothing emits
+          // user 2: lone click — no later click closes it, but the
+          // watermark (30 s - 10 s delay) passes its horizon (1 s + 10 s)
           ev(7, 1000, 2, "click"))
         q.processAllAvailable()
         val rows = s.table("cepskip")
           .selectExpr("user_id", "first_id", "n_times", "last_us")
           .as[(Long, Long, Long, Long)].collect().toSet
         assert(rows === Set(
-          (1L, 1L, 3L, 5000000L), (1L, 5L, 1L, 12000000L)),
+          (1L, 1L, 3L, 5000000L), (1L, 5L, 1L, 12000000L), (2L, 7L, 1L, 1000000L)),
           s"skip-past segmentation wrong: $rows")
 
         // cross-batch: the pending run-3 anchor (click 6) grows with an

@@ -2,26 +2,18 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.{SparkEntry, SparkSpec}
 
-/** X7 with event-time-timer finalization: the silent-key emission the
-  * arrival-driven CEP processors cannot produce (the round-13 state-
-  * lifetime audit's named fix), plus batch equivalence on complete
-  * input. RocksDB provider like every transformWithState spec. */
+/** The timer-finalized x6/x7/x8 duals: a silent key's run emits once
+  * another key's traffic moves the watermark past its horizon, each
+  * dual equals its batch twin on the raw fixture after one global
+  * watermark advance, and an event older than the watermark is dropped
+  * without touching a finalized match. RocksDB provider like every
+  * transformWithState spec. */
 class CepTimerSpec extends SparkSpec {
-
-  private def withRocksDb[A](f: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
 
   private def ev(id: Long, tsMs: Long, user: Long, typ: String = "click"): Ev =
     Ev(id, new Timestamp(tsMs), user, typ, 1.0)
@@ -34,14 +26,14 @@ class CepTimerSpec extends SparkSpec {
       val gapUs = 5000000L // 5 s
       val in = MemoryStream[Ev]
       val q = StatefulProcessors
-        .cepOneOrMoreTimers(in.toDS(), gapUs = gapUs, delay = "1 second")
+        .cepOneOrMore(in.toDS(), gapUs = gapUs, delay = "1 second")
         .toDF().writeStream.outputMode("append")
         .option("checkpointLocation",
           java.nio.file.Files.createTempDirectory("cept-ck").toString)
         .format("memory").queryName("cep_timer").start()
       try {
-        // user 1: a 2-event run, then SILENCE — the arrival-driven x7
-        // would hold this forever
+        // user 1: a 2-event run, then SILENCE — no later user-1 click
+        // will ever close it
         in.addData(ev(1, 1000, 1), ev(2, 3000, 1))
         q.processAllAvailable()
         assert(s.table("cep_timer").count() === 0, "emitted without horizon proof")
@@ -73,7 +65,7 @@ class CepTimerSpec extends SparkSpec {
         .orderBy("ts", "event_id").as[Ev].collect().toSeq
       val maxMs = fixture.map(_.ts.getTime).max
       val in = MemoryStream[Ev]
-      val q = StatefulProcessors.cepSkipPastTimers(in.toDS(), gapUs = gapUs,
+      val q = StatefulProcessors.cepSkipPast(in.toDS(), gapUs = gapUs,
           delay = "1 second")
         .toDF().writeStream.outputMode("append")
         .option("checkpointLocation",
@@ -113,7 +105,7 @@ class CepTimerSpec extends SparkSpec {
         .orderBy("ts", "event_id").as[Ev].collect().toSeq
       val maxMs = fixture.map(_.ts.getTime).max
       val in = MemoryStream[Ev]
-      val q = StatefulProcessors.cepTimesRangeTimers(in.toDS(), gapUs = gapUs,
+      val q = StatefulProcessors.cepTimesRange(in.toDS(), gapUs = gapUs,
           minTimes = 2, maxTimes = 4, delay = "1 second")
         .toDF().writeStream.outputMode("append")
         .option("checkpointLocation",
@@ -151,7 +143,7 @@ class CepTimerSpec extends SparkSpec {
       val maxMs = fixture.map(_.ts.getTime).max
       val in = MemoryStream[Ev]
       val q = StatefulProcessors
-        .cepOneOrMoreTimers(in.toDS(), delay = "1 second")
+        .cepOneOrMore(in.toDS(), delay = "1 second")
         .toDF().writeStream.outputMode("append")
         .option("checkpointLocation",
           java.nio.file.Files.createTempDirectory("cept-eq-ck").toString)
@@ -160,7 +152,7 @@ class CepTimerSpec extends SparkSpec {
         in.addData(fixture)
         q.processAllAvailable()
         // ONE far-future event (sentinel key, non-typ) flushes every
-        // quiet key — the arrival-driven variant needs a per-key flush
+        // quiet key — no per-key flush click
         in.addData(ev(9999999L, maxMs + 30000000L, -1L, "view"))
         q.processAllAvailable()
         val stream = s.table("cep_timer_eq")
@@ -175,5 +167,59 @@ class CepTimerSpec extends SparkSpec {
           s"only-stream=${(stream -- batch).take(3)} only-batch=${(batch -- stream).take(3)}")
       } finally q.stop()
     }
+  }
+
+  /** User 1's clicks at 1, 3 and 4 s finalize when user 2's view moves
+    * the watermark (delay 1 s) to 59 s, past every 5-s horizon. Then two
+    * user-1 clicks at 5 and 5.5 s arrive: older than the watermark, so
+    * they must be dropped. Admitted, they would form a two-click run of
+    * their own that the second advance (to 119 s) finalizes, under every
+    * quantifier. */
+  private def lateClickCell(name: String,
+      cep: Dataset[Ev] => Dataset[StatefulProcessors.CepRangeMatch],
+      finalized: Set[(Long, Long, Long, Long)]): Unit =
+    withRocksDb {
+      val s = spark
+      import s.implicits._
+      implicit val sqlCtx = s.sqlContext
+      val in = MemoryStream[Ev]
+      val q = cep(in.toDS())
+        .toDF().writeStream.outputMode("append")
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory(s"cep-late-$name-ck").toString)
+        .format("memory").queryName(s"cep_late_$name").start()
+      def rows() = s.table(s"cep_late_$name")
+        .selectExpr("user_id", "first_id", "n_times", "last_us")
+        .as[(Long, Long, Long, Long)].collect().toSet
+      try {
+        in.addData(ev(1, 1000, 1), ev(2, 3000, 1), ev(3, 4000, 1))
+        q.processAllAvailable()
+        in.addData(ev(10, 60000, 2, "view"))
+        q.processAllAvailable()
+        assert(rows() === finalized, s"$name: finalization wrong")
+        in.addData(ev(4, 5000, 1), ev(5, 5500, 1))
+        q.processAllAvailable()
+        in.addData(ev(11, 120000, 2, "view"))
+        q.processAllAvailable()
+        assert(rows() === finalized, s"$name: a click older than the watermark changed the output")
+      } finally q.stop()
+    }
+
+  test("x6: a click older than the watermark is dropped and leaves the finalized runs unchanged") {
+    lateClickCell("x6",
+      StatefulProcessors.cepTimesRange(_, gapUs = 5000000L, delay = "1 second"),
+      Set((1L, 1L, 3L, 4000000L), (1L, 2L, 2L, 4000000L)))
+  }
+
+  test("x7: a click older than the watermark is dropped and leaves the finalized runs unchanged") {
+    lateClickCell("x7",
+      StatefulProcessors.cepOneOrMore(_, gapUs = 5000000L, delay = "1 second"),
+      Set((1L, 1L, 3L, 4000000L), (1L, 2L, 2L, 4000000L), (1L, 3L, 1L, 4000000L)))
+  }
+
+  test("x8: a click older than the watermark is dropped and leaves the finalized segment unchanged") {
+    lateClickCell("x8",
+      StatefulProcessors.cepSkipPast(_, gapUs = 5000000L, delay = "1 second"),
+      Set((1L, 1L, 3L, 4000000L)))
   }
 }

@@ -74,17 +74,6 @@ class CheckpointRecoverySpec extends SparkSpec {
     assert(sink.scan(spark, Seq(("event_id", 0L, Long.MaxValue))).count() === 130)
   }
 
-  private def withRocksDb[A](f: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   private def line(id: Long, tsUs: Long, user: Long, typ: String): String =
     s""""$id","$tsUs","$user","$typ","1.0""""
 
@@ -256,21 +245,21 @@ class CheckpointRecoverySpec extends SparkSpec {
 
   test("x7 one-or-more timers recover armed horizons across a restart") {
     cepTimerRestartCell("x7",
-      ds => StatefulProcessors.cepOneOrMoreTimers(ds, gapUs = 5000000L,
+      ds => StatefulProcessors.cepOneOrMore(ds, gapUs = 5000000L,
         delay = "1 second").toDF(),
       ev => graft.operators.EventOps.cepOneOrMoreBatch(ev, 5000000L))
   }
 
   test("x8 skip-past timers recover the open match across a restart") {
     cepTimerRestartCell("x8",
-      ds => StatefulProcessors.cepSkipPastTimers(ds, gapUs = 5000000L,
+      ds => StatefulProcessors.cepSkipPast(ds, gapUs = 5000000L,
         delay = "1 second").toDF(),
       ev => graft.operators.EventOps.cepSkipPastBatch(ev, 5000000L))
   }
 
   test("x6 times-range timers recover pending anchors across a restart") {
     cepTimerRestartCell("x6",
-      ds => StatefulProcessors.cepTimesRangeTimers(ds, gapUs = 5000000L,
+      ds => StatefulProcessors.cepTimesRange(ds, gapUs = 5000000L,
         minTimes = 2, maxTimes = 4, delay = "1 second").toDF(),
       ev => graft.operators.EventOps.cepTimesRangeBatch(ev, 5000000L, 2, 4))
   }

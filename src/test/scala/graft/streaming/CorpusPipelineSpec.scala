@@ -10,17 +10,6 @@ import graft.SparkSpec
   */
 class CorpusPipelineSpec extends SparkSpec {
 
-  private def withRocksDb[A](f: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   private def jline(id: Long, sec: Long, text: String): String =
     s"""{"doc_id":$id,"ts_s":$sec,"text":"$text","lang":"en"}"""
 

@@ -15,17 +15,6 @@ class FunnelSpec extends SparkSpec {
   private def ev(id: Long, sec: Long, user: Long, typ: String): Ev =
     Ev(id, new Timestamp(sec * 1000L), user, typ, 1.0)
 
-  private def withRocksDb[A](f: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("steps advance only in order, across batches, and out-of-order types don't") {
     withRocksDb {
     val s = spark

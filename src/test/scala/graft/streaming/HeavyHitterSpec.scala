@@ -31,18 +31,6 @@ class HeavyHitterSpec extends SparkSpec {
         item -> (r._2, r._3)
       }
 
-
-  private def withRocksDb[A](f: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("bounded counters: increment, inherit-on-evict, hot items survive") {
     withRocksDb {
     val s = spark

@@ -16,17 +16,6 @@ class IvfIngestSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private def withRocksDb[A](f: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   private def fixture = {
     val s = spark
     import s.implicits._

@@ -16,17 +16,6 @@ class PackStreamSpec extends SparkSpec {
     CurateDoc(id, new Timestamp(id * 1000L),
       (1 to nTokens).map(i => s"t$i").mkString(" "), "en")
 
-  private def withRocksDb[A](f: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("bins respect the budget, fill crosses batches, oversize docs isolate") {
     withRocksDb {
     val s = spark

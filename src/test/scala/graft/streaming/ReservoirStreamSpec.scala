@@ -19,17 +19,6 @@ class ReservoirStreamSpec extends SparkSpec {
   private val priExpr =
     "cast(conv(substring(md5(cast(doc_id AS string)),1,12),16,10) AS bigint)"
 
-  private def withRocksDb[A](f: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("stream reservoir converges to the batch bottom-k sample") {
     withRocksDb {
     val s = spark

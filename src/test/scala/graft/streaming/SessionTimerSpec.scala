@@ -15,18 +15,6 @@ class SessionTimerSpec extends SparkSpec {
   private def ev(id: Long, sec: Long, user: Long): Ev =
     Ev(id, new Timestamp(sec * 1000L), user, "click", 1.0)
 
-  // Timers use multiple state-store column families -> RocksDB provider.
-  private def withRocksDb[A](f: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("timer emits the session summary once the watermark passes the gap") {
     withRocksDb {
     val s = spark

@@ -9,7 +9,7 @@ import graft.SparkSpec
 // Top-level so codegen can construct it (Janino cannot see inner classes).
 case class QuotaDoc(doc_id: Long, ts: Timestamp, source: String, text: String)
 
-/** Online per-source quota ([[StatefulProcessors.sourceQuotaStream]]):
+/** Online per-source quota ([[StatefulProcessors.quotaRouteStream]]):
   * first-q admission per source with O(sources) state persisting across
   * micro-batches, over-quota docs emitted (not dropped) with
   * `admitted = false`; plus the stateless streaming Gopher-rule report
@@ -21,24 +21,14 @@ class SourceQuotaSpec extends SparkSpec {
   private def doc(id: Long, source: String, text: String = "x"): QuotaDoc =
     QuotaDoc(id, new Timestamp(id * 1000L), source, text)
 
-  private def withRocksDb[A](f: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("quota admits first q per source, counts cross batches, rejects ride along") {
     withRocksDb {
       val s = spark
       import s.implicits._
       implicit val sqlCtx = s.sqlContext
       val in = MemoryStream[QuotaDoc]
-      val q = StatefulProcessors.sourceQuotaStream(in.toDF(), quota = 2L)
+      val q = StatefulProcessors.quotaRouteStream(
+          in.toDF().selectExpr("*", "'en' AS lang"), quota = 2L)
         .writeStream.outputMode("append")
         .format("memory").queryName("quota_out").start()
       try {

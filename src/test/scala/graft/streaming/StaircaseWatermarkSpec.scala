@@ -27,17 +27,6 @@ class StaircaseWatermarkSpec extends SparkSpec {
   private def ev(id: Long, tsMs: Long, user: Long): Ev =
     Ev(id, new Timestamp(tsMs), user, "click", 1.0)
 
-  private def withRocksDb[A](f: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   private def sleepPast(anchorMs: Long, deltaMs: Long): Unit =
     while (System.currentTimeMillis() <= anchorMs + deltaMs) Thread.sleep(25)
 

@@ -12,17 +12,6 @@ case class EmbRow(vec_id: Long, embedding: Array[Float])
 
 class StreamingKnnSpec extends SparkSpec {
 
-  private def withRocksDb[A](f: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("rankings improve monotonically across batches with bounded state") {
     withRocksDb {
     val s = spark

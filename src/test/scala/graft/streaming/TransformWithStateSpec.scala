@@ -14,17 +14,6 @@ class TransformWithStateSpec extends SparkSpec {
   private def ev(id: Long, sec: Long, user: Long = 1L, typ: String = "error"): Ev =
     Ev(id, new Timestamp(sec * 1000L), user, typ, 1.0)
 
-  private def withRocksDb[A](f: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("X1 via transformWithState: ValueState survives batches, alerts within threshold") {
     withRocksDb {
       val s = spark

@@ -26,17 +26,6 @@ class TtlSpec extends SparkSpec {
   private def ev(id: Long, tsMs: Long, user: Long, typ: String): Ev =
     Ev(id, new Timestamp(tsMs), user, typ, 1.0)
 
-  private def withRocksDb[A](f: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   private def eventually(what: String, timeoutMs: Long = 30000L)(cond: => Boolean): Unit = {
     val deadline = System.currentTimeMillis() + timeoutMs
     while (!cond) {
