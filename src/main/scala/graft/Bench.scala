@@ -78,23 +78,44 @@ object Bench {
   def mayRetake(i: Int, n: Int, retakes: Int): Boolean =
     retakes.toLong * n < RetakeBudget.toLong * (i + 1)
 
-  /** Modes: no argument times the whole registry at `SPARK_GRAFT_SF_DIR`;
-    * `concurrent [mixed] [streams,...]` runs [[ConcurrentBench]];
-    * `profile <sfDir> <query> [passes=6]` runs [[profile]] (sfDir defaults
-    * to the registry run's). */
+  /** What one `Bench` run does: time the whole registry, or profile
+    * one query (see [[profile]]). */
+  sealed trait Mode
+  case object Registry extends Mode
+  final case class Profile(sfDir: Option[String], query: String, passes: Int) extends Mode
+
+  private val Usage = "usage: sbt 'runMain graft.Bench' | " +
+    "sbt 'runMain graft.Bench profile [sfDir] [query=q_percentiles] [passes=6]'"
+
+  /** No argument times the registry at `SPARK_GRAFT_SF_DIR`;
+    * `profile [sfDir] [query] [passes]` profiles one query (sfDir
+    * defaults to the registry run's). None for anything else, so a
+    * mistyped mode never starts a registry run (which at the ledger's
+    * sf rewrites `bench_flags.json`). */
+  def parseArgs(args: Seq[String]): Option[Mode] = args match {
+    case Seq() => Some(Registry)
+    case "profile" +: rest =>
+      val passes = rest.lift(2).fold(Option(6))(_.toIntOption.filter(_ > 0))
+      passes.map(Profile(rest.lift(0), rest.lift(1).getOrElse("q_percentiles"), _))
+    case _ => None
+  }
+
   def main(args: Array[String]): Unit = {
+    val mode = parseArgs(args.toSeq).getOrElse {
+      System.err.println(Usage)
+      sys.exit(2)
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val mode = args.headOption.getOrElse("")
-    val profiled = if (mode == "profile") Some(knownQuery(args.lift(2)
-      .getOrElse("q_percentiles"))) else None
+    mode match {
+      case Profile(_, query, _) => knownQuery(query)
+      case Registry =>
+    }
     val spark = Sessions.local(Measure.cores(), "graft-bench")
     spark.sparkContext.setLogLevel("WARN")
-    if (mode == "concurrent") {
-      ConcurrentBench.run(spark, sfDir, args.drop(1)); return
-    }
-    if (profiled.isDefined) {
-      profile(spark, args.lift(1).getOrElse(sfDir), profiled.get,
-        args.lift(3).map(_.toInt).getOrElse(6)); return
+    mode match {
+      case Profile(dir, query, passes) =>
+        profile(spark, dir.getOrElse(sfDir), query, passes); return
+      case Registry =>
     }
     // The committed gate files are read before any timing, so one that
     // does not parse stops the run at once (see BenchGate.load).
@@ -369,7 +390,7 @@ object Bench {
     * query absorbs ~4 s of one-time cost and round-over-round comparisons
     * drift with query naming. */
   private def warmUp(spark: SparkSession, sfDir: String): Unit = {
-    Measure.warmUp(spark, sfDir, "bench")
+    Measure.warmUp(spark, sfDir)
     SparkEntry.queries.get("d_minhash_sig").foreach { fn =>
       try Measure.noop(fn(spark, sfDir))
       catch { case _: Throwable => }

@@ -33,8 +33,8 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *    memory liability at 100 TB).
   *  - racing computes are benign: compute runs OUTSIDE the lock,
   *    last write wins, and both results are value-identical by
-  *    construction ([[ConcurrentBench]] runs registered queries from
-  *    many threads).
+  *    construction (registered queries may run from several threads
+  *    on one session).
   *  - a REPLACED entry's pinned blocks are released immediately
   *    ([[Checkpoints.unpin]]) — invalidation means the corpus at that
   *    path changed, so the old frame has no remaining legitimate

@@ -9,9 +9,9 @@ import com.fasterxml.jackson.core.{JsonGenerator, JsonProcessingException, Prett
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
 /** The one JSON codec of the harness: every receipt (Bench's line,
-  * BENCH_DETAIL and profile, ConcurrentBench, StreamBench, StateSoak, the
-  * scale verdict, Verify's files) and the three committed gate ledgers
-  * are written and read here, through the Jackson that ships with Spark.
+  * BENCH_DETAIL and profile, StreamBench, the scale verdict, Verify's
+  * files) and the three committed gate ledgers are written and read
+  * here, through the Jackson that ships with Spark.
   *
   * A value is built from plain Scala values: [[obj]] (fields in order,
   * so an object is never a Map), any other `Iterable` (an array),

@@ -65,11 +65,11 @@ object Measure {
     * pass is plan cost, not parquet-footer cost. A table missing from
     * `sfDir` is reported, not swallowed — a misconfigured directory must
     * not silently skip the warm-up. */
-  def warmUp(spark: SparkSession, sfDir: String, tag: String): Unit =
+  def warmUp(spark: SparkSession, sfDir: String): Unit =
     Tables.all.foreach { t =>
       try noop(Tables.t(spark, sfDir, t))
       catch { case NonFatal(e) =>
-        System.err.println(s"[$tag] warm-up skipping table '$t' in $sfDir: " +
+        System.err.println(s"[bench] warm-up skipping table '$t' in $sfDir: " +
           String.valueOf(e.getMessage).linesIterator.nextOption().getOrElse(""))
       }
     }

@@ -57,8 +57,6 @@ object OperatorIndex {
     "StreamingPipelines.slidingTopkCmsPaneStream" -> "w2e_sliding_cms_topk",
     "StreamingPipelines.ivfIngestAssign" -> "e_assign_confusion",
     "StreamingPipelines.ivfIngestDrift" -> "e_centroid_drift",
-    "StatefulProcessors.doubleEventAlerts" -> "x1_double_event_alert",
-    "StatefulProcessors.sessionizeActions" -> "x2_sessionize",
     "StatefulProcessors.funnelAdvances" -> "a9_funnel",
     "StatefulProcessors.sessionSummaries" -> "w3_session_window",
     "StatefulProcessors.heavyHitters" -> "q_cms_topk",

@@ -253,9 +253,9 @@ object StreamBench {
           .start(good, d.ckpt)
       },
       // round-14 (verdict-r13 task 6): throughput cells for the round-13
-      // processors, restart included. File sink (the StateSoak wiring) —
-      // the memory sink cannot recover from a checkpoint, and the
-      // restart IS the point of these cells.
+      // processors, restart included. File sink — the memory sink
+      // cannot recover from a checkpoint, and the restart IS the point
+      // of these cells.
       runRestart("cdc_snapshot") { d =>
         Sinks.file(StatefulProcessors.cdcSnapshot(
           Jobs.typedSource(spark, d.in)).toDF(), d.out, d.ckpt)

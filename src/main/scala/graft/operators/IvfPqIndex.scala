@@ -56,7 +56,7 @@ import graft.streaming.{FsIo, ManifestedParquetSink}
   * (vec_id, embedding), + a format version bumped on any trajectory
   * change) is checked by [[ensure]]; a changed source corpus or stale
   * format rebuilds. Builds are serialized per root within the JVM
-  * (ConcurrentBench runs queries in threads); cross-process concurrent
+  * (queries may run in threads); cross-process concurrent
   * builds are out of contract, like every single-writer path here.
   */
 object IvfPqIndex {
@@ -95,7 +95,7 @@ object IvfPqIndex {
   }
 
   /** Serialize index builds on `root` across THREADS (the JVM map —
-    * ConcurrentBench runs queries concurrently) AND across PROCESSES
+    * queries may run concurrently on one session) AND across PROCESSES
     * (an OS file lock on `root/.build_lock` — the registered query
     * derives a machine-global /tmp root from the fixture dir, so two
     * JVMs, e.g. a bench and a verify replica, can race the same root;

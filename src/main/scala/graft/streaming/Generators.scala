@@ -89,15 +89,16 @@ object Generators {
     }
   }
 
-  /** High-cardinality file-stream generator for state-scale soaks: writes
+  /** Keyed file-stream generator for state-bound runs (the feed of
+    * `BoundedStateSpec`'s load, restart and sustain phases): writes
     * `files` CSV files of `perFile` events each, generated PER FILE
     * (constant driver memory at any corpus size, unlike [[writeCsvFiles]]
     * which materializes the whole run). Event ids and timestamps grow
     * monotonically from `idOffset` (step = `stepUs`), so a second call
     * with `fileOffset`/`idOffset` advanced past the first extends the
-    * stream without name collisions or event-time regression — the
-    * restart half of a soak keeps the watermark moving forward. Users
-    * are drawn uniformly from `1..users` (the 10^6-key state domain). */
+    * stream without name collisions or event-time regression — a
+    * restart phase keeps the watermark moving forward. Users are drawn
+    * uniformly from `1..users` (the key domain). */
   def writeCsvFilesWide(dir: String, seed: Long, files: Int, perFile: Int,
       users: Int, stepUs: Long = 1000000L, fileOffset: Int = 0,
       idOffset: Long = 0L): Unit = {

@@ -5,13 +5,12 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, StatefulProcessorHandle, TimeMode, TimerValues, TTLConfig, ValueState}
 
-/** X1/X2 on Spark 4's `transformWithState` — the modern arbitrary-state
-  * API and the closest analog of Flink's keyed `ValueState` (the
-  * reference holds exactly one value slot per key,
-  * StatefulOperations.java:87-126, CourseUseCase.java:120-176). State
-  * lives in per-key `ValueState` handles backed by the RocksDB state
-  * store; [[StatefulOps]] keeps the `flatMapGroupsWithState` versions for
-  * the HDFS-backed store.
+/** The streaming duals on Spark 4's `transformWithState` (per-key
+  * value, list and timer state; it needs the RocksDB state store). X1
+  * and X2, the reference's own keyed-`ValueState` jobs
+  * (StatefulOperations.java:87-126, CourseUseCase.java:120-176), are not
+  * here: [[StatefulOps]] holds their one dual on `flatMapGroupsWithState`,
+  * which also runs on the default HDFS-backed store the jobs use.
   */
 object StatefulProcessors {
 
@@ -65,67 +64,6 @@ object StatefulProcessors {
     events.withWatermark("ts", delay)
       .groupByKey(_.user_id)(Encoders.scalaLong)
       .transformWithState(p, TimeMode.EventTime(), OutputMode.Append())
-
-  /** X1: remember last watched-event timestamp per user; alert when two
-    * arrive within the threshold. */
-  final class DoubleEventProcessor(watch: String, thresholdUs: Long,
-      ttl: Option[java.time.Duration] = None)
-      extends StatefulProcessor[Long, Ev, Alert] {
-
-    @transient private var lastTs: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      lastTs = getHandle.getValueState[Long]("lastTs", Encoders.scalaLong, ttlOr(ttl))
-
-    override def handleInputRows(user: Long, rows: Iterator[Ev],
-        tv: TimerValues): Iterator[Alert] = {
-      val out = Seq.newBuilder[Alert]
-      rows.toSeq.filter(_.event_type == watch)
-        .sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-          val tUs = e.ts.getTime * 1000L
-          // >= guard + max-update: a cross-batch late event must neither
-          // fire a negative-gap alert nor regress the stored timestamp.
-          if (lastTs.exists()) {
-            val prev = lastTs.get()
-            if (tUs >= prev && tUs - prev < thresholdUs)
-              out += Alert(user, e.event_id, e.ts, tUs - prev)
-            lastTs.update(math.max(prev, tUs))
-          } else lastTs.update(tUs)
-        }
-      out.result().iterator
-    }
-  }
-
-  /** X2: two-slot sessionizer; `clearOn` wipes the slot (Logout rule). */
-  final class SessionizeProcessor(clearOn: String,
-      ttl: Option[java.time.Duration] = None)
-      extends StatefulProcessor[Long, Ev, ActionDuration] {
-
-    @transient private var slot: ValueState[(String, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      slot = getHandle.getValueState[(String, Long)](
-        "slot", Encoders.tuple(Encoders.STRING, Encoders.scalaLong), ttlOr(ttl))
-
-    override def handleInputRows(user: Long, rows: Iterator[Ev],
-        tv: TimerValues): Iterator[ActionDuration] = {
-      val out = Seq.newBuilder[ActionDuration]
-      rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-        val tUs = e.ts.getTime * 1000L
-        if (slot.exists()) {
-          val (action, startUs) = slot.get()
-          if (tUs >= startUs) {
-            out += ActionDuration(user, e.event_id, action, tUs - startUs)
-            if (e.event_type == clearOn) slot.clear() else slot.update((e.event_type, tUs))
-          } // else: cross-batch late event older than the open slot — excluded
-        } else {
-          out += ActionDuration(user, e.event_id, "None", 0L)
-          if (e.event_type == clearOn) slot.clear() else slot.update((e.event_type, tUs))
-        }
-      }
-      out.result().iterator
-    }
-  }
 
   /** Session closed by an event-time timer: per-user summary. */
   final case class SessionSummary(
@@ -240,32 +178,8 @@ object StatefulProcessors {
   }
 
   private implicit val evEnc = Encoders.product[Ev]
-  private implicit val alertEnc = Encoders.product[Alert]
-  private implicit val adEnc = Encoders.product[ActionDuration]
   private implicit val longEnc = Encoders.scalaLong
   private implicit val ssEnc = Encoders.product[SessionSummary]
-
-  /** `ttl`: optional processing-time state TTL (see the object-level TTL
-    * note). For X1 a TTL >> threshold + max event-time skew is
-    * emission-preserving for on-time data — an alert needs two events
-    * within `thresholdUs`, so a slot silent in real time for much longer
-    * can only have fired for an extreme late replay. */
-  def doubleEventAlerts(events: Dataset[Ev], watch: String = "error",
-      thresholdUs: Long = 10000000L,
-      ttl: Option[java.time.Duration] = None): Dataset[Alert] =
-    events.groupByKey(_.user_id)
-      .transformWithState(new DoubleEventProcessor(watch, thresholdUs, ttl),
-        ttlMode(ttl), OutputMode.Append())
-
-  /** `ttl` here is a SESSION-ABANDONMENT timeout and deliberately
-    * visible: a user returning after `ttl` of real-time silence starts a
-    * fresh slot (emits the "None" row) instead of closing the abandoned
-    * one — the eviction analog of the `clearOn` Logout rule. */
-  def sessionizeActions(events: Dataset[Ev], clearOn: String = "error",
-      ttl: Option[java.time.Duration] = None): Dataset[ActionDuration] =
-    events.groupByKey(_.user_id)
-      .transformWithState(new SessionizeProcessor(clearOn, ttl),
-        ttlMode(ttl), OutputMode.Append())
 
   private implicit val faEnc = Encoders.product[FunnelAdvance]
 

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * tree reader returns exactly what the regex reader it replaced returned,
   * it rewrites each ledger byte for byte, and a ledger that exists but
   * does not parse fails loudly instead of grading a run as unreferenced. */
-class LedgerCodecSpec extends AnyFunSuite {
+class LedgerCodecSpec extends AnyFunSuite with TempRoot {
 
   /** The regex reader the codec replaced (`Ledger.read`/`field`/`entries`,
     * BenchGate's flags regexes and ScaleSmoke's prior-ratio pattern), kept
@@ -72,7 +72,7 @@ class LedgerCodecSpec extends AnyFunSuite {
   private def bytes(path: String): Array[Byte] = Files.readAllBytes(Paths.get(path))
   private def text(path: String): String = new String(bytes(path), StandardCharsets.UTF_8)
   private def temp(prefix: String, content: Array[Byte]): String = {
-    val p = Files.createTempFile(prefix, ".json")
+    val p = tempFile(prefix, ".json")
     Files.write(p, content)
     p.toString
   }

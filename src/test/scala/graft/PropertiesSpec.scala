@@ -107,7 +107,7 @@ class PropertiesSpec extends SparkSpec {
   private def eventsFixture(evs: Seq[Ev]): String = {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_prop_").toString
+    val dir = tempDir("graft_prop_")
     s.createDataset(evs).toDF()
       .withColumn("props", lit("k=1"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -117,7 +117,7 @@ class PropertiesSpec extends SparkSpec {
   private def docsFixture(texts: Seq[(Long, String)]): String = {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_prop_docs_").toString
+    val dir = tempDir("graft_prop_docs_")
     texts.toDF("doc_id", "text")
       .withColumn("lang", lit("en"))
       .withColumn("source", lit("gen"))

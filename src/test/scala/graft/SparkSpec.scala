@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared one-per-JVM test session (local[4], tiny shuffle fan-out). */
-trait SparkSpec extends AnyFunSuite {
+/** Shared one-per-JVM test session (local[4], tiny shuffle fan-out),
+  * and a temp root per suite ([[TempRoot]]). */
+trait SparkSpec extends AnyFunSuite with TempRoot {
   lazy val spark: SparkSession = SparkSpec.session
 
   /** Run `f` on the RocksDB state store (transformWithState needs it),

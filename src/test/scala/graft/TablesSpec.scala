@@ -71,9 +71,6 @@ class TablesSpec extends SparkSpec {
     assert(b.except(a).isEmpty, "rows only in the second frame")
   }
 
-  private def tempDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
   test("a repeat Tables.t plus .schema starts no Spark job, for every table") {
     val s = spark.newSession()
     Tables.all.foreach { t =>

@@ -34,8 +34,8 @@ class LayoutSpec extends SparkSpec {
     .select("l_orderkey", "l_partkey", "l_suppkey", "l_quantity")
 
   test("z-ordered write shrinks per-file min/max boxes in both dimensions") {
-    val plainDir = java.nio.file.Files.createTempDirectory("layout-plain").toString
-    val zDir = java.nio.file.Files.createTempDirectory("layout-z").toString
+    val plainDir = tempDir("layout-plain")
+    val zDir = tempDir("layout-z")
 
     // hash spread: every file sees the whole key range (the default
     // layout a 100 TB ingest produces without clustering)
@@ -66,8 +66,8 @@ class LayoutSpec extends SparkSpec {
     val big = src
       .withColumn("l_partkey", col("l_partkey") * 131072L)
       .withColumn("l_suppkey", col("l_suppkey") * 131072L)
-    val plainDir = java.nio.file.Files.createTempDirectory("layout-bigplain").toString
-    val zDir = java.nio.file.Files.createTempDirectory("layout-bigz").toString
+    val plainDir = tempDir("layout-bigplain")
+    val zDir = tempDir("layout-bigz")
     big.repartition(8).write.mode("overwrite").parquet(plainDir)
     Layout.writeZOrdered(big, "l_partkey", "l_suppkey", zDir, numFiles = 8)
     val plainArea = boxArea(plainDir, "l_partkey", "l_suppkey")
@@ -97,8 +97,8 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("3-column z-order: every clustered key earns scan skipping") {
-    val plainDir = java.nio.file.Files.createTempDirectory("layout-3plain").toString
-    val zDir = java.nio.file.Files.createTempDirectory("layout-3z").toString
+    val plainDir = tempDir("layout-3plain")
+    val zDir = tempDir("layout-3z")
     src.repartition(8).write.mode("overwrite").parquet(plainDir)
     Layout.writeZOrderedN(src, Seq("l_orderkey", "l_partkey", "l_suppkey"),
       zDir, numFiles = 32)
@@ -131,8 +131,8 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("compactSmallFiles: fewer files and scan tasks, same rows, skipping survives") {
-    val plainDir = java.nio.file.Files.createTempDirectory("layout-cplain").toString
-    val zDir = java.nio.file.Files.createTempDirectory("layout-cz").toString
+    val plainDir = tempDir("layout-cplain")
+    val zDir = tempDir("layout-cz")
     src.repartition(8).write.mode("overwrite").parquet(plainDir)
     // 64 deliberately-small z-files; consecutive bins then merge back to
     // ~16 — the same range partition the 16-file z-write would produce,
@@ -181,8 +181,8 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("manifest-pruned scan: fewer files opened on the z-layout, identical results") {
-    val plainDir = java.nio.file.Files.createTempDirectory("layout-mplain").toString
-    val zDir = java.nio.file.Files.createTempDirectory("layout-mz").toString
+    val plainDir = tempDir("layout-mplain")
+    val zDir = tempDir("layout-mz")
     src.repartition(8).write.mode("overwrite").parquet(plainDir)
     Layout.writeZOrdered(src, "l_partkey", "l_suppkey", zDir, numFiles = 16)
     val mPlain = Layout.buildManifest(spark, plainDir, Seq("l_partkey", "l_suppkey"))
@@ -219,7 +219,7 @@ class LayoutSpec extends SparkSpec {
     // the maintenance loop a 100 TB table actually runs: cluster once,
     // compact the small files the next increments produce, refresh the
     // skipping stats — each primitive must compose with the others
-    val dir = java.nio.file.Files.createTempDirectory("layout-cycle").toString
+    val dir = tempDir("layout-cycle")
     Layout.writeZOrdered(src, "l_partkey", "l_suppkey", dir, numFiles = 48)
     val receipt = Layout.compactSmallFiles(spark, dir,
       targetBytes = new java.io.File(dir).listFiles()
@@ -239,7 +239,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("compactSmallFiles refuses a streaming file-sink output") {
-    val dir = java.nio.file.Files.createTempDirectory("layout-csink").toString
+    val dir = tempDir("layout-csink")
     src.repartition(2).write.mode("overwrite").parquet(dir)
     // simulate a sink dir: the metadata log names the original files,
     // so renames would corrupt every metadata-log reader
@@ -250,7 +250,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("compactSmallFiles moves (never rewrites) files already at target") {
-    val dir = java.nio.file.Files.createTempDirectory("layout-cmove").toString
+    val dir = tempDir("layout-cmove")
     src.repartition(4).write.mode("overwrite").parquet(dir)
     val before = new java.io.File(dir).listFiles()
       .filter(_.getName.startsWith("part-")).map(f => f.length).sorted.toSeq
@@ -267,7 +267,7 @@ class LayoutSpec extends SparkSpec {
     // silently excluded from results — the one API that could return
     // wrong data through correct use. The reconciliation must catch both
     // drift directions, and a rebuild must clear it.
-    val dir = java.nio.file.Files.createTempDirectory("layout-stale").toString
+    val dir = tempDir("layout-stale")
     Layout.writeZOrdered(src, "l_partkey", "l_suppkey", dir, numFiles = 8)
     val manifest = Layout.buildManifest(spark, dir, Seq("l_partkey", "l_suppkey"))
       .cache()
@@ -306,7 +306,7 @@ class LayoutSpec extends SparkSpec {
     // INTO the temp dir before the swap, so a later bin's failure deleted
     // their only copy with the temp cleanup. Now phase 1 writes only NEW
     // files; any failure must leave the source dir bit-identical.
-    val dir = java.nio.file.Files.createTempDirectory("layout-cfail").toString
+    val dir = tempDir("layout-cfail")
     src.repartition(4).write.mode("overwrite").parquet(dir)
     // a garbage member makes its bin's rewrite throw mid-run
     java.nio.file.Files.write(
@@ -325,7 +325,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("compacted names carry a monotone generation; re-runs increment it") {
-    val dir = java.nio.file.Files.createTempDirectory("layout-cgen").toString
+    val dir = tempDir("layout-cgen")
     src.repartition(8).write.mode("overwrite").parquet(dir)
     val total = new java.io.File(dir).listFiles()
       .filter(_.getName.startsWith("part-")).map(_.length).sum
@@ -344,8 +344,8 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("filtered scan against the z-layout reads >=2x fewer rows (skipping receipt)") {
-    val plainDir = java.nio.file.Files.createTempDirectory("layout-scanplain").toString
-    val zDir = java.nio.file.Files.createTempDirectory("layout-scanz").toString
+    val plainDir = tempDir("layout-scanplain")
+    val zDir = tempDir("layout-scanz")
     src.repartition(8).write.mode("overwrite").parquet(plainDir)
     Layout.writeZOrdered(src, "l_partkey", "l_suppkey", zDir, numFiles = 16)
 
@@ -370,7 +370,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("updateManifest: incremental append + compaction reconcile equals a full rebuild") {
-    val dir = java.nio.file.Files.createTempDirectory("layout-upd").toString
+    val dir = tempDir("layout-upd")
     Layout.writeZOrdered(src, "l_partkey", "l_suppkey", dir, numFiles = 8)
     val keys = Seq("l_partkey", "l_suppkey")
     // materialize manifests driver-side: a live manifest DataFrame pins
@@ -387,7 +387,7 @@ class LayoutSpec extends SparkSpec {
 
     // APPEND: two fresh part files land after the build (the staleness
     // guard's scenario — updateManifest is its remedy)
-    val extra = java.nio.file.Files.createTempDirectory("layout-upd-extra").toString
+    val extra = tempDir("layout-upd-extra")
     src.limit(500).repartition(2).write.mode("overwrite").parquet(extra)
     val newNames = new java.io.File(extra).listFiles()
       .filter(_.getName.endsWith(".parquet")).zipWithIndex.map { case (f, i) =>
@@ -414,7 +414,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("compactSmallFilesWithManifest derives post-compaction stats without a scan") {
-    val dir = java.nio.file.Files.createTempDirectory("layout-derive").toString
+    val dir = tempDir("layout-derive")
     val keys = Seq("l_partkey", "l_suppkey")
     Layout.writeZOrdered(src, "l_partkey", "l_suppkey", dir, numFiles = 8)
     // plus an unclustered append AND an empty file (sentinel row): the
@@ -450,7 +450,7 @@ class LayoutSpec extends SparkSpec {
     // dropped by the box filter); a double key TRUNCATES (boxes wrong at
     // fractional probe bounds). The guard must fire at BUILD time,
     // naming the column.
-    val dir = java.nio.file.Files.createTempDirectory("layout-typeguard").toString
+    val dir = tempDir("layout-typeguard")
     src.limit(100).write.mode("overwrite").parquet(dir)
     val e = intercept[IllegalArgumentException](
       Layout.buildManifest(spark, dir, Seq("l_partkey", "l_quantity")).collect())
@@ -470,12 +470,12 @@ class LayoutSpec extends SparkSpec {
     // sets; a naive retry re-binned replacement + survivors together and
     // permanently merged the duplicates. The persisted swap plan must
     // let the retry complete the ORIGINAL swap instead.
-    val dir = java.nio.file.Files.createTempDirectory("layout-recover").toString
+    val dir = tempDir("layout-recover")
     val s2 = spark
     import s2.implicits._
     def slice(lo: Long, hi: Long) = (lo until hi).map(i => (i, i * 7)).toDF("id", "v")
     def writePart(name: String, lo: Long, hi: Long): Unit = {
-      val stage = java.nio.file.Files.createTempDirectory("layout-recover-st").toString
+      val stage = tempDir("layout-recover-st")
       slice(lo, hi).coalesce(1).write.mode("overwrite").parquet(stage)
       val f = new java.io.File(stage).listFiles().filter(_.getName.endsWith(".parquet")).head
       assert(f.renameTo(new java.io.File(dir, name)))
@@ -487,12 +487,12 @@ class LayoutSpec extends SparkSpec {
     writePart("part-00003-d.parquet", 300, 400)
     // crash state: bin 0's replacement landed but members SURVIVE
     // (the doubled window); bin 1's replacement still sits in tmp
-    val stage0 = java.nio.file.Files.createTempDirectory("layout-recover-b0").toString
+    val stage0 = tempDir("layout-recover-b0")
     slice(0, 200).coalesce(1).write.mode("overwrite").parquet(stage0)
     assert(new java.io.File(stage0).listFiles().filter(_.getName.endsWith(".parquet")).head
       .renameTo(new java.io.File(dir, "part-00000-c0001.parquet")))
     val tmp = new java.io.File(dir, "_graft_compact_tmp"); tmp.mkdirs()
-    val stage1 = java.nio.file.Files.createTempDirectory("layout-recover-b1").toString
+    val stage1 = tempDir("layout-recover-b1")
     slice(200, 400).coalesce(1).write.mode("overwrite").parquet(stage1)
     assert(new java.io.File(stage1).listFiles().filter(_.getName.endsWith(".parquet")).head
       .renameTo(new java.io.File(tmp, "part-00001-c0001.parquet")))
@@ -521,11 +521,11 @@ class LayoutSpec extends SparkSpec {
   test("recovery completes a swap whose crash frontier includes pending moves") {
     // plan with a single-file bin whose move never executed: recovery
     // must perform the move itself so the whole swap lands
-    val dir = java.nio.file.Files.createTempDirectory("layout-recover2").toString
+    val dir = tempDir("layout-recover2")
     val s2 = spark
     import s2.implicits._
     def writePart(name: String, lo: Long, hi: Long): Unit = {
-      val stage = java.nio.file.Files.createTempDirectory("layout-recover2-st").toString
+      val stage = tempDir("layout-recover2-st")
       (lo until hi).map(i => (i, i * 7)).toDF("id", "v")
         .coalesce(1).write.mode("overwrite").parquet(stage)
       assert(new java.io.File(stage).listFiles().filter(_.getName.endsWith(".parquet")).head
@@ -552,7 +552,7 @@ class LayoutSpec extends SparkSpec {
     // merges unrelated boxes and file-level pruning decays to nothing.
     // The recluster rewrite must bring the files-kept ratio back down and
     // leave a ready-to-publish manifest.
-    val dir = java.nio.file.Files.createTempDirectory("layout-recluster").toString
+    val dir = tempDir("layout-recluster")
     val keys = Seq("l_partkey", "l_suppkey")
     // six arrival-ordered "batches", each spanning the full key range
     (0 until 6).foreach { b =>
@@ -591,7 +591,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("recluster refuses an in-flight streaming batch and recovers its own crash states") {
-    val dir = java.nio.file.Files.createTempDirectory("layout-rc-guard").toString
+    val dir = tempDir("layout-rc-guard")
     src.limit(200).coalesce(1).write.mode("overwrite").parquet(dir)
     // in-flight micro-batch staging dir -> loud refusal
     new java.io.File(dir, "_staging_b000000007").mkdirs()
@@ -627,7 +627,7 @@ class LayoutSpec extends SparkSpec {
     val s2 = spark
     import s2.implicits._
     val df = (1 to 100).map(i => (i.toLong, Option.empty[Long])).toDF("x", "y")
-    val dir = java.nio.file.Files.createTempDirectory("layout-ednull").toString
+    val dir = tempDir("layout-ednull")
     val e = intercept[IllegalArgumentException](
       Layout.writeZOrderedEquiDepth(df, Seq("x", "y"), dir, numFiles = 4, buckets = 4))
     assert(e.getMessage.contains("'y'") && e.getMessage.contains("non-null"))
@@ -653,8 +653,8 @@ class LayoutSpec extends SparkSpec {
       (xBase(c) + rnd.nextInt(5000), yBase(c) + rnd.nextInt(5000), rnd.nextInt(100).toLong)
     }
     val df = rows.toDF("x", "y", "v")
-    val ewDir = java.nio.file.Files.createTempDirectory("layout-ew").toString
-    val edDir = java.nio.file.Files.createTempDirectory("layout-ed").toString
+    val ewDir = tempDir("layout-ew")
+    val edDir = tempDir("layout-ed")
     Layout.writeZOrdered(df, "x", "y", ewDir, numFiles = 256)
     Layout.writeZOrderedEquiDepth(df, Seq("x", "y"), edDir, numFiles = 256)
     def nFiles(d: String) = new java.io.File(d).listFiles()

@@ -32,7 +32,7 @@ class CepExtensionsSpec extends SparkSpec {
       val q = StatefulProcessors.cepSequence(in.toDS(), gapUs = 10000000L)
         .toDF().writeStream.outputMode("append")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("cepus-ck").toString)
+          tempDir("cepus-ck"))
         .format("memory").queryName("cepus").start()
       try {
         // signup and click land in the SAME millisecond; the signup is
@@ -65,7 +65,7 @@ class CepExtensionsSpec extends SparkSpec {
       val q = StatefulProcessors.cepNegation(in.toDS(), gapUs = gapUs)
         .toDF().writeStream.outputMode("append")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("cepneg-ck").toString)
+          tempDir("cepneg-ck"))
         .format("memory").queryName("cepneg").start()
       try {
         in.addData(
@@ -111,7 +111,7 @@ class CepExtensionsSpec extends SparkSpec {
       val q = StatefulProcessors.cepTimes(in.toDS(), gapUs = gapUs)
         .toDF().writeStream.outputMode("append")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ceptimes-ck").toString)
+          tempDir("ceptimes-ck"))
         .format("memory").queryName("ceptimes").start()
       try {
         in.addData(
@@ -148,7 +148,7 @@ class CepExtensionsSpec extends SparkSpec {
       val q = StatefulProcessors.cepTimesRange(in.toDS(), gapUs = gapUs)
         .toDF().writeStream.outputMode("append")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ceprange-ck").toString)
+          tempDir("ceprange-ck"))
         .format("memory").queryName("ceprange").start()
       try {
         in.addData(
@@ -191,7 +191,7 @@ class CepExtensionsSpec extends SparkSpec {
       val q = StatefulProcessors.cepOneOrMore(in.toDS(), gapUs = gapUs)
         .toDF().writeStream.outputMode("append")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("cepoom-ck").toString)
+          tempDir("cepoom-ck"))
         .format("memory").queryName("cepoom").start()
       try {
         in.addData(
@@ -213,9 +213,9 @@ class CepExtensionsSpec extends SparkSpec {
     withRocksDb {
       val s = spark
       import s.implicits._
-      val in = java.nio.file.Files.createTempDirectory("ceprange-rec-in")
-      val out = java.nio.file.Files.createTempDirectory("ceprange-rec-out").toString
-      val ck = java.nio.file.Files.createTempDirectory("ceprange-rec-ck").toString
+      val in = java.nio.file.Paths.get(tempDir("ceprange-rec-in"))
+      val out = tempDir("ceprange-rec-out")
+      val ck = tempDir("ceprange-rec-ck")
       def write(name: String, evs: Seq[Ev]): Unit =
         java.nio.file.Files.writeString(in.resolve(name),
           evs.map(Generators.toCsvLine).mkString("", "\n", "\n"))
@@ -271,13 +271,13 @@ class CepExtensionsSpec extends SparkSpec {
       val qR = StatefulProcessors.cepTimesRange(inR.toDS(), gapUs = gapUs)
         .toDF().writeStream.outputMode("append")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ceprange-eq-ck").toString)
+          tempDir("ceprange-eq-ck"))
         .format("memory").queryName("ceprange_eq").start()
       val inO = MemoryStream[Ev]
       val qO = StatefulProcessors.cepOneOrMore(inO.toDS(), gapUs = gapUs)
         .toDF().writeStream.outputMode("append")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("cepoom-eq-ck").toString)
+          tempDir("cepoom-eq-ck"))
         .format("memory").queryName("cepoom_eq").start()
       try {
         // batch twins, evaluated over the SAME augmented event set by
@@ -330,13 +330,13 @@ class CepExtensionsSpec extends SparkSpec {
       val qNeg = StatefulProcessors.cepNegation(inNeg.toDS())
         .toDF().writeStream.outputMode("append")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("cepneg-eq-ck").toString)
+          tempDir("cepneg-eq-ck"))
         .format("memory").queryName("cepneg_eq").start()
       val inTimes = MemoryStream[Ev]
       val qTimes = StatefulProcessors.cepTimes(inTimes.toDS())
         .toDF().writeStream.outputMode("append")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ceptimes-eq-ck").toString)
+          tempDir("ceptimes-eq-ck"))
         .format("memory").queryName("ceptimes_eq").start()
       try {
         inNeg.addData(fixture)
@@ -377,7 +377,7 @@ class CepExtensionsSpec extends SparkSpec {
       val q = StatefulProcessors.cepSkipPast(in.toDS(), gapUs = gapUs)
         .toDF().writeStream.outputMode("append")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("cepskip-ck").toString)
+          tempDir("cepskip-ck"))
         .format("memory").queryName("cepskip").start()
       try {
         in.addData(
@@ -418,9 +418,9 @@ class CepExtensionsSpec extends SparkSpec {
     withRocksDb {
       val s = spark
       import s.implicits._
-      val in = java.nio.file.Files.createTempDirectory("cepskip-rec-in")
-      val out = java.nio.file.Files.createTempDirectory("cepskip-rec-out").toString
-      val ck = java.nio.file.Files.createTempDirectory("cepskip-rec-ck").toString
+      val in = java.nio.file.Paths.get(tempDir("cepskip-rec-in"))
+      val out = tempDir("cepskip-rec-out")
+      val ck = tempDir("cepskip-rec-ck")
       def write(name: String, evs: Seq[Ev]): Unit =
         java.nio.file.Files.writeString(in.resolve(name),
           evs.map(Generators.toCsvLine).mkString("", "\n", "\n"))
@@ -471,7 +471,7 @@ class CepExtensionsSpec extends SparkSpec {
       val q = StatefulProcessors.cepSkipPast(in.toDS(), gapUs = gapUs)
         .toDF().writeStream.outputMode("append")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("cepskip-eq-ck").toString)
+          tempDir("cepskip-eq-ck"))
         .format("memory").queryName("cepskip_eq").start()
       try {
         s.createDataset(fixture ++ flush).toDF()
@@ -504,7 +504,7 @@ class CepExtensionsSpec extends SparkSpec {
       val q = StatefulProcessors.cepSkipToLast(in.toDS(), gapUs = gapUs)
         .toDF().writeStream.outputMode("append")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("cepskiplast-ck").toString)
+          tempDir("cepskiplast-ck"))
         .format("memory").queryName("cepskiplast").start()
       try {
         in.addData(
@@ -562,7 +562,7 @@ class CepExtensionsSpec extends SparkSpec {
       val q = StatefulProcessors.cepSkipToLast(in.toDS(), gapUs = gapUs)
         .toDF().writeStream.outputMode("append")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("cepskiplast-eq-ck").toString)
+          tempDir("cepskiplast-eq-ck"))
         .format("memory").queryName("cepskiplast_eq").start()
       try {
         s.createDataset(fixture ++ flush).toDF()
@@ -602,7 +602,7 @@ class CepExtensionsSpec extends SparkSpec {
       val q = StatefulProcessors.cepSkipToNext(in.toDS(), gapUs = gapUs)
         .toDF().writeStream.outputMode("append")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("cepnext-ck").toString)
+          tempDir("cepnext-ck"))
         .format("memory").queryName("cepnext").start()
       try {
         in.addData(
@@ -653,7 +653,7 @@ class CepExtensionsSpec extends SparkSpec {
       val q = StatefulProcessors.cepSkipToNext(in.toDS())
         .toDF().writeStream.outputMode("append")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("cepnext-eq-ck").toString)
+          tempDir("cepnext-eq-ck"))
         .format("memory").queryName("cepnext_eq").start()
       try {
         in.addData(fixture)

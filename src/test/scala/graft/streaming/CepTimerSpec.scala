@@ -29,7 +29,7 @@ class CepTimerSpec extends SparkSpec {
         .cepOneOrMore(in.toDS(), gapUs = gapUs, delay = "1 second")
         .toDF().writeStream.outputMode("append")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("cept-ck").toString)
+          tempDir("cept-ck"))
         .format("memory").queryName("cep_timer").start()
       try {
         // user 1: a 2-event run, then SILENCE — no later user-1 click
@@ -69,7 +69,7 @@ class CepTimerSpec extends SparkSpec {
           delay = "1 second")
         .toDF().writeStream.outputMode("append")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("cepskipt-ck").toString)
+          tempDir("cepskipt-ck"))
         .format("memory").queryName("cepskip_timer").start()
       try {
         in.addData(fixture)
@@ -109,7 +109,7 @@ class CepTimerSpec extends SparkSpec {
           minTimes = 2, maxTimes = 4, delay = "1 second")
         .toDF().writeStream.outputMode("append")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("ceprt-ck").toString)
+          tempDir("ceprt-ck"))
         .format("memory").queryName("ceprange_timer").start()
       try {
         in.addData(fixture)
@@ -146,7 +146,7 @@ class CepTimerSpec extends SparkSpec {
         .cepOneOrMore(in.toDS(), delay = "1 second")
         .toDF().writeStream.outputMode("append")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("cept-eq-ck").toString)
+          tempDir("cept-eq-ck"))
         .format("memory").queryName("cep_timer_eq").start()
       try {
         in.addData(fixture)
@@ -186,7 +186,7 @@ class CepTimerSpec extends SparkSpec {
       val q = cep(in.toDS())
         .toDF().writeStream.outputMode("append")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory(s"cep-late-$name-ck").toString)
+          tempDir(s"cep-late-$name-ck"))
         .format("memory").queryName(s"cep_late_$name").start()
       def rows() = s.table(s"cep_late_$name")
         .selectExpr("user_id", "first_id", "n_times", "last_us")

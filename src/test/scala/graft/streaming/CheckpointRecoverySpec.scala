@@ -12,9 +12,9 @@ class CheckpointRecoverySpec extends SparkSpec {
 
   test("file-sink window query recovers across a stop/start on one checkpoint") {
     val d = Jobs.Dirs(
-      Files.createTempDirectory("ckpt-in").toString,
-      Files.createTempDirectory("ckpt-out").toString,
-      Files.createTempDirectory("ckpt-ck").toString)
+      tempDir("ckpt-in"),
+      tempDir("ckpt-out"),
+      tempDir("ckpt-ck"))
 
     // Phase 1: events at 0..19 s then a watermark push to 100 s.
     Generators.writeCsvFiles(d.in, seed = 3, files = 1, perFile = 20)
@@ -42,10 +42,10 @@ class CheckpointRecoverySpec extends SparkSpec {
   }
 
   test("manifested parquet sink recovers across a restart: no dupes, manifest fresh") {
-    val in = Files.createTempDirectory("ckpt-msink-in").toString
-    val data = Files.createTempDirectory("ckpt-msink-data").toString
-    val man = Files.createTempDirectory("ckpt-msink-man").toString + "/m"
-    val ck = Files.createTempDirectory("ckpt-msink-ck").toString
+    val in = tempDir("ckpt-msink-in")
+    val data = tempDir("ckpt-msink-data")
+    val man = tempDir("ckpt-msink-man") + "/m"
+    val ck = tempDir("ckpt-msink-ck")
     val sink = new ManifestedParquetSink(data, man, Seq("event_id", "user_id"))
     def run(): Unit = {
       val (good, _) = StreamingPipelines.parseCsvQuarantine(
@@ -107,9 +107,9 @@ class CheckpointRecoverySpec extends SparkSpec {
         try q.processAllAvailable() finally q.stop()
       }
       def dirs(tag: String) = (
-        Files.createTempDirectory(s"x10rec-in-$tag").toString,
-        Files.createTempDirectory(s"x10rec-out-$tag").toString,
-        Files.createTempDirectory(s"x10rec-ck-$tag").toString)
+        tempDir(s"x10rec-in-$tag"),
+        tempDir(s"x10rec-out-$tag"),
+        tempDir(s"x10rec-ck-$tag"))
 
       // restarted run: phase 1, stop, phase 2 on the same checkpoint
       val (inR, outR, ckR) = dirs("r")
@@ -191,9 +191,9 @@ class CheckpointRecoverySpec extends SparkSpec {
         try q.processAllAvailable() finally q.stop()
       }
       def dirs(sub: String) = (
-        Files.createTempDirectory(s"ceptrec-$tag-in-$sub").toString,
-        Files.createTempDirectory(s"ceptrec-$tag-out-$sub").toString,
-        Files.createTempDirectory(s"ceptrec-$tag-ck-$sub").toString)
+        tempDir(s"ceptrec-$tag-in-$sub"),
+        tempDir(s"ceptrec-$tag-out-$sub"),
+        tempDir(s"ceptrec-$tag-ck-$sub"))
 
       // restarted run: phase 1, stop with timers armed, phase 2 on the
       // same checkpoint
@@ -285,9 +285,9 @@ class CheckpointRecoverySpec extends SparkSpec {
       val (p1, p2base) = evs.splitAt(200)
       val p2 = p2base :+ line(9000L, 30L * 86400000000L, 1L, "click") // flush
 
-      val in = Files.createTempDirectory("w2erec-in").toString
-      val out = Files.createTempDirectory("w2erec-out").toString
-      val ck = Files.createTempDirectory("w2erec-ck").toString
+      val in = tempDir("w2erec-in")
+      val out = tempDir("w2erec-out")
+      val ck = tempDir("w2erec-ck")
       def drain(): Unit = {
         val q = Sinks.file(StreamingPipelines.slidingTopkCmsPaneStream(
           StreamingPipelines.textFileSource(spark, in)), out, ck)

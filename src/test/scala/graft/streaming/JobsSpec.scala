@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 
 /** End-to-end job wiring: generator -> monitored dir -> parse -> transform
@@ -10,7 +8,7 @@ import graft.SparkSpec
   */
 class JobsSpec extends SparkSpec {
 
-  private def tmp(tag: String) = Files.createTempDirectory(tag).toString
+  private def tmp(tag: String) = tempDir(tag)
 
   test("job 1: generated CSV files flow through window count to the file sink") {
     val d = Jobs.Dirs(tmp("j1-in"), tmp("j1-out"), tmp("j1-ckpt"))
@@ -44,11 +42,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("job 6 staircase variant: per-partition staircase drives close/late/idle to the file sink") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val d = Jobs.Dirs(tmp("j6s-in"), tmp("j6s-out"), tmp("j6s-ckpt"))
       Generators.writeCsvFiles(d.in, seed = 13, files = 4, perFile = 25)
       // Epoch-adjacent fixture timestamps vs a wall-clock staircase: every
@@ -87,9 +81,6 @@ class JobsSpec extends SparkSpec {
         assert(accounted() === 100L) // every event closed or late, none lost
         assert(out.where("kind = 'closed' AND partition_id != -1").count() === 0L)
       } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 

@@ -34,50 +34,6 @@ class TtlSpec extends SparkSpec {
     }
   }
 
-  test("TTL evicts a silent detector key; the paired no-TTL run under the same wall pattern alerts") {
-    withRocksDb {
-      val s = spark
-      import s.implicits._
-      implicit val sqlCtx = s.sqlContext
-
-      // Same event sequence + same sleep, once per wiring: only the TTL
-      // run may forget event 1, so the wall-clock pause is controlled for.
-      def run(name: String, ttl: Option[Duration]): Set[Long] = {
-        val in = MemoryStream[Ev]
-        val q = StatefulProcessors
-          .doubleEventAlerts(in.toDS(), watch = "error",
-            thresholdUs = 10000000L, ttl = ttl)
-          .writeStream.outputMode("append")
-          .trigger(Trigger.ProcessingTime("100 milliseconds"))
-          .format("memory").queryName(name).start()
-        try {
-          def ids(): Set[Long] =
-            s.table(name).select("event_id").as[Long].collect().toSet
-          in.addData(ev(1, 1000L, 7L, "error"))
-          if (ttl.isEmpty) q.processAllAvailable()
-          else eventually(s"$name batch 1 processed") {
-            q.lastProgress != null && q.lastProgress.sink.numOutputRows >= 0 &&
-              q.recentProgress.exists(_.numInputRows > 0)
-          }
-          Thread.sleep(1500L) // >> the 400ms TTL below; harmless for None
-          // events 2+3: both within the 10s threshold of event 1 AND of
-          // each other; 3 always alerts (pairs with 2 in-batch), 2 alerts
-          // iff the slot from event 1 survived the pause
-          in.addData(ev(2, 3000L, 7L, "error"), ev(3, 3500L, 7L, "error"))
-          eventually(s"$name event 3 alert") { ids().contains(3L) }
-          ids()
-        } finally q.stop()
-      }
-
-      val withTtl = run("ttl_alerts", Some(Duration.ofMillis(400)))
-      assert(withTtl == Set(3L),
-        s"evicted slot must not alert for event 2, got $withTtl")
-      val noTtl = run("nottl_alerts", None)
-      assert(noTtl == Set(2L, 3L),
-        s"no-TTL control must alert for both, got $noTtl")
-    }
-  }
-
   test("a TTL wider than the horizon leaves CEP semantics intact; a narrow one evicts pending anchors") {
     withRocksDb {
       val s = spark

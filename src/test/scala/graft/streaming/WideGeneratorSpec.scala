@@ -4,11 +4,11 @@ import java.nio.file.Files
 
 import graft.SparkSpec
 
-/** Contract of [[Generators.writeCsvFilesWide]], the state-soak feed:
+/** Contract of [[Generators.writeCsvFilesWide]], the state-bound feed:
   * every emitted line must parse cleanly through the production
   * quarantine split, ids/timestamps must grow monotonically ACROSS
   * extension calls (a regression in either silently breaks watermark
-  * advancement in [[graft.StateSoak]]'s restart phases), and the user
+  * advancement in [[BoundedStateSpec]]'s restart phases), and the user
   * domain must cover what was asked for. */
 class WideGeneratorSpec extends SparkSpec {
 
