@@ -20,6 +20,21 @@ import org.apache.spark.sql.SparkSession
   *    every `PushedFilters` in PLANS.md depends on these.
   *  - session timezone UTC: all fixtures and oracles are UTC; windowed
   *    results must not depend on cluster locale.
+  *  - `file:` resolves to [[ForklessLocalFileSystem]] (`FileSystem`) and
+  *    [[ForklessLocalFs]] (`FileContext`). Without libhadoop, Hadoop's
+  *    local file system starts a `chmod` process for every file or
+  *    directory it creates with a permission and a `readlink` process
+  *    inside every `FileContext.rename`. Spark's checkpoint file manager
+  *    does both for each offset, commit, sink and source log entry and
+  *    for each state-store delta and checksum file, so a short
+  *    micro-batch spent most of its commit time starting processes. The
+  *    override does the same work in-process; every other scheme, the
+  *    rename itself, Spark's checkpoint checksums and its commit checks
+  *    are unchanged. Rule: Hadoop's `FileSystem` cache ignores the impl
+  *    key, so a `file:` FileSystem that something in the JVM cached
+  *    before the first session was built stays the stock class for the
+  *    life of the JVM. Build the session before touching `file:` paths
+  *    through Hadoop, or pass the session's Hadoop conf when you do.
   *
   * `local(n)` variants exist for tests/benchmarks; `graftExtensions`
   * wires the `graft_*` SQL functions + optimizer rules
@@ -51,6 +66,8 @@ object Sessions {
       .config("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "100MB")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.shuffle.partitions", shufflePartitions)
+      .config("spark.hadoop.fs.file.impl", classOf[ForklessLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[ForklessLocalFs].getName)
 
   /** Cluster entry point: caller supplies master via spark-submit. */
   def builder(appName: String, shufflePartitions: Int = 2000): SparkSession.Builder =

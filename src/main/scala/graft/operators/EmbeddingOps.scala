@@ -499,7 +499,7 @@ FROM (SELECT qid, vec_id, ad,
     * rank-1 calibration + 2 extra pinned-frame scans per added stage;
     * every model object is a bounded 64-row collect. */
   private[graft] def opq3Rotated(s: SparkSession, dir: String): Option[DataFrame] =
-    cachedCalib(s, dir)(_.opq3)((e, v) => e.opq3 = Some(v))(
+    calibMemo(s, dir, "opq3")(
       opq3RotatedUncached(s, dir))
 
   private def opq3RotatedUncached(s: SparkSession,
@@ -1464,7 +1464,7 @@ FROM (SELECT qid, vec_id, ad,
     * ≤(10·nprobe)-row probe frame. */
   private[graft] def opqResidualTrainParts(s: SparkSession,
       dir: String): Option[(OpqModel, IvfPqParts)] =
-    cachedCalib(s, dir)(_.residual)((e, v) => e.residual = Some(v))(
+    calibMemo(s, dir, "residual")(
       opqResidualTrainUncached(s, dir))
 
   private def opqResidualTrainUncached(s: SparkSession,
@@ -2125,23 +2125,15 @@ WHERE rnk <= 3"""),
   // trajectory, but within one session the Spark side was recomputing
   // ~10.5 s of identical calibration per bench sample (the r18 verdict's
   // three biggest compute-lane lines). The calibration products are
-  // therefore memoized per (session, dir) and keyed by a CORPUS CONTENT
-  // FINGERPRINT (count + order-independent hash-sum, the IvfPqIndex
-  // discipline): a regenerated fixture at the same path misses and
-  // retrains, so no oracle can ever see a stale trajectory — the cache
-  // changes WHEN the work happens, never what any query returns. The
-  // cached frames are Checkpoints-pinned (executor-memory blocks, tiny
-  // next to the corpus: vec_id + 64 doubles/row), exactly the pins the
-  // uncached path already held; driver-side entries are one per
-  // (session, dir) with slots replaced wholesale on fingerprint change.
-  private final class CalibEntry(val fp: String) {
-    var abtt: Option[Option[(AbttModel, DataFrame)]] = None
-    var opq3: Option[Option[DataFrame]] = None
-    var residual: Option[Option[(OpqModel, IvfPqParts)]] = None
-  }
-  private val calibCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), CalibEntry]
-
+  // therefore memoized in CorpusCache per (session, dir, slot) and keyed
+  // by a CORPUS CONTENT FINGERPRINT (count + order-independent hash-sum,
+  // the IvfPqIndex discipline): a regenerated fixture at the same path
+  // misses and retrains, so no oracle can ever see a stale trajectory —
+  // the cache changes WHEN the work happens, never what any query
+  // returns. The cached frames are Checkpoints-pinned (executor-memory
+  // blocks, tiny next to the corpus: vec_id + 64 doubles/row), exactly
+  // the pins the uncached path already held. CorpusCache keys sessions
+  // weakly, as this cache's own session-keyed map did not.
   /** ONE narrow aggregation over (vec_id, embedding): order-independent,
     * multiplicity-sensitive (DECIMAL(38,0) hash-sum — the IvfPqIndex
     * rationale verbatim: bit_xor self-cancels even multiplicities and
@@ -2154,30 +2146,11 @@ WHERE rnk <= 3"""),
     s"n=${r.getLong(0)}:h=${r.getDecimal(1)}"
   }
 
-  /** Memoize `compute` in the (session, dir) entry's `get`/`set` slot,
-    * invalidating the whole entry when the corpus fingerprint moved.
-    * The fingerprint scan runs OUTSIDE the lock (it is a Spark job);
-    * a racing duplicate computation is benign — last write wins and
-    * both results are value-identical by construction. */
-  private def cachedCalib[T](s: SparkSession, dir: String)(
-      get: CalibEntry => Option[T])(set: (CalibEntry, T) => Unit)(
-      compute: => T): T = {
-    val key = (s, dir)
-    val fp = corpusFingerprint(s, dir)
-    val hit = calibCache.synchronized {
-      calibCache.get(key).filter(_.fp == fp).flatMap(get)
-    }
-    hit.getOrElse {
-      val v = compute
-      calibCache.synchronized {
-        val e = calibCache.get(key).filter(_.fp == fp).getOrElse {
-          val fresh = new CalibEntry(fp); calibCache(key) = fresh; fresh
-        }
-        set(e, v)
-      }
-      v
-    }
-  }
+  /** Memoize one calibration product in [[graft.CorpusCache]] under
+    * (session, dir, slot), guarded by the corpus fingerprint. */
+  private def calibMemo[T](s: SparkSession, dir: String, slot: String)(
+      compute: => T): T =
+    graft.CorpusCache.memo(s, dir, s"calib.$slot")(corpusFingerprint(s, dir))(compute)
 
   /** ABTT CALIBRATE — the offline half of the calibrate/apply split
     * (dsirScore / perplexityBand convention): per-dimension 6dp-pinned
@@ -2187,7 +2160,7 @@ WHERE rnk <= 3"""),
     * (session, dir, corpus-fingerprint) — see the cache note above. */
   private def abttCalibrateFull(s: SparkSession,
       dir: String): Option[(AbttModel, DataFrame)] =
-    cachedCalib(s, dir)(_.abtt)((e, v) => e.abtt = Some(v))(
+    calibMemo(s, dir, "abtt")(
       abttCalibrateUncached(s, dir))
 
   private def abttCalibrateUncached(s: SparkSession,

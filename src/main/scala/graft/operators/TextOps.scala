@@ -391,7 +391,7 @@ SELECT doc_id, concat_ws('_', ${(0 until 16).map("mh" + _).mkString(", ")}) AS s
     * verifier, split leakage, cross-source overlap) consume this exact
     * frame and each previously re-ran the full minhash + banding +
     * bucket self-join pipeline from the parquet scan (round-19
-    * optimization; the OPQ `calibCache` pattern, verdict-18 task 3).
+    * optimization; the OPQ calibration-cache pattern, verdict-18 task 3).
     * d_curate_corpus keeps its own `lshPairsFrom(survivors)` — a
     * different source frame, deliberately uncached. */
   private def lshPairsDF(s: SparkSession, dir: String): DataFrame =

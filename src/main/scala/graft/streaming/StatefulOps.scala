@@ -5,6 +5,8 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import StatefulProcessors.evUs
+
 /** Typed event record for the stateful streaming operators. */
 final case class Ev(
     event_id: Long, ts: Timestamp, user_id: Long, event_type: String, value: Double)
@@ -23,7 +25,9 @@ final case class ActionDuration(
   * exactly Flink's keyed ValueState model.
   *
   * Per-trigger input order is not guaranteed, so each batch's events are
-  * sorted by (ts, event_id) before the state transition — deterministic
+  * sorted by (ts, event_id) before the state transition, in full
+  * event-time microseconds ([[StatefulProcessors.evUs]]) like the batch
+  * twins' `unix_micros` — deterministic
   * replay for the MemoryStream tests. CROSS-batch disorder cannot be
   * sorted away: an event older than the stored state (late beyond the
   * batch boundary) is excluded from the transition — no negative
@@ -57,8 +61,8 @@ object StatefulOps {
         (_: Long, batch: Iterator[Ev], state: GroupState[Long]) =>
           val out = Seq.newBuilder[Alert]
           var last = state.getOption
-          batch.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-            val tUs = e.ts.getTime * 1000L
+          batch.toSeq.sortBy(e => (evUs(e), e.event_id)).foreach { e =>
+            val tUs = evUs(e)
             last.foreach { prev =>
               // tUs >= prev guard: a cross-batch late event older than the
               // stored state must not fire a negative-gap alert.
@@ -87,8 +91,8 @@ object StatefulOps {
         (_: Long, batch: Iterator[Ev], state: GroupState[(String, Long)]) =>
           val out = Seq.newBuilder[ActionDuration]
           var slot: Option[(String, Long)] = state.getOption
-          batch.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-            val tUs = e.ts.getTime * 1000L
+          batch.toSeq.sortBy(e => (evUs(e), e.event_id)).foreach { e =>
+            val tUs = evUs(e)
             slot match {
               case Some((_, startUs)) if tUs < startUs =>
                 // cross-batch late event older than the open slot: excluding

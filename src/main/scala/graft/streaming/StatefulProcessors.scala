@@ -110,7 +110,8 @@ object StatefulProcessors {
     override def handleInputRows(user: Long, rows: Iterator[Ev],
         tv: TimerValues): Iterator[SessionSummary] = {
       val out = Seq.newBuilder[SessionSummary]
-      rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
+      // sessions are kept in millis; the sort still follows full micros
+      rows.toSeq.sortBy(e => (evUs(e), e.event_id)).foreach { e =>
         val t = e.ts.getTime
         cur() match {
           case Some((start, last, n)) if t >= start - gapMs && t <= last + gapMs =>
@@ -165,9 +166,9 @@ object StatefulProcessors {
     override def handleInputRows(user: Long, rows: Iterator[Ev],
         tv: TimerValues): Iterator[FunnelAdvance] = {
       val out = Seq.newBuilder[FunnelAdvance]
-      rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
+      rows.toSeq.sortBy(e => (evUs(e), e.event_id)).foreach { e =>
         val (done, lastUs) = if (stage.exists()) stage.get() else (0, Long.MinValue)
-        val tUs = e.ts.getTime * 1000L
+        val tUs = evUs(e)
         if (done < steps.length && e.event_type == steps(done) && tUs > lastUs) {
           stage.update((done + 1, tUs))
           out += FunnelAdvance(user, done + 1, steps(done), e.ts)
@@ -246,7 +247,7 @@ object StatefulProcessors {
         tv: TimerValues): Iterator[HeavyHitter] = {
       val touched = scala.collection.mutable.LinkedHashSet.empty[String]
       val evictedAt = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-      rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
+      rows.toSeq.sortBy(e => (evUs(e), e.event_id)).foreach { e =>
         val item = e.event_type
         if (counters.containsKey(item)) {
           val (est, err) = counters.getValue(item)

@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared one-per-JVM test session (local[4], tiny shuffle fan-out),
-  * and a temp root per suite ([[TempRoot]]). */
+/** Shared one-per-JVM test session (local[4], tiny shuffle fan-out) on
+  * the harness mains' confs ([[Sessions.tuned]], without the SQL
+  * extensions), and a temp root per suite ([[TempRoot]]). */
 trait SparkSpec extends AnyFunSuite with TempRoot {
   lazy val spark: SparkSession = SparkSpec.session
 
@@ -24,11 +25,7 @@ trait SparkSpec extends AnyFunSuite with TempRoot {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
+    val s = Sessions.tuned(SparkSession.builder().master("local[4]").appName("graft-tests"), 4)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -5,7 +5,6 @@ import java.util.concurrent.{Callable, Executors, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.HadoopOutputFile
@@ -166,7 +165,10 @@ class TablesSpec extends SparkSpec {
     val micros = Seq(1700000000123456L, 1700000001000001L, 1700003600999999L)
     val writer = ExampleParquetWriter
       .builder(HadoopOutputFile.fromPath(
-        new org.apache.hadoop.fs.Path(s"$dir/events.parquet"), new Configuration()))
+        new org.apache.hadoop.fs.Path(s"$dir/events.parquet"),
+        // the session's conf, not a fresh one: this may be the JVM's first
+        // file: FileSystem, and the cache keeps whichever class it gets
+        spark.sparkContext.hadoopConfiguration))
       .withType(schema).build()
     try {
       val groups = new SimpleGroupFactory(schema)
