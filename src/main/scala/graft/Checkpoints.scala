@@ -65,5 +65,5 @@ object Checkpoints {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.unpersist(blocking = false)
       case _ => ()
-    } catch { case _: Throwable => () }
+    } catch { case scala.util.control.NonFatal(_) => () }
 }

@@ -19,24 +19,22 @@ final case class GQuery(
   * starts a Spark job, and the registry reads these tables ~300 times a
   * pass. A later read of the same file supplies the remembered schema
   * (`spark.read.schema(s).parquet(path)`), which plans with no job. The
-  * entry is keyed on the file's canonical path plus the session confs
-  * that change what inference returns ([[InferenceConfs]]), and guarded
-  * by a stamp taken fresh on every call: size, modification time and
-  * file key of the file, or of every file under a Spark-written
-  * directory. A rewritten fixture therefore misses and is inferred
-  * again; the cache never serves a stale schema. A path the local
-  * filesystem cannot stamp is inferred on every read.
+  * schema lives in [[CorpusCache]], keyed on the file's canonical path
+  * plus the session confs that change what inference returns
+  * ([[InferenceConfs]]) and guarded by the file's stamp, like every
+  * other value built from a fixture. A rewritten fixture therefore
+  * misses and is inferred again; the cache never serves a stale schema.
+  * A path the local filesystem cannot stamp is inferred on every read.
   */
 object Tables {
-  import java.nio.file.{Files, Path, Paths}
-  import java.nio.file.attribute.BasicFileAttributes
-  import java.util.concurrent.TimeUnit
   import org.apache.spark.sql.types._
-  import scala.jdk.CollectionConverters._
 
   val all: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
+
+  /** The file that holds fixture table `name` under `dir`. */
+  def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     // Before any read, so every read in a session shares one cache key.
@@ -44,7 +42,7 @@ object Tables {
     // can carry.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if (name == "events") events(spark, dir) else
-      normalizeNtz(read(spark, s"$dir/$name.parquet"))
+      normalizeNtz(read(spark, path(dir, name)))
   }
 
   /** Session confs that change the schema parquet inference returns;
@@ -57,58 +55,14 @@ object Tables {
     "spark.sql.parquet.mergeSchema",
     "spark.sql.caseSensitive")
 
-  /** (canonical path, inference confs) -> (stamp, schema), per session.
-    * Session keys are weak, like [[CorpusCache]]'s; a changed stamp
-    * replaces the entry, so each session holds one per table and conf
-    * set. Inference runs outside the lock: two racing misses infer the
-    * same schema, and the last write wins. */
-  private val schemas = new scala.collection.mutable.WeakHashMap[SparkSession,
-    scala.collection.mutable.Map[(String, Seq[String]), (String, StructType)]]
-
-  /** `spark.read.parquet(path)`, with the schema from the cache when the
-    * path's stamp and the inference confs match an earlier read. */
-  private def read(spark: SparkSession, path: String): DataFrame =
-    stamp(path) match {
-      case None => spark.read.parquet(path)
-      case Some((canon, st)) =>
-        val key = (canon, InferenceConfs.map(c => spark.conf.getOption(c).getOrElse("")))
-        val hit = schemas.synchronized {
-          schemas.get(spark).flatMap(_.get(key)).collect { case (s, schema) if s == st => schema }
-        }
-        hit match {
-          case Some(schema) => spark.read.schema(schema).parquet(path)
-          case None =>
-            val df = spark.read.parquet(path)
-            val schema = df.schema
-            // A file rewritten while it was inferred keeps no entry.
-            if (stamp(path).contains((canon, st))) schemas.synchronized {
-              schemas.getOrElseUpdate(spark, scala.collection.mutable.Map.empty)
-                .put(key, (st, schema))
-            }
-            df
-        }
-    }
-
-  /** The path's canonical form and its stamp: relative name, size,
-    * modification time and file key of the file, or of every regular
-    * file under it when it is a directory. None when the local
-    * filesystem cannot see the path. */
-  private def stamp(path: String): Option[(String, String)] =
-    try {
-      val canon = Paths.get(path).toRealPath()
-      val leaves: Seq[Path] =
-        if (!Files.isDirectory(canon)) Seq(canon)
-        else {
-          val walk = Files.walk(canon)
-          try walk.iterator.asScala.filter(Files.isRegularFile(_)).toSeq.sorted
-          finally walk.close()
-        }
-      Some(canon.toString -> leaves.map { f =>
-        val a = Files.readAttributes(f, classOf[BasicFileAttributes])
-        s"${canon.relativize(f)}|${a.size}|${a.lastModifiedTime.to(TimeUnit.NANOSECONDS)}|" +
-          Option(a.fileKey).getOrElse("")
-      }.mkString(";"))
-    } catch { case scala.util.control.NonFatal(_) => None }
+  /** `spark.read.parquet(path)`, with the schema inferred once per
+    * stamp of `path` and set of inference confs. */
+  private def read(spark: SparkSession, path: String): DataFrame = {
+    val confs = InferenceConfs.map(c => spark.conf.getOption(c).getOrElse(""))
+    val schema = CorpusCache.stamped(spark, path, ("schema" +: confs).mkString("|"))(
+      spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
 
   /** Driver fixtures are written as parquet timestamp[us] with no UTC
     * adjustment, which Spark 4 infers as TIMESTAMP_NTZ — a type
@@ -149,7 +103,7 @@ object Tables {
     *     through unchanged.
     */
   private def events(spark: SparkSession, dir: String): DataFrame = {
-    val df = read(spark, s"$dir/events.parquet")
+    val df = read(spark, path(dir, "events"))
     df.schema("ts").dataType match {
       case LongType =>
         df.withColumn("ts", timestamp_micros(expr("ts div 1000")))

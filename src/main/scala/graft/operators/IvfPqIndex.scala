@@ -55,9 +55,11 @@ import graft.streaming.{FsIo, ManifestedParquetSink}
   * Staleness: the fingerprint (row count + order-independent xxhash64 of
   * (vec_id, embedding), + a format version bumped on any trajectory
   * change) is checked by [[ensure]]; a changed source corpus or stale
-  * format rebuilds. Builds are serialized per root within the JVM
-  * (queries may run in threads); cross-process concurrent
-  * builds are out of contract, like every single-writer path here.
+  * format rebuilds. Within a session the hash is computed once per stamp
+  * of the embeddings file, so a warm [[ensure]] costs a stat. Builds are
+  * serialized per root within the JVM (queries may run in threads);
+  * cross-process concurrent builds are out of contract, like every
+  * single-writer path here.
   */
 object IvfPqIndex {
 
@@ -253,38 +255,45 @@ object IvfPqIndex {
   /** Source-corpus fingerprint: count + order-independent content hash.
     * ONE narrow aggregation over (vec_id, embedding) — cheap next to
     * a build, and content-sensitive enough that a regenerated fixture
-    * with equal row count still misses. */
+    * with equal row count still misses. It is persisted with each
+    * generation and read across sessions and copied fixtures, so it
+    * stays content-derived; within a session it is computed once per
+    * stamp of the embeddings file ([[graft.CorpusCache.stamped]]). */
   private def fingerprint(s: SparkSession, dir: String,
       flavor: Flavor = Plain): String = {
-    // DECIMAL(38,0) sum of the row hashes: order-independent AND
-    // multiplicity-sensitive. bit_xor would self-cancel any row with
-    // even multiplicity (swap duplicate pair {A,A} for {B,B} and the
-    // xor is unchanged — a silent stale-index reuse); a BIGINT sum of
-    // ~2^63-magnitude hashes throws under ANSI arithmetic. 38 digits
-    // hold ~10^19 rows of headroom above the hash magnitude.
     // The FLAVOR is part of the fingerprint: an ensure of one flavor
     // pointed at the other flavor's root sees a mismatch and rebuilds
     // rather than serving codes from the wrong trajectory.
-    // The METADATA column (when the corpus has one) is hashed too:
-    // [[queryFiltered]]'s answers depend on it, so a corpus whose
-    // vectors kept their bytes but re-labeled must rebuild. The
-    // precedence MATCHES [[withAttr]] (attr preferred over label) —
-    // hashing label while serving attr would fingerprint-match a
-    // corpus whose attr values drifted and serve stale filtered
-    // answers from the reused generation.
-    val t = graft.Tables.t(s, dir, "embeddings")
-    val metaCol =
-      if (t.columns.contains("attr")) Some(col("attr").cast("long"))
-      else if (t.columns.contains("label")) Some(col("label").cast("long"))
-      else None
-    val hashCols = Seq(col("vec_id"), col("embedding")) ++
-      metaCol.map(c => coalesce(c, lit(-1L)))
-    val r = t
-      .agg(count(lit(1)).as("n"),
-        coalesce(sum(xxhash64(hashCols: _*)
-          .cast("decimal(38,0)")), lit(0).cast("decimal(38,0)")).as("h"))
-      .head()
-    s"v$FormatVersion:${flavor.tag}n=${r.getLong(0)}:h=${r.getDecimal(1)}"
+    val content = graft.CorpusCache.stamped(s, graft.Tables.path(dir, "embeddings"),
+        "ivfpq.fingerprint") {
+      // DECIMAL(38,0) sum of the row hashes: order-independent AND
+      // multiplicity-sensitive. bit_xor would self-cancel any row with
+      // even multiplicity (swap duplicate pair {A,A} for {B,B} and the
+      // xor is unchanged — a silent stale-index reuse); a BIGINT sum of
+      // ~2^63-magnitude hashes throws under ANSI arithmetic. 38 digits
+      // hold ~10^19 rows of headroom above the hash magnitude.
+      // The METADATA column (when the corpus has one) is hashed too:
+      // [[queryFiltered]]'s answers depend on it, so a corpus whose
+      // vectors kept their bytes but re-labeled must rebuild. The
+      // precedence MATCHES [[withAttr]] (attr preferred over label) —
+      // hashing label while serving attr would fingerprint-match a
+      // corpus whose attr values drifted and serve stale filtered
+      // answers from the reused generation.
+      val t = graft.Tables.t(s, dir, "embeddings")
+      val metaCol =
+        if (t.columns.contains("attr")) Some(col("attr").cast("long"))
+        else if (t.columns.contains("label")) Some(col("label").cast("long"))
+        else None
+      val hashCols = Seq(col("vec_id"), col("embedding")) ++
+        metaCol.map(c => coalesce(c, lit(-1L)))
+      val r = t
+        .agg(count(lit(1)).as("n"),
+          coalesce(sum(xxhash64(hashCols: _*)
+            .cast("decimal(38,0)")), lit(0).cast("decimal(38,0)")).as("h"))
+        .head()
+      s"n=${r.getLong(0)}:h=${r.getDecimal(1)}"
+    }
+    s"v$FormatVersion:${flavor.tag}$content"
   }
 
   /** Normalize a frame's metadata column to a nullable int `attr`:

@@ -199,12 +199,11 @@ fp AS (SELECT media_id,
     * (media_id_a < media_id_b, hd) at the hamming-<= 7 threshold. */
   private def mediaNeardupPairs(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    // computed ONCE per (session, dir, corpus-fingerprint) and pinned:
+    // computed ONCE per (session, documents file stamp) and pinned:
     // m_media_neardup, m_media_dedup_groups and the streaming keeper
-    // calibration each re-ran the fingerprint scan + banded self-join
+    // calibration each re-ran the perceptual-hash scan + banded self-join
     // (the CorpusCache discipline — graft.CorpusCache scaladoc)
-    graft.CorpusCache.memo(s, dir, "media_pairs")(
-      graft.operators.TextOps.docsTextFp(s, dir))(
+    graft.CorpusCache.stamped(s, Tables.path(dir, "documents"), "media_pairs")(
       graft.Checkpoints.pin(mediaNeardupPairsUncached(s, dir)))
 
   private def mediaNeardupPairsUncached(s: org.apache.spark.sql.SparkSession,

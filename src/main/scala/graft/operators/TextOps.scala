@@ -367,26 +367,8 @@ SELECT doc_id, concat_ws('_', ${(0 until 16).map("mh" + _).mkString(", ")}) AS s
       .agg(min(col("est_sim")).as("est_sim"))
   }
 
-  /** ONE narrow fingerprint aggregation over (doc_id, text, lang,
-    * n_chars) — the [[graft.CorpusCache]] guard for every
-    * documents-derived cached artifact below (order-independent,
-    * multiplicity-sensitive DECIMAL(38,0) hash-sum; the IvfPqIndex /
-    * OPQ-cache discipline verbatim). The hash covers EVERY documents
-    * column any cached artifact consumes, not just (doc_id, text):
-    * a regenerated fixture with identical text but changed lang /
-    * n_chars previously kept serving block keys derived from the old
-    * columns (round-19 advice, medium). Hashing a superset is only
-    * ever conservative — extra invalidation, never staleness. */
-  private[operators] def docsTextFp(s: SparkSession, dir: String): String = {
-    val r = docs(s, dir).agg(count(lit(1)).as("n"),
-      coalesce(sum(xxhash64(col("doc_id"), col("text"), col("lang"),
-          col("n_chars")).cast("decimal(38,0)")),
-        lit(0).cast("decimal(38,0)")).as("h")).head()
-    s"n=${r.getLong(0)}:h=${r.getDecimal(1)}"
-  }
-
   /** The docs-corpus LSH candidate pairs, computed ONCE per (session,
-    * dir, corpus-fingerprint) and Checkpoints-pinned: SIX registered
+    * documents file stamp) and Checkpoints-pinned: SIX registered
     * queries (pair report, dedup groups, cluster profile, edit-distance
     * verifier, split leakage, cross-source overlap) consume this exact
     * frame and each previously re-ran the full minhash + banding +
@@ -395,14 +377,14 @@ SELECT doc_id, concat_ws('_', ${(0 until 16).map("mh" + _).mkString(", ")}) AS s
     * d_curate_corpus keeps its own `lshPairsFrom(survivors)` — a
     * different source frame, deliberately uncached. */
   private def lshPairsDF(s: SparkSession, dir: String): DataFrame =
-    graft.CorpusCache.memo(s, dir, "lsh_pairs")(docsTextFp(s, dir))(
+    graft.CorpusCache.stamped(s, Tables.path(dir, "documents"), "lsh_pairs")(
       graft.Checkpoints.pin(lshPairsFrom(docs(s, dir))))
 
   /** The est >= 0.5 near-dup component labels over [[lshPairsDF]],
     * recomputed PER CALL. The propagation loop ran behind a
     * CorpusCache entry in round 19 — but these labels ARE
     * d_dedup_groups' result, so under min-of-passes its bench line
-    * measured a fingerprint scan + pinned read-back instead of the
+    * measured a cache lookup + pinned read-back instead of the
     * operator (round-19 verdict item 1: a connected-components result
     * is not a calibration product). The genuinely shared INPUT — the
     * LSH candidate pairs — stays cached; the loop itself (a few small
@@ -2617,14 +2599,14 @@ w$k AS (SELECT trim(replace(replace(' ' || replace(seg, ' ', '  ') || ' ',
   }
 
   /** The induced merge table (4 bounded rows + their pinned round
-    * frames), computed ONCE per (session, dir, corpus-fingerprint):
+    * frames), computed ONCE per (session, documents file stamp):
     * t_bpe_merges, t_bpe_tokenize and t_tokenizer_fertility each
     * replayed the identical greedy induction trajectory (word-frequency
     * shuffle + 4 rounds of pair counts / TakeOrdered / pinned rewrite)
     * from scratch. Streaming calibration keeps calling
     * [[bpeMergesFrom]] on its own frames — uncached by design. */
   private def bpeMergesCached(s: SparkSession, dir: String): DataFrame =
-    graft.CorpusCache.memo(s, dir, "bpe_merges")(docsTextFp(s, dir))(
+    graft.CorpusCache.stamped(s, Tables.path(dir, "documents"), "bpe_merges")(
       graft.Checkpoints.pin(bpeMergesFrom(docs(s, dir))))
 
   private val tBpeMerges = GQuery(

@@ -56,4 +56,15 @@ class CorpusCacheSpec extends SparkSpec {
     assert(rdd.getStorageLevel == StorageLevel.NONE,
       "clear() left pinned blocks behind")
   }
+
+  test("invalidation releases a pin nested in an Option and a tuple") {
+    val s = spark
+    val old = CorpusCache.memo(s, "/cc-spec", "nested")("fp-a")(Some((1, smallPin("a"))))
+    val oldRdd = pinnedRdd(old.get._2)
+    assert(oldRdd.getStorageLevel != StorageLevel.NONE,
+      "vacuous — the pinned value's RDD was never persisted")
+    CorpusCache.memo(s, "/cc-spec", "nested")("fp-b")(Some((2, smallPin("b"))))
+    assert(oldRdd.getStorageLevel == StorageLevel.NONE,
+      "the replaced entry's nested pin was not released on invalidation")
+  }
 }
